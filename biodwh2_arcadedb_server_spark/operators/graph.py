@@ -22,9 +22,12 @@ scalar ever reaches the driver.
 Scale notes (100 TB):
 - Frontiers and component tables carry only (id, value) — the shuffle
   per round moves the minimum possible payload.
-- `localCheckpoint(eager=True)` every round truncates lineage so plan
-  size stays O(1) across iterations (otherwise Catalyst re-analyzes an
-  exponentially growing tree).
+- Every loop truncates lineage with `localCheckpoint(eager=True)` so
+  plan size stays O(1) across iterations (otherwise Catalyst
+  re-analyzes an exponentially growing tree). The monotone fixpoints
+  (hash-min CC, k-core, core numbers, SSSP, both SCC sweeps)
+  checkpoint once per batch of 1, 2, 4, 4, ... steps through
+  `_fixpoint`.
 - hash-min CC converges in O(diameter) rounds; for the pathological
   high-diameter case the known fix is large-star/small-star
   (Kiveris et al., "Connected Components in MapReduce and Beyond",
@@ -43,6 +46,9 @@ from pyspark.sql import functions as F
 from biodwh2_arcadedb_server_spark.localrel import local_df
 
 
+_LOOP_ROWS_PER_PARTITION = 500_000
+
+
 @contextmanager
 def _tight_loop(spark, shuffle_rows: int):
     """Iterative-loop execution profile (optimization r14, guide §2).
@@ -53,8 +59,8 @@ def _tight_loop(spark, shuffle_rows: int):
     round's exchanges at the session default (e.g. 200 partitions)
     and letting AQE coalesce them back down pays per-stage planning
     work every round; deriving the partition count ONCE from the data
-    (`shuffle_rows` / `spark.graft.loop.rowsPerPartition`, default
-    500k rows ≈ tens of MB of fixed-width rows per task, capped at
+    (`shuffle_rows` / `_LOOP_ROWS_PER_PARTITION`, 500k rows ≈ tens
+    of MB of fixed-width rows per task, capped at
     the session's configured shuffle parallelism) removes that work
     while producing the same geometry AQE converges to. AQE itself
     STAYS ON (skew/local-read benefits keep applying; a measured
@@ -66,9 +72,9 @@ def _tight_loop(spark, shuffle_rows: int):
     The session's shuffle-partition setting is restored on exit;
     callers leave the scope with an EAGER checkpoint so the heavy
     loop executions all plan under the derived count. Scale posture:
-    rowsPerPartition is a conf knob, the cap follows the cluster's
-    own spark.sql.shuffle.partitions, and the derived count grows
-    linearly with |V|+|E| — nothing is tuned to local[32].
+    the cap follows the cluster's own spark.sql.shuffle.partitions,
+    and the derived count grows linearly with |V|+|E| — nothing is
+    tuned to local[32].
     """
     conf = spark.conf
     old_sp = conf.get("spark.sql.shuffle.partitions", "200")
@@ -76,13 +82,68 @@ def _tight_loop(spark, shuffle_rows: int):
         cap = int(old_sp)
     except ValueError:  # "auto" on some builds
         cap = 200
-    target = int(conf.get("spark.graft.loop.rowsPerPartition", "500000"))
+    target = _LOOP_ROWS_PER_PARTITION
     n = max(1, min(cap, (int(shuffle_rows) + target - 1) // target))
     conf.set("spark.sql.shuffle.partitions", str(n))
     try:
         yield n
     finally:
         conf.set("spark.sql.shuffle.partitions", old_sp)
+
+
+def _fixpoint(state: DataFrame, step, measure, max_steps: int, prev=None) -> DataFrame:
+    """Apply the monotone ``step`` to ``state`` until a fixpoint or
+    ``max_steps`` steps, and return the last state.
+
+    Steps run in BATCHES between eager checkpoints with a geometric
+    cadence (1, 2, 4, 4, ...) (optimization r14/r15, guide §1.2/§2.4).
+    Every caller's step is monotone (min-labels, distances and core
+    estimates only decrease, peeled edge sets only shrink, reach sets
+    only grow) and maps a fixpoint to itself, so extra steps after
+    convergence are no-ops, and an unchanged ``measure`` across a
+    batch proves that no step in the batch changed anything. Checking only at batch
+    boundaries cuts the dominating per-round driver cost (checkpoint
+    job + measure job + Catalyst analysis) by ~3x on deep graphs
+    (sf0.1 cosine closure, diameter 17: 17 checkpoints/6.4s -> 6
+    checkpoints/~4.5s, identical rows). Shallow graphs (diameter <= 2,
+    the common near-dup case) still converge with no wasted pass
+    because the cadence starts at 1. The batch caps at 4:
+    un-checkpointed plan depth beyond that makes Catalyst analysis
+    itself the bottleneck (12-20s at depth 8 vs 4.5s at depth 4 on
+    the q106 closure).
+
+    ``max_steps`` counts steps, not batches: the last batch is cut to
+    land exactly on it, so a truncated result is exactly ``max_steps``
+    synchronous steps. ``measure(state)`` runs on the checkpointed
+    state and must be exact (a long id sum is taken as decimal(38,0),
+    which cannot overflow). ``prev`` is the measure of the input state
+    when the caller already knows it (the first batch can then stop);
+    a measure of 0 marks an empty state, which every step maps to
+    itself, so the loop neither starts from nor runs past one."""
+    done, batch = 0, 1
+    while done < max_steps and prev != 0:
+        k = min(batch, max_steps - done)
+        for _ in range(k):
+            state = step(state)
+        state = state.localCheckpoint(eager=True)
+        m = measure(state)
+        done += k
+        batch = min(batch * 2, 4)
+        if m == prev:
+            break
+        prev = m
+    return state
+
+
+def _count_and_sum(col: str):
+    """Exact stop measure for min-label states: row count and the
+    decimal(38,0) sum of a long label column (labels only decrease
+    over a fixed node set, so an unchanged pair means no label moved)."""
+    def measure(state: DataFrame) -> tuple:
+        total = F.sum(F.col(col).cast("decimal(38,0)"))
+        return tuple(state.agg(F.count(F.lit(1)), total).collect()[0])
+
+    return measure
 
 
 # --- B5: 1-hop expansion ------------------------------------------------------
@@ -148,7 +209,6 @@ def bfs(
     max_depth: int = 10,
     directed: bool = True,
     id_col: str = "node_id",
-    checkpoint_every: int = 1,
 ) -> DataFrame:
     """Breadth-first traversal; returns (node_id, depth) with the
     minimum hop count at which each node is first reached (depth 0 =
@@ -175,9 +235,8 @@ def bfs(
                 .select(F.col("dst").alias("node_id"))
                 .distinct()
                 .join(visited.select("node_id"), "node_id", "left_anti")
+                .localCheckpoint(eager=True)
             )
-            if d % checkpoint_every == 0:
-                nxt = nxt.localCheckpoint(eager=True)
             if nxt.isEmpty():
                 break
             visited = visited.unionByName(nxt.withColumn("depth", F.lit(d))).localCheckpoint(
@@ -450,28 +509,9 @@ def connected_components(
         .withColumn("component", F.col("node_id"))
         .localCheckpoint(eager=True)
     )
-    # Loop shape (optimization r14, guide §1.2/§2.4). Two changes vs
-    # the original one-step-per-round form:
-    #
-    # 1. A propagation STEP is one join + one aggregation (the node's
-    #    own row rides the union into the same min-fold as the
-    #    neighbor messages) — the original paid a third exchange
-    #    joining neighbor minima back onto `comp` plus an extra join
-    #    for the convergence check.
-    # 2. Steps are BATCHED between checkpoints with a geometric
-    #    cadence (1, 2, 4, 4, ...): min-propagation is monotone, so
-    #    extra steps after convergence are no-ops, and checking only
-    #    at batch boundaries cuts the dominating per-round driver
-    #    cost (checkpoint job + convergence job + Catalyst analysis)
-    #    by ~3x on deep graphs. Shallow graphs (diameter <= 2, the
-    #    common near-dup case) still converge with zero wasted
-    #    passes because the cadence starts at 1. The batch is capped
-    #    at 4: un-checkpointed plan depth beyond that makes Catalyst
-    #    analysis itself the bottleneck (measured 12-20s at depth 8
-    #    vs 4.5s at depth 4 on the q106 closure; same cliff as the
-    #    iterative-probe checkpoint_every≈3 rule in SCALE.md).
-    #    Measured on the sf0.1 cosine closure (diameter 17):
-    #    17 checkpoints/6.4s -> 6 checkpoints/~4.5s, identical rows.
+
+    # The node's own row rides the union into the same min-fold as the
+    # neighbor messages, so a step is one join + one aggregation.
     def _step(cur: DataFrame) -> DataFrame:
         msgs = und.join(cur, und.dst == cur.node_id).select(
             F.col("src").alias("node_id"), "component"
@@ -482,35 +522,8 @@ def connected_components(
             .agg(F.min("component").alias("component"))
         )
 
-    done, batch = 0, 1
     with _tight_loop(edges.sparkSession, n_edges):
-        while done < max_iter:
-            k = min(batch, max_iter - done)
-            cur = comp
-            for _ in range(k):
-                cur = _step(cur)
-            upd = (
-                cur.alias("n")
-                .join(comp.alias("o"), "node_id")
-                .select(
-                    "node_id",
-                    F.col("n.component").alias("component"),
-                    (F.col("n.component") < F.col("o.component")).alias("_chg"),
-                )
-                .localCheckpoint(eager=True)
-            )
-            # count(), not isEmpty(): isEmpty's executeTake cancels its
-            # probe job as soon as one partition answers, and the
-            # cancelled tasks race the ContextCleaner's accumulator
-            # cleanup (noisy "non-existent accumulator" scheduler
-            # errors). A count over the checkpointed handful of rows is
-            # the same single tiny job without the cancellation race.
-            n_changed = upd.where("_chg").count()
-            comp = upd.select("node_id", "component")
-            done += k
-            batch = min(batch * 2, 4)
-            if n_changed == 0:
-                break
+        comp = _fixpoint(comp, _step, _count_and_sum("component"), max_iter)
     return comp.select("node_id", F.col("component").alias(id_col_out))
 
 
@@ -812,7 +825,6 @@ def sssp(
     source: int,
     weight_col: str = "weight",
     max_iter: int = 20,
-    checkpoint_every: int = 3,
 ) -> DataFrame:
     """Weighted SSSP by synchronous Bellman-Ford relaxation: each
     round every settled node offers ``dist + w`` to its out-neighbors
@@ -821,39 +833,45 @@ def sssp(
     nodes.
 
     Per round: one join on the edge key + one min-aggregate — the
-    same shuffle pair PageRank pays, with the same lineage-truncation
-    cadence. Unreachable nodes never materialize (no infinity
-    sentinel rows)."""
+    same shuffle pair PageRank pays; rounds run in checkpointed
+    batches through ``_fixpoint``. Unreachable nodes never
+    materialize (no infinity sentinel rows)."""
     e = edges.select("src", "dst", F.col(weight_col).alias("_w")).localCheckpoint(eager=True)
     spark = edges.sparkSession
-    dist = local_df(spark, [(int(source), 0.0)], "node_id long, dist double")
-    # convergence fingerprint: distances only ever decrease and nodes
-    # only ever appear, so (count, sum) unchanged across a checkpoint
-    # interval ⇔ fixpoint. One 2-scalar driver read per k rounds —
-    # never row data.
-    prev_fp = None
+    # `_n` counts the times a node's distance was set (first reach, then
+    # each decrease), so Σ _n is an exact stop measure; a double sum of
+    # the distances could round a small decrease away.
+    dist = local_df(spark, [(int(source), 0.0, 1)], "node_id long, dist double, _n long")
+
+    def _relax(cur: DataFrame) -> DataFrame:
+        offers = cur.join(e, cur.node_id == e.src).select(
+            F.col("dst").alias("node_id"),
+            (F.col("dist") + F.col("_w")).alias("dist"),
+            F.lit(None).cast("long").alias("_n"),
+        )
+        best = (
+            cur.unionByName(offers)
+            .groupBy("node_id")
+            .agg(
+                F.min("dist").alias("dist"),
+                F.min(F.when(F.col("_n").isNotNull(), F.col("dist"))).alias("_old"),
+                F.max("_n").alias("_n"),
+            )
+        )
+        return best.select(
+            "node_id",
+            "dist",
+            F.coalesce(
+                F.col("_n") + (F.col("dist") < F.col("_old")).cast("long"), F.lit(1)
+            ).alias("_n"),
+        )
+
+    def _n_set(cur: DataFrame) -> int:
+        return cur.agg(F.sum("_n")).collect()[0][0]
+
     with _tight_loop(spark, e.count()):
-        for it in range(1, max_iter + 1):
-            offers = (
-                dist.join(e, dist.node_id == e.src)
-                .select(F.col("dst").alias("node_id"), (F.col("dist") + F.col("_w")).alias("dist"))
-            )
-            nxt = (
-                dist.unionByName(offers)
-                .groupBy("node_id")
-                .agg(F.min("dist").alias("dist"))
-            )
-            if it % checkpoint_every == 0 or it == max_iter:
-                nxt = nxt.localCheckpoint(eager=True)
-                row = nxt.agg(
-                    F.count(F.lit(1)).alias("n"), F.sum("dist").alias("s")
-                ).collect()[0]
-                fp = (row.n, row.s)
-                if fp == prev_fp:
-                    return nxt
-                prev_fp = fp
-            dist = nxt
-    return dist
+        dist = _fixpoint(dist, _relax, _n_set, max_iter, prev=1)
+    return dist.select("node_id", "dist")
 
 
 # --- B8: path-returning shortest path ---------------------------------------------------
@@ -952,8 +970,9 @@ def k_core(edges: DataFrame, k: int, max_iter: int = 50) -> DataFrame:
     Scale posture: each round is one degree aggregation + two
     semi-joins on node keys (the same hash partitioning reused);
     rounds needed = peeling depth, typically O(10) on real graphs.
-    The driver reads only a scalar edge count per round to detect the
-    fixpoint — no row data ever reaches the driver."""
+    The driver reads only a scalar edge count per batch of steps
+    (``_fixpoint``) to detect the fixpoint — no row data ever reaches
+    the driver."""
     live = (
         edges.select(F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b"))
         .where(F.col("a") != F.col("b"))
@@ -962,16 +981,6 @@ def k_core(edges: DataFrame, k: int, max_iter: int = 50) -> DataFrame:
     )
     n_edges = live.count()
 
-    # Peel steps BATCHED between checkpoints with the CC loop's
-    # geometric cadence (optimization r15, VERDICT r14 next #7):
-    # peeling is monotone (the live edge set only shrinks) and
-    # idempotent at the fixpoint, so an unchanged edge count across a
-    # batch proves no step in the batch removed anything — the same
-    # argument as min-propagation — and extra steps past convergence
-    # are no-ops. Checking/checkpointing per batch cuts the per-round
-    # driver cost (checkpoint job + count job + Catalyst analysis)
-    # ~2-3x on deep peelings; the batch caps at 4 (the measured
-    # Catalyst plan-depth cliff, see connected_components).
     def _peel(cur: DataFrame) -> DataFrame:
         deg = (
             cur.select(F.col("a").alias("n"))
@@ -984,20 +993,8 @@ def k_core(edges: DataFrame, k: int, max_iter: int = 50) -> DataFrame:
             keep.withColumnRenamed("n", "a"), "a", "left_semi"
         ).join(keep.withColumnRenamed("n", "b"), "b", "left_semi")
 
-    done, batch = 0, 1
     with _tight_loop(edges.sparkSession, n_edges):
-        while done < max_iter and n_edges > 0:
-            steps = min(batch, max_iter - done)
-            cur = live
-            for _ in range(steps):
-                cur = _peel(cur)
-            live = cur.localCheckpoint(eager=True)
-            n_next = live.count()
-            done += steps
-            batch = min(batch * 2, 4)
-            if n_next == n_edges:
-                break
-            n_edges = n_next
+        live = _fixpoint(live, _peel, lambda s: s.count(), max_iter, prev=n_edges)
     return (
         live.select(F.col("a").alias("node_id"))
         .unionAll(live.select(F.col("b").alias("node_id")))
@@ -1027,7 +1024,7 @@ def core_decomposition(edges: DataFrame, max_iter: int = 100) -> DataFrame:
     super-hub nodes the documented scale path replaces it with a
     (node, core-value) count aggregation + cumulative window (no
     array materialization), same fixpoint. Convergence is detected
-    from a scalar changed-node count; lineage truncated per round."""
+    from the scalar core sum once per batch of steps (``_fixpoint``)."""
     und = (
         edges.select(F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b"))
         .where(F.col("a") != F.col("b"))
@@ -1040,13 +1037,6 @@ def core_decomposition(edges: DataFrame, max_iter: int = 100) -> DataFrame:
     deg = adj.groupBy("v").agg(F.count(F.lit(1)).alias("_deg")).localCheckpoint(eager=True)
     core = deg.select("v", F.col("_deg").alias("core"))
 
-    # h-index steps BATCHED between checkpoints (optimization r15,
-    # same cadence/argument as k_core): estimates only DECREASE
-    # (Montresor et al.'s invariant), so "no node changed across the
-    # batch" ⟺ no step in the batch changed anything, and extra steps
-    # past the fixpoint recompute the identical estimates. One
-    # checkpoint + one changed-count join per batch instead of per
-    # round; batch capped at 4 (Catalyst depth cliff).
     def _hstep(cur: DataFrame) -> DataFrame:
         nb = adj.join(cur.withColumnRenamed("v", "u"), "u").groupBy("v").agg(
             F.sort_array(F.collect_list("core"), asc=False).alias("_nc")
@@ -1065,24 +1055,16 @@ def core_decomposition(edges: DataFrame, max_iter: int = 100) -> DataFrame:
             "v", F.least(F.col("_deg"), h).alias("core")
         )
 
-    done, batch = 0, 1
-    with _tight_loop(edges.sparkSession, und.count() * 2):
-        while done < max_iter:
-            steps = min(batch, max_iter - done)
-            cur = core
-            for _ in range(steps):
-                cur = _hstep(cur)
-            nxt = cur.localCheckpoint(eager=True)
-            changed = (
-                nxt.join(core.withColumnRenamed("core", "_prev"), "v")
-                .where(F.col("core") != F.col("_prev"))
-                .count()
-            )
-            core = nxt
-            done += steps
-            batch = min(batch * 2, 4)
-            if changed == 0:
-                break
+    # Stop measure: the core sum. The node set is fixed and estimates
+    # only decrease, so an unchanged sum means no estimate moved. It
+    # starts at Σ degree = 2|E| and every estimate stays >= 1, so it is
+    # 0 only for an empty graph.
+    def _core_sum(cur: DataFrame) -> int:
+        return cur.agg(F.sum("core")).collect()[0][0]
+
+    n_adj = und.count() * 2
+    with _tight_loop(edges.sparkSession, n_adj):
+        core = _fixpoint(core, _hstep, _core_sum, max_iter, prev=n_adj)
     return core.select(F.col("v").alias("node_id"), "core")
 
 
@@ -1115,6 +1097,11 @@ def k_truss(edges: DataFrame, k: int, max_iter: int = 30) -> DataFrame:
         # appear in the support aggregate, so peeling would wrongly
         # drop them — return early instead.
         return live.select("a", "b")
+    # One step per checkpoint, not `_fixpoint`'s batches: `triangles`
+    # runs an eager checkpoint inside every step, so a batch would
+    # re-run its un-checkpointed prefix and enumerate triangles past
+    # convergence (a 4-truss of a 40-node triangle strip: 50 jobs per
+    # round-by-round call, 140 batched).
     with _tight_loop(edges.sparkSession, n_edges):
         for _ in range(max_iter):
             if n_edges == 0:
@@ -1349,8 +1336,8 @@ def strongly_connected_components(
     on random graphs.
 
     Returns (node_id, scc) where scc = min node id of the component.
-    Every step is a key equi-join + min-aggregate; per-round driver
-    traffic is the (count, sum) convergence fingerprint, never rows."""
+    Every step is a key equi-join + min-aggregate; per-batch driver
+    traffic is a scalar stop measure (see ``_fixpoint``), never rows."""
     e_all = (
         edges.select("src", "dst")
         .where(F.col("src") != F.col("dst"))
@@ -1374,66 +1361,41 @@ def strongly_connected_components(
                 .join(live.withColumnRenamed("node_id", "dst"), "dst", "left_semi")
                 .localCheckpoint(eager=True)
             )
-            # (1) forward min-label to fixpoint — steps BATCHED between
-            # checkpoints (optimization r15): this IS min-propagation,
-            # the same monotone fixpoint connected_components batches
-            # geometrically, and the (count, sum) fingerprint is
-            # batch-valid for the same reason (count is constant, sum
-            # only decreases — an unchanged fingerprint across a batch
-            # proves no step changed any color; extra steps past the
-            # fixpoint are no-ops). One checkpoint + one 1-row agg per
-            # batch instead of per step; batch capped at 4.
-            color = live.withColumn("color", F.col("node_id"))
-            prev_fp = None
-            done_i, batch = 0, 1
-            while done_i < max_inner:
-                steps = min(batch, max_inner - done_i)
-                for _ in range(steps):
-                    offers = (
-                        color.join(e, color.node_id == e.src)
-                        .select(F.col("dst").alias("node_id"), "color")
-                    )
-                    color = (
-                        color.unionByName(offers)
-                        .groupBy("node_id")
-                        .agg(F.min("color").alias("color"))
-                    )
-                color = color.localCheckpoint(eager=True)
-                row = color.agg(F.count(F.lit(1)).alias("n"), F.sum("color").alias("s")).collect()[0]
-                done_i += steps
-                batch = min(batch * 2, 4)
-                if (row.n, row.s) == prev_fp:
-                    break
-                prev_fp = (row.n, row.s)
-            # (2) backward sweep from pivots within each color class —
-            # batched the same way (reach only GROWS; an unchanged
-            # count across a batch means no step added a node, and a
-            # converged reach is a fixpoint of the step).
+            # (1) forward min-label to fixpoint: min-propagation along
+            # directed edges, measured like connected_components
+            def _forward(color: DataFrame) -> DataFrame:
+                offers = color.join(e, color.node_id == e.src).select(
+                    F.col("dst").alias("node_id"), "color"
+                )
+                return (
+                    color.unionByName(offers)
+                    .groupBy("node_id")
+                    .agg(F.min("color").alias("color"))
+                )
+
+            color = _fixpoint(
+                live.withColumn("color", F.col("node_id")),
+                _forward,
+                _count_and_sum("color"),
+                max_inner,
+            )
+
+            # (2) backward sweep from pivots within each color class;
+            # reach only grows, so its row count is the measure
+            def _backward(cur: DataFrame) -> DataFrame:
+                step = e.join(cur.withColumnRenamed("node_id", "dst"), "dst").select(
+                    F.col("src").alias("node_id"), "color"
+                )
+                # keep only nodes whose own color matches the pivot color
+                step = step.join(color, ["node_id", "color"], "left_semi")
+                return cur.unionByName(step).dropDuplicates(["node_id"])
+
             reach = (
                 color.where(F.col("color") == F.col("node_id"))
                 .select("node_id", "color")
                 .localCheckpoint(eager=True)
             )
-            prev_n = reach.count()
-            done_i, batch = 0, 1
-            while done_i < max_inner:
-                steps = min(batch, max_inner - done_i)
-                cur = reach
-                for _ in range(steps):
-                    step = (
-                        e.join(cur.withColumnRenamed("node_id", "dst"), "dst")
-                        .select(F.col("src").alias("node_id"), "color")
-                    )
-                    # keep only nodes whose own color matches the pivot color
-                    step = step.join(color, ["node_id", "color"], "left_semi")
-                    cur = cur.unionByName(step).dropDuplicates(["node_id"])
-                reach = cur.localCheckpoint(eager=True)
-                n = reach.count()
-                done_i += steps
-                batch = min(batch * 2, 4)
-                if n == prev_n:
-                    break
-                prev_n = n
+            reach = _fixpoint(reach, _backward, lambda s: s.count(), max_inner, prev=reach.count())
             assigned = assigned.unionByName(
                 reach.select("node_id", F.col("color").alias("scc"))
             ).localCheckpoint(eager=True)

@@ -687,3 +687,49 @@ def test_core_decomposition_matches_peeling_reference(spark, sf_small):
     want = _py_core_numbers(edges)
     got = {r.node_id: r.core for r in core_decomposition(g).collect()}
     assert got == want
+
+
+def test_min_label_stop_measure_cannot_overflow(spark):
+    """Ids >= 2^62: the stop measure sums labels as decimal(38,0), so a
+    3-node cycle (label sum 3·2^62 > Long.MaxValue) does not raise
+    ARITHMETIC_OVERFLOW under ANSI."""
+    from biodwh2_arcadedb_server_spark.operators.graph import strongly_connected_components
+
+    big = 2**62
+    e = _edges(spark, [(big, big + 1), (big + 1, big + 2), (big + 2, big)])
+    want = {big: big, big + 1: big, big + 2: big}
+    assert {r.node_id: r.scc for r in strongly_connected_components(e).collect()} == want
+    spark.conf.set("spark.graft.cc.driverEdgeCap", "0")
+    try:
+        got = {r.node_id: r.component for r in connected_components(e).collect()}
+    finally:
+        spark.conf.unset("spark.graft.cc.driverEdgeCap")
+    assert got == want
+
+
+@pytest.mark.parametrize("m", [1, 2, 3, 5, 6])
+def test_cc_max_iter_truncates_to_exact_step_count(spark, m):
+    """max_iter counts synchronous steps, across the 1, 2, 4 batch
+    boundaries: after m steps on a chain, node i holds the min id
+    within m hops."""
+    e = _edges(spark, [(i, i + 1) for i in range(29)])
+    spark.conf.set("spark.graft.cc.driverEdgeCap", "0")
+    try:
+        got = {r.node_id: r.component for r in connected_components(e, max_iter=m).collect()}
+    finally:
+        spark.conf.unset("spark.graft.cc.driverEdgeCap")
+    assert got == {i: max(0, i - m) for i in range(30)}
+
+
+def test_tight_loop_restores_shuffle_partitions(spark):
+    from biodwh2_arcadedb_server_spark.operators.graph import _tight_loop
+
+    key = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(key)
+    with _tight_loop(spark, 10) as n:
+        assert n == 1 and spark.conf.get(key) == "1"
+    assert spark.conf.get(key) == before
+    with pytest.raises(RuntimeError, match="loop body"):
+        with _tight_loop(spark, 10):
+            raise RuntimeError("loop body")
+    assert spark.conf.get(key) == before
