@@ -35,8 +35,8 @@ STREAMING = {
     # partitions — per-trigger runtime floor, independent of key count
     # after cell-packing (streaming/stateful.py)
     "q179", "q181", "q182",
-    # round-13: the contamination drain (3 triggers x RocksDB cycle +
-    # the reference-postings bootstrap job) — same per-trigger floor
+    # the contamination drain: 3 triggers of a stream-static join
+    # (per-trigger planning + the reference-postings build job)
     "q191",
     # round-14: the ROTATING drain adds a control batch (one more
     # trigger) + two reference_postings builds — same floor family

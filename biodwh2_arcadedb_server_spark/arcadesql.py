@@ -2663,7 +2663,7 @@ def _execute_dml_locked(
         # localCheckpoint. node_id is immutable under UPDATE (identity
         # columns are guarded), which is what makes the AFTER
         # semi-join correct.
-        npath = os.path.join(workspace_dir, "nodes", stmt.label)
+        npath = ws.dataset_path(workspace_dir, "nodes", stmt.label)
         try:
             matched = spark.read.parquet(npath).where(pred)
         except Exception as exc:
@@ -2705,7 +2705,7 @@ def _execute_dml_locked(
                 # RETURN AFTER on the upsert-insert branch: the WHERE's
                 # key equality selects the freshly inserted record
                 return spark.read.parquet(
-                    os.path.join(workspace_dir, "nodes", stmt.label)
+                    ws.dataset_path(workspace_dir, "nodes", stmt.label)
                 ).where(pred).localCheckpoint(eager=True)
             if ret_mode == "before":
                 return before_rows  # nothing matched: empty
@@ -2721,7 +2721,9 @@ def _execute_dml_locked(
             # mutation's dataset swap (a lazy plan over the current
             # files would die on it)
             return (
-                spark.read.parquet(os.path.join(workspace_dir, "nodes", stmt.label))
+                spark.read.parquet(
+                    ws.dataset_path(workspace_dir, "nodes", stmt.label)
+                )
                 .join(ret_ids, "node_id", "left_semi")
                 .localCheckpoint(eager=True)
             )
@@ -2770,7 +2772,9 @@ def _execute_dml_locked(
                 f"(known: {sorted(manifest['edges'])})"
             )
         info = manifest["edges"][stmt.label]
-        e_schema = spark.read.parquet(info["path"]).schema
+        e_schema = spark.read.parquet(
+            ws.dataset_path(workspace_dir, "edges", stmt.label)
+        ).schema
         props = stmt.rows[0]
         unknown = set(props) - {
             f.name for f in e_schema.fields
@@ -2804,7 +2808,7 @@ def _execute_dml_locked(
             )
         n = ws.insert_edges(spark, workspace_dir, stmt.label, rows)
     else:  # insert
-        path = os.path.join(workspace_dir, "nodes", stmt.label)
+        path = ws.dataset_path(workspace_dir, "nodes", stmt.label)
         cur_schema = spark.read.parquet(path).schema
         writable = [
             f for f in cur_schema.fields

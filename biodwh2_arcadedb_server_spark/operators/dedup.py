@@ -962,15 +962,15 @@ def reference_postings(
     granularity: str = "word",
 ) -> DataFrame:
     """Pack a FIXED reference corpus (an eval/benchmark set) into the
-    per-gram postings table the STREAMING contamination check loads
-    as TWS MapState (streaming/stateful.py::_GramPostingsProcessor):
-    one row per surviving gram hash — (gh, refs, poss) parallel
+    per-gram postings table the STREAMING contamination check joins
+    the stream's grams against
+    (streaming/stateful.py::stream_substring_contamination): one row
+    per surviving gram hash — (gh, refs, poss) parallel
     arrays sorted by (ref, pos). The df/postings caps apply over the
     REFERENCE corpus only (the stream side needs no cap: an arriving
     doc's gram either hits a surviving posting list — bounded by
     construction — or nothing). Reference sets are tiny next to the
-    stream (MBs vs TBs), so the packed table broadcasts/bootstraps
-    cheaply."""
+    stream (MBs vs TBs), so the packed table broadcasts cheaply."""
     if max_postings is None:
         max_postings = 8 * max_df
     # Same reuse boundary as exact_substring_spans: the index feeds
@@ -1022,7 +1022,7 @@ def assemble_spans(anchors: DataFrame, k: int, min_len: int) -> DataFrame:
     """Anchor rows (da, db, pa, pb) → merged per-doc removal spans —
     the second half of ``exact_substring_spans``, factored out so the
     STREAMING contamination path (streaming/stateful.py emits the
-    same anchor shape from its postings MapState) assembles spans
+    same anchor shape from its postings join) assembles spans
     through the identical code: diag islands with the k−1 gap bridge,
     the min_len run filter, and the per-doc interval merge. Every
     window partitions on fine keys ((da, db, diag) then doc) — never

@@ -544,21 +544,20 @@ def q191_streaming_substring_contamination(spark: SparkSession, sf_dir: str) -> 
     id < 250 are the FIXED reference set, indexed in batch
     (``dedup.reference_postings`` — positional gram postings, caps
     over the reference only); docs ≥ 250 replay as 3 micro-batches
-    through ``streaming.stateful.stream_substring_contamination``,
-    whose TWS MapState holds the postings PARTITIONED by gram-hash
-    cell (loaded once via handleInitialState; the stream never
-    writes state — a fixed eval set is read-only). Emitted anchors
+    through ``streaming.stateful.stream_substring_contamination``, a
+    stateless stream-static join of each batch's positional grams to
+    the exploded postings on the gram hash (a fixed eval set is
+    read-only, so no state store is involved). Emitted anchors
     assemble into merged spans through the SAME
     ``dedup.assemble_spans`` as batch, so the drained result is
     byte-equal to the batch pipeline restricted to (reference →
     stream) pairs — which is exactly what the DuckDB twin replays
     (ref-only stop-gram caps + the restricted pair predicate).
 
-    Scale: state size = the reference index (MBs for real eval sets)
-    sharded across cells; per-batch state ops = distinct touched
-    grams per cell (pandas-side grouping collapses repeats); the
-    stream side is embarrassingly parallel — no corpus-sized state,
-    no stream-stream joins."""
+    Scale: the reference index (MBs for real eval sets) broadcasts
+    under the size gate and shuffles on the gram hash above it; the
+    stream side is embarrassingly parallel — no state at all, no
+    stream-stream joins."""
     from biodwh2_arcadedb_server_spark.streaming.stateful import (
         run_finite_substring_contamination,
     )

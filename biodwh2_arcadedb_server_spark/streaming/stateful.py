@@ -911,88 +911,20 @@ try:  # pragma: no cover - environment-dependent surface
         def close(self) -> None:
             pass
 
-    class _GramPostingsProcessor(StatefulProcessor):
-        """Streaming exact-substring CONTAMINATION check (round 13,
-        VERDICT r12 #4 — the batch→stream handoff for Lee et al.
-        2022's ExactSubstr, mirroring what q181/q182 did for
-        first-seen dedup): the positional-gram postings of a FIXED
-        reference set (an eval/benchmark corpus) live in named
-        MapState; each arriving document's gram rows look up their
-        hash and emit anchor rows (ref doc, stream doc, ref pos,
-        stream pos). Spans assemble downstream through the SAME
-        ``dedup.assemble_spans`` code as batch — this processor is
-        the streaming replacement for the batch self-join only.
-
-        Layout: grouping key = ``pmod(gh, n_cells)`` so the reference
-        index PARTITIONS across cells (never replicated); the cell's
-        map is gram-hash → packed (refs, poss) parallel arrays. State
-        ops per batch = one getValue per DISTINCT touched gram per
-        cell (pandas-side grouping collapses repeats); the reference
-        load is one updateValue per gram, once, via
-        handleInitialState. The stream NEVER writes state — a fixed
-        reference set is read-only — so restarts only replay the
-        bootstrap. ``ttl_ms`` (state TTL, requires
-        timeMode=ProcessingTime) ages the postings out on long-lived
-        deployments where the reference set is periodically re-
-        bootstrapped; leave None for finite drains."""
-
-        def __init__(self, ttl_ms: int | None = None) -> None:
-            self._ttl = ttl_ms
-
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._post = handle.getMapState(
-                "postings",
-                "gh bigint",
-                "refs array<bigint>, poss array<bigint>",
-                ttlDurationMs=self._ttl,
-            )
-
-        def handleInputRows(self, key, rows, timer_values) -> Iterator[pd.DataFrame]:
-            frames = [pdf for pdf in rows if len(pdf)]
-            if not frames:
-                return iter(())
-            pdf = pd.concat(frames, ignore_index=True)
-            out: list[pd.DataFrame] = []
-            for gh, grp in pdf.groupby("gh", sort=False):
-                v = self._post.getValue((int(gh),))
-                if v is None:
-                    continue
-                refs, poss = v
-                n_ref, n_in = len(refs), len(grp)
-                out.append(
-                    pd.DataFrame(
-                        {
-                            "da": [int(r) for r in refs] * n_in,
-                            "pa": [int(p) for p in poss] * n_in,
-                            "db": grp["doc_id"].repeat(n_ref).to_numpy(),
-                            "pb": grp["pos"].repeat(n_ref).to_numpy(),
-                        }
-                    )
-                )
-            if not out:
-                return iter(())
-            return iter(
-                [pd.concat(out, ignore_index=True)[["da", "db", "pa", "pb"]]]
-            )
-
-        def handleInitialState(self, key, initialState, timerValues) -> None:
-            for r in initialState.itertuples(index=False):
-                self._post.updateValue(
-                    (int(r.gh),),
-                    ([int(x) for x in r.refs], [int(x) for x in r.poss]),
-                )
-
-        def close(self) -> None:
-            pass
-
-    class _RotatingGramPostingsProcessor(_GramPostingsProcessor):
+    class _RotatingGramPostingsProcessor(StatefulProcessor):
         """Contamination postings with REFERENCE ROTATION (round 14,
-        ROADMAP r13 follow-on): ``handleInitialState`` only runs at
+        ROADMAP r13 follow-on). Layout: grouping key = ``pmod(gh,
+        n_cells)`` so the reference index PARTITIONS across cells
+        (never replicated); the cell's map is gram-hash → packed
+        (refs, poss) parallel arrays, loaded once per cell by
+        ``handleInitialState`` (epoch 0). That bootstrap only runs at
         query START, so a long-lived stream cannot re-bootstrap — new
         reference epochs ship THROUGH the stream as control rows
         (``is_ctrl`` true, carrying the gram's new packed postings;
         EMPTY refs = tombstone, removing a gram the new epoch dropped,
-        e.g. one the wider set pushed over the stop-gram cap).
+        e.g. one the wider set pushed over the stop-gram cap). A
+        fixed reference set needs none of this: it is a stateless
+        stream-static join (``stream_substring_contamination``).
 
         Within a batch, control rows apply BEFORE document grams are
         probed (split in pandas below), so a batch that carries both
@@ -1003,7 +935,16 @@ try:  # pragma: no cover - environment-dependent surface
         offer (and exactly what the finite harness pins: chunk files
         are mtime-ordered, one per trigger). State-op cost: one
         updateValue/removeKey per shipped gram per epoch — rotation
-        cost scales with the INDEX size, not the stream."""
+        cost scales with the INDEX size, not the stream. Per document
+        batch: one getValue per DISTINCT touched gram per cell
+        (pandas-side grouping collapses repeats)."""
+
+        def init(self, handle: StatefulProcessorHandle) -> None:
+            self._post = handle.getMapState(
+                "postings",
+                "gh bigint",
+                "refs array<bigint>, poss array<bigint>",
+            )
 
         def handleInputRows(self, key, rows, timer_values) -> Iterator[pd.DataFrame]:
             frames = [pdf for pdf in rows if len(pdf)]
@@ -1045,6 +986,16 @@ try:  # pragma: no cover - environment-dependent surface
             return iter(
                 [pd.concat(out, ignore_index=True)[["da", "db", "pa", "pb"]]]
             )
+
+        def handleInitialState(self, key, initialState, timerValues) -> None:
+            for r in initialState.itertuples(index=False):
+                self._post.updateValue(
+                    (int(r.gh),),
+                    ([int(x) for x in r.refs], [int(x) for x in r.poss]),
+                )
+
+        def close(self) -> None:
+            pass
 
     HAS_TRANSFORM_WITH_STATE = True
     TWS_UNAVAILABLE_REASON: str | None = None
@@ -1172,7 +1123,6 @@ def _drain_finite(
     ckpt_prefix: str,
     schema: str = "user_id long, ts timestamp, value double",
     sentinel_col: str | None = "user_id",
-    stop_when_stable: bool = False,
 ) -> DataFrame:
     """Shared RocksDB finite-drain harness for the TWS runners
     (review finding: three hand-kept copies): pin the provider +
@@ -1182,13 +1132,8 @@ def _drain_finite(
     return real rows (``sentinel_col`` >= 0; pass None when the
     source carries no sentinel rows). The provider conf is set INSIDE
     the restore scope so an exception anywhere still restores it.
-
-    ``stop_when_stable``: ProcessingTime-mode operators (state TTL)
-    NEVER terminate under availableNow — the time mode keeps
-    scheduling batches, the same trap as ProcessingTimeTimeout timers
-    (module docstring; re-measured round 13 with MapState TTL). For
-    those, run a normal micro-batch trigger and stop once every input
-    file is consumed and the sink has been quiet for a few polls."""
+    Stateless drains (the fixed-set contamination join) run through
+    the same harness: the provider conf is simply unused there."""
     from biodwh2_arcadedb_server_spark.streaming import (
         STREAM_STATE_PARTITIONS,
         state_partitions,
@@ -1219,43 +1164,8 @@ def _drain_finite(
                     tempfile.mkdtemp(prefix=ckpt_prefix, dir=ckpt_base),
                 )
             )
-            if stop_when_stable:
-                import time
-
-                q = writer.start()
-                n_files = len(
-                    [f for f in os.listdir(src) if f.endswith(".parquet")]
-                )
-                stable, last = 0, -1
-                deadline = time.monotonic() + 300
-                # stop once ≥ n_files batches ran AND the sink count
-                # held still for 3 consecutive polls
-                while stable < 3 and time.monotonic() < deadline:
-                    time.sleep(0.5)
-                    if q.exception() is not None:
-                        raise q.exception()
-                    prog = q.recentProgress
-                    n = spark.table(name).count()
-                    if n == last and len(prog) >= n_files:
-                        stable += 1
-                    else:
-                        stable = 0
-                    last = n
-                q.stop()
-                q.awaitTermination()
-                if stable < 3:
-                    # ADVICE r13: never hand back a silently-partial
-                    # sink — a slow machine hitting the deadline would
-                    # otherwise drop contamination spans with no signal
-                    raise TimeoutError(
-                        f"stream '{name}' did not stabilize before the "
-                        f"300s drain deadline ({len(prog)}/{n_files} "
-                        f"batches, sink at {last} rows) — partial sink "
-                        "discarded"
-                    )
-            else:
-                q = writer.trigger(availableNow=True).start()
-                q.awaitTermination()
+            q = writer.trigger(availableNow=True).start()
+            q.awaitTermination()
     finally:
         if prev is None:
             spark.conf.unset(provider_key)
@@ -1394,69 +1304,43 @@ def stream_substring_contamination(
     docs: DataFrame,
     ref_postings: DataFrame,
     k: int = 8,
-    n_cells: int | None = None,
-    ttl_ms: int | None = None,
     granularity: str = "word",
 ) -> DataFrame:
     """Streaming exact-substring CONTAMINATION anchors against a
-    fixed reference set (``_GramPostingsProcessor``): ``docs`` is the
-    streaming (doc_id, text) frame; ``ref_postings`` the BATCH output
-    of ``dedup.reference_postings`` (the eval set's capped positional
-    index), loaded as TWS initial state partitioned by
-    ``pmod(gh, n_cells)`` — the same cell key the stream's gram rows
-    group by, so each cell's MapState holds exactly its shard of the
-    postings (partitioned, never replicated). Emits anchor rows
-    (da=ref doc, db=stream doc, pa=ref pos, pb=stream pos); span
-    assembly is ``dedup.assemble_spans`` downstream — per-(doc, ref,
-    diag) local, so it composes per micro-batch or post-hoc.
-    ``ttl_ms`` opts into state TTL (requires ProcessingTime mode) for
-    long-lived deployments that re-bootstrap the reference set.
+    fixed reference set, as a stateless stream-static inner join:
+    ``docs`` is the streaming (doc_id, text) frame; ``ref_postings``
+    the BATCH output of ``dedup.reference_postings`` (the eval set's
+    capped positional index), exploded to one (gh, da, pa) row per
+    reference occurrence and joined to the stream's positional grams
+    (gh, db, pb) on the gram hash. Emits anchor rows (da=ref doc,
+    db=stream doc, pa=ref pos, pb=stream pos); span assembly is
+    ``dedup.assemble_spans`` downstream — per-(doc, ref, diag)
+    local, so it composes per micro-batch or post-hoc.
 
-    ``n_cells=None`` (default) derives the cell count from the
-    reference index size via ``derive_contamination_cells`` — one
-    count() over the batch postings at bootstrap, amortized over the
-    stream's lifetime. Pass an explicit value to pin the plan (the
-    driver probes do, for run-to-run stability); results are
-    IDENTICAL at any cell count — cells only shard the state."""
+    A fixed reference set is read-only, so no state store is
+    involved: every stream gram meets the index in one join, with no
+    per-gram state round trip, and a restart rebuilds nothing. The
+    reference side is size-gated (``skew.broadcast_if_small``): an
+    eval-set index under the broadcast threshold ships to every task
+    and the stream never shuffles; above it both sides shuffle on
+    ``gh``. Structured Streaming re-executes the static side's plan
+    every micro-batch, so callers checkpoint ``ref_postings`` before
+    the stream starts."""
     from biodwh2_arcadedb_server_spark.operators.dedup import (
         positional_shingles,
     )
+    from biodwh2_arcadedb_server_spark.operators.skew import (
+        broadcast_if_small,
+    )
 
-    if n_cells is None:
-        n_cells = derive_contamination_cells(ref_postings.count())
-
-    if not HAS_TRANSFORM_WITH_STATE:
-        raise RuntimeError(
-            "transformWithState requires pyspark>=4 with google.protobuf "
-            "available to the Python worker; run dedup."
-            f"exact_substring_spans in batch instead [{TWS_UNAVAILABLE_REASON}]"
-        )
     grams = positional_shingles(
         docs, "doc_id", "text", k, granularity, repartition=False
-    ).select(F.col("_id").alias("doc_id"), "pos", "gh")
-    # STREAM-STATIC broadcast semi-join prefilter (round-13 measured
-    # lesson, the q84 state-op rule again): almost every stream gram
-    # MISSES the reference set, and a miss still costs one getValue
-    # JVM round-trip — at sf0.1 that was ~1M round-trips and a 40s
-    # drain. The reference gram-hash list is small by definition (an
-    # eval set), so a stateless broadcast left_semi drops the misses
-    # BEFORE the stateful operator; only genuine hits pay a state op.
-    grams = grams.join(
-        F.broadcast(ref_postings.select("gh")), "gh", "left_semi"
-    )
-    boot = ref_postings.withColumn(
-        "_cell", F.pmod(F.col("gh"), F.lit(n_cells))
-    ).groupBy("_cell")
-    return (
-        grams.withColumn("_cell", F.pmod(F.col("gh"), F.lit(n_cells)))
-        .groupBy("_cell")
-        .transformWithStateInPandas(
-            statefulProcessor=_GramPostingsProcessor(ttl_ms),
-            outputStructType=CONTAMINATION_ANCHOR_SCHEMA,
-            outputMode="Append",
-            timeMode="ProcessingTime" if ttl_ms else "None",
-            initialState=boot,
-        )
+    ).select("gh", F.col("_id").alias("db"), F.col("pos").alias("pb"))
+    refs = ref_postings.select(
+        "gh", F.explode(F.arrays_zip("refs", "poss")).alias("_z")
+    ).select("gh", F.col("_z.refs").alias("da"), F.col("_z.poss").alias("pa"))
+    return grams.join(broadcast_if_small(refs), "gh").select(
+        "da", "db", "pa", "pb"
     )
 
 
@@ -1479,15 +1363,17 @@ def stream_substring_contamination_rotating(
     frame in ``ROTATING_STREAM_SCHEMA`` carrying BOTH document rows
     (kind='doc': doc_id, text) and control rows (kind='ctrl': gh,
     refs, poss — a new epoch's packed postings; EMPTY refs =
-    tombstone). Documents shingle and probe exactly as the fixed-set
-    op; control rows route to the same gram-hash cell and update the
-    MapState in place (``_RotatingGramPostingsProcessor``), so a new
-    eval set ships THROUGH the stream — no query restart, no state
-    rebuild. handleInitialState still bootstraps epoch 0.
+    tombstone). Documents shingle into the same positional grams as
+    the fixed-set op, and each gram probes the MapState of its
+    ``pmod(gh, n_cells)`` cell; control rows route to the same cell
+    and update the MapState in place
+    (``_RotatingGramPostingsProcessor``), so a new eval set ships
+    THROUGH the stream — no query restart, no state rebuild.
+    handleInitialState bootstraps epoch 0.
 
-    The round-13 broadcast-semi prefilter is FIXED for the query's
-    lifetime, which is exactly what rotation breaks — so by default
-    this op runs UNFILTERED (every stream gram pays a state op; the
+    A broadcast semi-join prefilter on gram hashes is FIXED for the
+    query's lifetime, which is exactly what rotation breaks — so by
+    default this op runs UNFILTERED (every stream gram pays a state op; the
     measured 5.6× drain cost at sf0.1 is the price of rotation).
     ``prefilter_hashes`` opts back in when a SUPERSET of every
     epoch's gram hashes is known up front (finite replays, bounded
@@ -1536,7 +1422,7 @@ def stream_substring_contamination_rotating(
         .withColumn("_cell", F.pmod(F.col("gh"), F.lit(n_cells)))
         .groupBy("_cell")
         .transformWithStateInPandas(
-            statefulProcessor=_RotatingGramPostingsProcessor(None),
+            statefulProcessor=_RotatingGramPostingsProcessor(),
             outputStructType=CONTAMINATION_ANCHOR_SCHEMA,
             outputMode="Append",
             timeMode="None",
@@ -1588,8 +1474,6 @@ def run_finite_substring_contamination(
     max_df: int = 16,
     name: str = "contam_out",
     state_parts: int | None = None,
-    n_cells: int = 8,
-    ttl_ms: int | None = None,
 ) -> DataFrame:
     """Drain the post-cutoff documents stream against the pre-cutoff
     reference index and assemble merged contamination spans — the
@@ -1597,10 +1481,11 @@ def run_finite_substring_contamination(
     pattern): reference = docs with id < ``ref_below`` indexed in
     batch (``dedup.reference_postings``, caps over the reference
     only); stream = the remaining docs replayed as ``n_chunks``
-    micro-batches; anchors drain through the postings MapState; spans
-    assemble via the SAME ``dedup.assemble_spans`` as batch. Output
-    is byte-equal to the batch pipeline restricted to (ref → stream)
-    pairs — the DuckDB twin replays exactly that restriction."""
+    micro-batches; anchors drain through the stream-static postings
+    join; spans assemble via the SAME ``dedup.assemble_spans`` as
+    batch. Output is byte-equal to the batch pipeline restricted to
+    (ref → stream) pairs — the DuckDB twin replays exactly that
+    restriction."""
     from biodwh2_arcadedb_server_spark.operators import dedup as dedup_mod
     from biodwh2_arcadedb_server_spark.sources.registry import load_table
 
@@ -1608,12 +1493,12 @@ def run_finite_substring_contamination(
         F.col("doc_id") < ref_below
     )
     # Eager checkpoint BEFORE the stream starts: the packed postings
-    # feed a stream-static broadcast semi-join (and the initial-state
-    # bootstrap), and Structured Streaming re-executes the static
-    # side's plan EVERY micro-batch — without the materialization
-    # each trigger re-ran the tokenize/cap/pack subtree (optimization
-    # r14, guide §2.4/§5: n_triggers × the index build, for an index
-    # that is fixed by definition).
+    # are the static side of a stream-static join, and Structured
+    # Streaming re-executes the static side's plan EVERY micro-batch —
+    # without the materialization each trigger re-ran the
+    # tokenize/cap/pack subtree (optimization r14, guide §2.4/§5:
+    # n_triggers × the index build, for an index that is fixed by
+    # definition).
     post = dedup_mod.reference_postings(
         ref, "doc_id", "text", k=k, max_df=max_df
     ).localCheckpoint(eager=True)
@@ -1621,17 +1506,12 @@ def run_finite_substring_contamination(
     anchors = _drain_finite(
         spark,
         src,
-        lambda stream: stream_substring_contamination(
-            stream, post, k=k, n_cells=n_cells, ttl_ms=ttl_ms
-        ),
+        lambda stream: stream_substring_contamination(stream, post, k=k),
         name,
         state_parts,
         "contam_ckpt_",
         schema="doc_id long, text string",
         sentinel_col=None,
-        # state TTL forces ProcessingTime mode, which never
-        # terminates under availableNow — use the stable-stop drain
-        stop_when_stable=ttl_ms is not None,
     )
     return dedup_mod.assemble_spans(anchors, k, min_len)
 

@@ -136,6 +136,14 @@ def node_id2(label: str, key_col) -> F.Column:
     return F.xxhash64(F.lit("__idlane2__"), F.lit(label), key_col.cast("long"))
 
 
+def dataset_path(ws_dir: str, kind: str, label: str) -> str:
+    """Directory of one label's parquet dataset (``kind`` is "nodes"
+    or "edges"). Always derived from ``ws_dir``, never stored: a
+    transaction applies its statements to a copy of the workspace
+    under another directory, and every lane must mutate that copy."""
+    return os.path.join(ws_dir, kind, label)
+
+
 def _dataset_row_count(spark: SparkSession, path: str) -> int:
     """Row count for a freshly written dataset. Small datasets (the
     interactive create/DDL path) answer DRIVER-SIDE from the parquet
@@ -354,19 +362,18 @@ def build_workspace(
     for spec in (node_specs if node_specs is not None else NODE_SPECS):
         if not os.path.exists(os.path.join(src_dir, f"{spec.table}.parquet")):
             continue
-        out = os.path.join(ws_dir, "nodes", spec.label)
+        out = dataset_path(ws_dir, "nodes", spec.label)
         h = _src_hash(spec.table)
         prev = old["nodes"].get(spec.label)
-        if prev and prev.get("source_hash") == h and os.path.exists(prev["path"]):
+        if prev and prev.get("source_hash") == h and os.path.exists(out):
             manifest["nodes"][spec.label] = prev
-            node_frames[spec.label] = spark.read.parquet(prev["path"])
+            node_frames[spec.label] = spark.read.parquet(out)
             continue
         nf = build_nodes(spark, src_dir, spec, id_bits=id_bits)
         nf.write.mode("overwrite").parquet(out)
         node_frames[spec.label] = spark.read.parquet(out)
         rebuilt.append(f"n:{spec.label}")
         manifest["nodes"][spec.label] = {
-            "path": out,
             "key": spec.key,
             "source_hash": h,
             "schema": node_frames[spec.label].schema.jsonValue(),
@@ -378,13 +385,13 @@ def build_workspace(
     for spec in (edge_specs if edge_specs is not None else EDGE_SPECS):
         if spec.src_label not in node_frames or spec.dst_label not in node_frames:
             continue
-        out = os.path.join(ws_dir, "edges", spec.label)
+        out = dataset_path(ws_dir, "edges", spec.label)
         h = _src_hash(spec.table)
         prev = old["edges"].get(spec.label)
         endpoints_fresh = not any(
             f"n:{lbl}" in rebuilt for lbl in (spec.src_label, spec.dst_label)
         )
-        if prev and prev.get("source_hash") == h and endpoints_fresh and os.path.exists(prev["path"]):
+        if prev and prev.get("source_hash") == h and endpoints_fresh and os.path.exists(out):
             manifest["edges"][spec.label] = prev
             continue
         ef = build_edges(spark, src_dir, spec, node_frames, id_bits=id_bits)
@@ -396,7 +403,6 @@ def build_workspace(
         edf = spark.read.parquet(out)
         rebuilt.append(f"e:{spec.label}")
         manifest["edges"][spec.label] = {
-            "path": out,
             "src_label": spec.src_label,
             "dst_label": spec.dst_label,
             "source_hash": h,
@@ -521,7 +527,7 @@ def insert_nodes(spark: SparkSession, ws_dir: str, label: str, rows: DataFrame) 
     (at 100 TB an insert must never touch the other 100 TB). The
     anti-join against existing ids shuffles only the 8-byte id
     column."""
-    path = os.path.join(ws_dir, "nodes", label)
+    path = dataset_path(ws_dir, "nodes", label)
     cur = spark.read.parquet(path)
     new = rows.withColumn("node_id", node_id(label, F.col("natural_key"))).withColumn(
         "label", F.lit(label)
@@ -564,7 +570,7 @@ def update_nodes(
             f"cannot UPDATE identity column(s) {bad} — node ids derive "
             "from (label, natural_key); DELETE + INSERT instead"
         )
-    path = os.path.join(ws_dir, "nodes", label)
+    path = dataset_path(ws_dir, "nodes", label)
     cur = spark.read.parquet(path)
     unknown = sorted(set(assignments) - set(cur.columns))
     if unknown:
@@ -611,7 +617,7 @@ def delete_nodes(spark: SparkSession, ws_dir: str, label: str, predicate: F.Colu
     otherwise. Returns nodes deleted."""
     with open(os.path.join(ws_dir, "manifest.json")) as mh:
         manifest = json.load(mh)
-    path = manifest["nodes"][label]["path"]
+    path = dataset_path(ws_dir, "nodes", label)
     cur = spark.read.parquet(path)
     doomed = cur.where(predicate).select("node_id").localCheckpoint(eager=True)
     n_del = doomed.count()
@@ -624,8 +630,8 @@ def delete_nodes(spark: SparkSession, ws_dir: str, label: str, predicate: F.Colu
     for e_label, info in manifest["edges"].items():
         if label not in (info["src_label"], info["dst_label"]):
             continue
-        e = spark.read.parquet(info["path"])
-        kept = e
+        e_path = dataset_path(ws_dir, "edges", e_label)
+        kept = spark.read.parquet(e_path)
         if info["src_label"] == label:
             kept = kept.join(doomed.withColumnRenamed("node_id", "src"), "src", "left_anti")
         if info["dst_label"] == label:
@@ -636,7 +642,7 @@ def delete_nodes(spark: SparkSession, ws_dir: str, label: str, predicate: F.Colu
         # second time for a number the write job already knows.
         obs = Observation()
         _rewrite_dataset(
-            kept.observe(obs, F.count(F.lit(1)).alias("n")), info["path"]
+            kept.observe(obs, F.count(F.lit(1)).alias("n")), e_path
         )
         _update_manifest_count(ws_dir, "edges", e_label, int(obs.get["n"]))
     return n_del
@@ -653,11 +659,11 @@ def insert_edges(spark: SparkSession, ws_dir: str, label: str, rows: DataFrame) 
     with open(os.path.join(ws_dir, "manifest.json")) as mh:
         manifest = json.load(mh)
     info = manifest["edges"][label]
-    path = info["path"]
+    path = dataset_path(ws_dir, "edges", label)
     cur = spark.read.parquet(path)
     new = rows.withColumn("label", F.lit(label))
-    src_nodes = spark.read.parquet(manifest["nodes"][info["src_label"]]["path"])
-    dst_nodes = spark.read.parquet(manifest["nodes"][info["dst_label"]]["path"])
+    src_nodes = spark.read.parquet(dataset_path(ws_dir, "nodes", info["src_label"]))
+    dst_nodes = spark.read.parquet(dataset_path(ws_dir, "nodes", info["dst_label"]))
     if "src2" in cur.columns and "src2" not in new.columns:
         # 128-bit workspace fed first-lane-only rows (the dialect
         # CREATE EDGE path): the second lane cannot be derived from
@@ -703,9 +709,7 @@ def update_edges(
             f"cannot UPDATE EDGE structural column(s) {bad} — "
             "DELETE EDGE + CREATE EDGE instead"
         )
-    with open(os.path.join(ws_dir, "manifest.json")) as mh:
-        manifest = json.load(mh)
-    path = manifest["edges"][label]["path"]
+    path = dataset_path(ws_dir, "edges", label)
     cur = spark.read.parquet(path)
     unknown = sorted(set(assignments) - set(cur.columns))
     if unknown:
@@ -763,7 +767,8 @@ def delete_edges_between(
         # in — no second read/parse per statement (round-8 review)
         with open(os.path.join(ws_dir, "manifest.json")) as mh:
             info = json.load(mh)["edges"][label]
-    cur = spark.read.parquet(info["path"])
+    path = dataset_path(ws_dir, "edges", label)
+    cur = spark.read.parquet(path)
     doomed = (
         cur.join(F.broadcast(src_ids), "src", "left_semi")
         .join(F.broadcast(dst_ids), "dst", "left_semi")
@@ -775,7 +780,7 @@ def delete_edges_between(
     )
     n_del = doomed.count()
     if n_del:
-        _rewrite_dataset(cur.exceptAll(doomed), info["path"])
+        _rewrite_dataset(cur.exceptAll(doomed), path)
         _update_manifest_count(ws_dir, "edges", label, info["count"] - n_del)
     return n_del
 
@@ -785,7 +790,7 @@ def delete_edges(spark: SparkSession, ws_dir: str, label: str, predicate: F.Colu
     edges have no dependents). Returns edges deleted."""
     with open(os.path.join(ws_dir, "manifest.json")) as mh:
         manifest = json.load(mh)
-    path = manifest["edges"][label]["path"]
+    path = dataset_path(ws_dir, "edges", label)
     cur = spark.read.parquet(path)
     doomed = cur.where(predicate).count()
     if doomed:
@@ -839,13 +844,11 @@ def create_node_type(spark: SparkSession, ws_dir: str, label: str) -> None:
     buckets = manifest.get("rid_buckets") or list(manifest["nodes"])
     buckets.append(label)
     manifest["rid_buckets"] = buckets
-    path = os.path.join(ws_dir, "nodes", label)
     empty = spark.createDataFrame(
         [], "node_id long, natural_key long, label string"
     )
-    _write_empty_dataset(empty.schema, path)
+    _write_empty_dataset(empty.schema, dataset_path(ws_dir, "nodes", label))
     manifest["nodes"][label] = {
-        "path": path,
         "key": "natural_key",
         "source_hash": "ddl",
         "schema": empty.schema.jsonValue(),
@@ -868,11 +871,9 @@ def create_edge_type(
     for lbl in (src_label, dst_label):
         if lbl not in manifest["nodes"]:
             raise ValueError(f"unknown endpoint node type {lbl!r}")
-    path = os.path.join(ws_dir, "edges", label)
     empty = spark.createDataFrame([], "src long, dst long, label string")
-    _write_empty_dataset(empty.schema, path)
+    _write_empty_dataset(empty.schema, dataset_path(ws_dir, "edges", label))
     manifest["edges"][label] = {
-        "path": path,
         "src_label": src_label,
         "dst_label": dst_label,
         "source_hash": "ddl",
@@ -898,7 +899,7 @@ def add_property(
     kind = "nodes" if label in manifest["nodes"] else "edges"
     if label not in manifest[kind]:
         raise ValueError(f"unknown type {label!r}")
-    path = manifest[kind][label]["path"]
+    path = dataset_path(ws_dir, kind, label)
     cur = spark.read.parquet(path)
     if prop in cur.columns:
         raise ValueError(f"property {label}.{prop} already exists")
@@ -928,7 +929,7 @@ def create_index(
     kind = "nodes" if label in manifest["nodes"] else "edges"
     if label not in manifest[kind]:
         raise ValueError(f"unknown type {label!r}")
-    df = spark.read.parquet(manifest[kind][label]["path"])
+    df = spark.read.parquet(dataset_path(ws_dir, kind, label))
     missing = [c for c in cols if c not in df.columns]
     if missing:
         raise ValueError(f"unknown column(s) {missing} on {label!r}")
@@ -968,7 +969,7 @@ def drop_type(spark: SparkSession, ws_dir: str, label: str, unsafe: bool = False
                 f"edge type {label!r} holds {n} edge(s) — "
                 "use DROP TYPE ... UNSAFE to drop it with its records"
             )
-        shutil.rmtree(info["path"])
+        shutil.rmtree(dataset_path(ws_dir, "edges", label))
         del manifest["edges"][label]
     elif label in manifest["nodes"]:
         refs = sorted(
@@ -987,7 +988,7 @@ def drop_type(spark: SparkSession, ws_dir: str, label: str, unsafe: bool = False
                 f"node type {label!r} holds {n} record(s) — "
                 "use DROP TYPE ... UNSAFE to drop it with its records"
             )
-        shutil.rmtree(info["path"])
+        shutil.rmtree(dataset_path(ws_dir, "nodes", label))
         # tombstone the bucket slot (None) instead of shifting later
         # buckets — RID indices recorded in the manifest stay stable
         # after DROP TYPE (ADVICE r9)
@@ -1019,7 +1020,7 @@ def drop_property(spark: SparkSession, ws_dir: str, label: str, prop: str) -> No
     kind = "nodes" if label in manifest["nodes"] else "edges"
     if label not in manifest[kind]:
         raise ValueError(f"unknown type {label!r}")
-    path = manifest[kind][label]["path"]
+    path = dataset_path(ws_dir, kind, label)
     cur = spark.read.parquet(path)
     if prop not in cur.columns:
         raise ValueError(f"unknown property {label}.{prop}")
@@ -1072,12 +1073,12 @@ def rename_type(spark: SparkSession, ws_dir: str, label: str, new_label: str) ->
             raise ValueError(f"type {new_label!r} already exists")
     if label in manifest["edges"]:
         info = manifest["edges"][label]
-        cur = spark.read.parquet(info["path"])
+        path = dataset_path(ws_dir, "edges", label)
+        cur = spark.read.parquet(path)
         n = info["count"]  # maintained invariant — no re-scan
-        new_path = os.path.join(ws_dir, "edges", new_label)
+        new_path = dataset_path(ws_dir, "edges", new_label)
         cur.withColumn("label", F.lit(new_label)).write.mode("overwrite").parquet(new_path)
-        shutil.rmtree(info["path"])
-        info["path"] = new_path
+        shutil.rmtree(path)
         manifest["edges"][new_label] = info
         del manifest["edges"][label]
         with open(os.path.join(ws_dir, "manifest.json"), "w") as mh:
@@ -1086,7 +1087,8 @@ def rename_type(spark: SparkSession, ws_dir: str, label: str, new_label: str) ->
     if label not in manifest["nodes"]:
         raise ValueError(f"unknown type {label!r}")
     info = manifest["nodes"][label]
-    cur = spark.read.parquet(info["path"])
+    path = dataset_path(ws_dir, "nodes", label)
+    cur = spark.read.parquet(path)
     # 128-bit workspaces (SCALE.md collision-ceiling escape hatch)
     # rename the SAME way with both lanes recomputed and the edge
     # remap joined on the 16-byte pair — a first-lane collision can't
@@ -1110,10 +1112,12 @@ def rename_type(spark: SparkSession, ws_dir: str, label: str, new_label: str) ->
     # a silent collision would cross-wire traversals
     id_cols = ["node_id", "node_id2"] if two_lane else ["node_id"]
     others = None
-    for other, o_info in manifest["nodes"].items():
+    for other in manifest["nodes"]:
         if other == label:
             continue
-        part = spark.read.parquet(o_info["path"]).select(*id_cols)
+        part = spark.read.parquet(
+            dataset_path(ws_dir, "nodes", other)
+        ).select(*id_cols)
         others = part if others is None else others.unionByName(part)
     if others is not None:
         new_ids = mapping.select(F.col("_new").alias("node_id"))
@@ -1130,7 +1134,7 @@ def rename_type(spark: SparkSession, ws_dir: str, label: str, new_label: str) ->
                 f"{clashes} recomputed node id(s) with other labels — "
                 "rebuild with a wider id scheme first"
             )
-    new_path = os.path.join(ws_dir, "nodes", new_label)
+    new_path = dataset_path(ws_dir, "nodes", new_label)
     renamed = cur.withColumn(
         "node_id", node_id(new_label, F.col("natural_key"))
     ).withColumn("label", F.lit(new_label))
@@ -1139,8 +1143,7 @@ def rename_type(spark: SparkSession, ws_dir: str, label: str, new_label: str) ->
             "node_id2", node_id2(new_label, F.col("natural_key"))
         )
     renamed.write.mode("overwrite").parquet(new_path)
-    shutil.rmtree(info["path"])
-    info["path"] = new_path
+    shutil.rmtree(path)
     # a rename keeps its bucket slot — RID indices stay stable
     buckets = manifest.get("rid_buckets") or list(manifest["nodes"])
     if label in buckets:
@@ -1151,7 +1154,8 @@ def rename_type(spark: SparkSession, ws_dir: str, label: str, new_label: str) ->
     drop_cols = ["_old", "_new"] + (["_old2", "_new2"] if two_lane else [])
     for e_label, e_info in manifest["edges"].items():
         touches = False
-        e = spark.read.parquet(e_info["path"])
+        e_path = dataset_path(ws_dir, "edges", e_label)
+        e = spark.read.parquet(e_path)
         if e_info["src_label"] == label:
             cond = e.src == mapping._old
             if two_lane:
@@ -1177,7 +1181,7 @@ def rename_type(spark: SparkSession, ws_dir: str, label: str, new_label: str) ->
             e_info["dst_label"] = new_label
             touches = True
         if touches:
-            _rewrite_dataset(e, e_info["path"])
+            _rewrite_dataset(e, e_path)
     with open(os.path.join(ws_dir, "manifest.json"), "w") as mh:
         json.dump(manifest, mh, indent=2)
     return n
@@ -1192,23 +1196,23 @@ def is_stale(src_dir: str, ws_dir: str) -> bool:
         return fh.read().strip() != source_checksum(src_dir)
 
 
-def _label_view_key(info: dict) -> tuple:
+def _label_view_key(path: str, info: dict) -> tuple:
     """Freshness fingerprint for one label's registered view: the
-    manifest entry (path, schema, count) plus the dataset directory's
-    mtime. EVERY mutation lane replaces files under the dataset path
-    (staged write + atomic swap), which bumps the directory mtime —
-    the same mtime-parity contract the incremental builder (A15)
-    already relies on — so an unchanged key ⟺ unchanged files AND
-    unchanged declared schema, and the previously registered view
-    (whose plan captured the file listing at creation) is still
-    exact."""
+    dataset path, the manifest entry's schema and count, and the
+    dataset directory's mtime. EVERY mutation lane replaces files
+    under the dataset path (staged write + atomic swap), which bumps
+    the directory mtime — the same mtime-parity contract the
+    incremental builder (A15) already relies on — so an unchanged
+    key ⟺ unchanged files AND unchanged declared schema, and the
+    previously registered view (whose plan captured the file listing
+    at creation) is still exact."""
     try:
-        st = os.stat(info["path"])
+        st = os.stat(path)
         mt = (st.st_mtime_ns, st.st_ino)
     except OSError:
         mt = None
     return (
-        info.get("path"),
+        path,
         json.dumps(info.get("schema"), sort_keys=True) if info.get("schema") else None,
         info.get("count"),
         mt,
@@ -1267,7 +1271,7 @@ def load_workspace(spark: SparkSession, ws_dir: str) -> dict:
         )
         LAST_WS_DIR = ws_dir
 
-    def _read(info):
+    def _read(path, info):
         # The manifest carries the authoritative schema (written at
         # build time and kept current by every schema-changing DDL),
         # so view registration needs NO parquet footer read — at 14
@@ -1280,8 +1284,8 @@ def load_workspace(spark: SparkSession, ws_dir: str) -> dict:
 
             return spark.read.schema(
                 StructType.fromJson(schema_json)
-            ).parquet(info["path"])
-        return spark.read.parquet(info["path"])
+            ).parquet(path)
+        return spark.read.parquet(path)
 
     # single-slot memo: valid only for (this session, this ws_dir) —
     # switching workspaces re-registers everything, because temp-view
@@ -1313,12 +1317,13 @@ def load_workspace(spark: SparkSession, ws_dir: str) -> dict:
         changed = False
         slims = []
         for label, info in manifest[kind].items():
-            key = _label_view_key(info)
+            path = dataset_path(ws_dir, kind, label)
+            key = _label_view_key(path, info)
             got = reg.get(label)
             if got is not None and got[0] == key:
                 slims.append(got[1])
                 continue
-            df = _read(info)
+            df = _read(path, info)
             df.createOrReplaceTempView(f"{prefix}{label}")
             slim = slim_fn(df)
             reg[label] = (key, slim)

@@ -15,8 +15,6 @@
   the >cap path (limit(cap+1).collect() probe, then the distributed
   write recomputed it); the probe now runs on a persisted frame so
   the rows written are the rows probed.
-- LOW streaming.stateful stop_when_stable silently returned a partial
-  sink when the drain deadline expired; it now raises TimeoutError.
 """
 
 from __future__ import annotations

@@ -331,100 +331,110 @@ def test_tws_warm_start_initial_state_suppresses_batch_era(spark, sf_small):
     assert len(warm) < len(cold_full)
 
 
-def test_tws_substring_contamination_matches_batch(spark, sf_small):
-    """Round 13 (VERDICT r12 #4): the drained contamination stream is
-    BYTE-EQUAL to the batch exact-substring pipeline restricted to
-    (reference → stream) anchor pairs — same positional grams, same
-    ref-only caps, same assemble_spans — and the reference postings
-    never change during the stream (read-only MapState)."""
-    from pyspark.sql import functions as F
-
-    from biodwh2_arcadedb_server_spark.operators import dedup
-    from biodwh2_arcadedb_server_spark.sources.registry import load_table
-    from biodwh2_arcadedb_server_spark.streaming.stateful import (
-        HAS_TRANSFORM_WITH_STATE,
-        TWS_UNAVAILABLE_REASON,
-        run_finite_substring_contamination,
-    )
-
-    if not HAS_TRANSFORM_WITH_STATE:
-        pytest.skip(TWS_UNAVAILABLE_REASON)
-    REF, K, MINLEN, MAXDF = 100, 8, 20, 16
-    got = sorted(
+def _spans(df):
+    return sorted(
         (r.doc_id, r.span_start, r.span_end, r.span_tokens)
-        for r in run_finite_substring_contamination(
-            spark, sf_small, ref_below=REF, n_chunks=2,
-            k=K, min_len=MINLEN, max_df=MAXDF,
-            name="contam_eq_test", state_parts=4,
-        ).collect()
+        for r in df.collect()
     )
 
-    # batch twin: ref-capped postings × stream grams, restricted pair
-    docs = load_table(spark, sf_small, "documents")
+
+def _contam_twin(docs, ref_below, db_lo, db_hi, k, min_len, max_df):
+    """Batch twin of a contamination drain: the ref-capped postings of
+    docs < ``ref_below`` joined to the positional grams of docs in
+    [db_lo, db_hi), assembled by the same ``assemble_spans``."""
+    from biodwh2_arcadedb_server_spark.operators import dedup
+
     post = dedup.reference_postings(
-        docs.where(F.col("doc_id") < REF), "doc_id", "text",
-        k=K, max_df=MAXDF,
+        docs.where(F.col("doc_id") < ref_below), "doc_id", "text",
+        k=k, max_df=max_df,
     )
     ref_rows = post.select(
-        "gh",
-        F.explode(F.arrays_zip("refs", "poss")).alias("_z"),
+        "gh", F.explode(F.arrays_zip("refs", "poss")).alias("_z")
     ).select("gh", F.col("_z.refs").alias("da"), F.col("_z.poss").alias("pa"))
-    stream_grams = dedup.positional_shingles(
-        docs.where(F.col("doc_id") >= REF), "doc_id", "text", K
+    grams = dedup.positional_shingles(
+        docs.where((F.col("doc_id") >= db_lo) & (F.col("doc_id") < db_hi)),
+        "doc_id", "text", k,
     ).select("gh", F.col("_id").alias("db"), F.col("pos").alias("pb"))
-    anchors = ref_rows.join(stream_grams, "gh").drop("gh")
-    want = sorted(
-        (r.doc_id, r.span_start, r.span_end, r.span_tokens)
-        for r in dedup.assemble_spans(anchors, K, MINLEN).collect()
+    return dedup.assemble_spans(
+        ref_rows.join(grams, "gh").drop("gh"), k, min_len
     )
-    assert got == want and got, "drained spans must match the batch twin"
 
 
-def test_tws_contamination_ttl_smoke(spark, sf_small):
-    """State TTL opt-in (ProcessingTime mode): a long TTL must not
-    expire anything during the short drain — same spans as TTL-off —
-    and the query terminates under availableNow (state TTL, unlike
-    ProcessingTimeTimeout timers, schedules no extra batches)."""
+def test_substring_contamination_matches_batch(spark, sf_small, monkeypatch):
+    """The drained contamination stream (a stateless stream-static
+    join of stream grams to the reference postings) is BYTE-EQUAL to
+    the batch exact-substring pipeline restricted to (reference →
+    stream) anchor pairs — same positional grams, same ref-only caps,
+    same assemble_spans — on BOTH sides of the broadcast size gate:
+    broadcast under the default threshold, shuffled with
+    auto-broadcast disabled. An empty reference index drains to no
+    spans."""
+    from pyspark.sql.streaming.readwriter import DataStreamWriter
+
     from biodwh2_arcadedb_server_spark.streaming.stateful import (
-        HAS_TRANSFORM_WITH_STATE,
-        TWS_UNAVAILABLE_REASON,
         run_finite_substring_contamination,
     )
 
-    if not HAS_TRANSFORM_WITH_STATE:
-        pytest.skip(TWS_UNAVAILABLE_REASON)
-    base = sorted(
-        (r.doc_id, r.span_start, r.span_end)
-        for r in run_finite_substring_contamination(
-            spark, sf_small, ref_below=100, n_chunks=2,
-            name="contam_nottl", state_parts=4,
-        ).collect()
+    REF, K, MINLEN, MAXDF = 100, 8, 20, 16
+    started = []
+    real_start = DataStreamWriter.start
+
+    def capture_start(self, *a, **kw):
+        started.append(real_start(self, *a, **kw))
+        return started[-1]
+
+    monkeypatch.setattr(DataStreamWriter, "start", capture_start)
+
+    def drain(name, ref_below=REF):
+        spans = _spans(
+            run_finite_substring_contamination(
+                spark, sf_small, ref_below=ref_below, n_chunks=2,
+                k=K, min_len=MINLEN, max_df=MAXDF,
+                name=name, state_parts=4,
+            )
+        )
+        return spans, started[-1]._jsq.explainInternal(False)
+
+    want = _spans(
+        _contam_twin(
+            load_table(spark, sf_small, "documents"),
+            REF, REF, 1 << 62, K, MINLEN, MAXDF,
+        )
     )
-    with_ttl = sorted(
-        (r.doc_id, r.span_start, r.span_end)
-        for r in run_finite_substring_contamination(
-            spark, sf_small, ref_below=100, n_chunks=2,
-            name="contam_ttl", state_parts=4, ttl_ms=3_600_000,
-        ).collect()
-    )
-    assert with_ttl == base
+    assert want, "fixture too weak: no reference → stream spans"
+
+    got, plan = drain("contam_eq_test")
+    assert got == want, "drained spans must match the batch twin"
+    assert "BroadcastHashJoin" in plan
+
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        got, plan = drain("contam_shuffle_test")
+    finally:
+        spark.conf.set(key, prev)
+    assert got == want, "shuffled join must match the batch twin"
+    assert "BroadcastHashJoin" not in plan and "SortMergeJoin" in plan
+
+    assert drain("contam_empty_test", ref_below=0)[0] == []
 
 
 def test_contamination_cell_derivation_and_n_cells_64(spark, sf_small):
     """Round 14 (VERDICT r13 #6): n_cells is a sharding knob with a
     size-derived default, not a tuning constant. The derivation
     follows the SCALE.md contract (ceil(postings/100k) clamped to
-    [8, 65536]); and a drain at n_cells=64 is byte-equal to the batch
-    twin — cell count can never change results, only state layout."""
-    from pyspark.sql import functions as F
+    [8, 65536]); and a ROTATING drain (the one contamination op whose
+    state the cells shard) at n_cells=64 is byte-equal to the
+    two-epoch batch twin — cell count can never change results, only
+    state layout."""
+    import pytest
 
-    from biodwh2_arcadedb_server_spark.operators import dedup
-    from biodwh2_arcadedb_server_spark.sources.registry import load_table
     from biodwh2_arcadedb_server_spark.streaming.stateful import (
         HAS_TRANSFORM_WITH_STATE,
         TWS_UNAVAILABLE_REASON,
         derive_contamination_cells,
-        run_finite_substring_contamination,
+        run_finite_substring_contamination_rotating,
     )
 
     assert derive_contamination_cells(0) == 8
@@ -435,30 +445,20 @@ def test_contamination_cell_derivation_and_n_cells_64(spark, sf_small):
 
     if not HAS_TRANSFORM_WITH_STATE:
         pytest.skip(TWS_UNAVAILABLE_REASON)
-    REF, K, MINLEN, MAXDF = 100, 8, 20, 16
-    got = sorted(
-        (r.doc_id, r.span_start, r.span_end, r.span_tokens)
-        for r in run_finite_substring_contamination(
-            spark, sf_small, ref_below=REF, n_chunks=2,
+    E0, E1, K, MINLEN, MAXDF = 150, 250, 8, 20, 16
+    got = _spans(
+        run_finite_substring_contamination_rotating(
+            spark, sf_small, epoch0_below=E0, epoch1_below=E1,
             k=K, min_len=MINLEN, max_df=MAXDF,
-            name="contam_c64_test", state_parts=4, n_cells=64,
-        ).collect()
+            name="contam_rot_c64_test", state_parts=4, n_cells=64,
+        )
     )
     docs = load_table(spark, sf_small, "documents")
-    post = dedup.reference_postings(
-        docs.where(F.col("doc_id") < REF), "doc_id", "text",
-        k=K, max_df=MAXDF,
-    )
-    ref_rows = post.select(
-        "gh", F.explode(F.arrays_zip("refs", "poss")).alias("_z"),
-    ).select("gh", F.col("_z.refs").alias("da"), F.col("_z.poss").alias("pa"))
-    stream_grams = dedup.positional_shingles(
-        docs.where(F.col("doc_id") >= REF), "doc_id", "text", K
-    ).select("gh", F.col("_id").alias("db"), F.col("pos").alias("pb"))
-    anchors = ref_rows.join(stream_grams, "gh").drop("gh")
-    want = sorted(
-        (r.doc_id, r.span_start, r.span_end, r.span_tokens)
-        for r in dedup.assemble_spans(anchors, K, MINLEN).collect()
+    mid = (E1 + int(docs.agg(F.max("doc_id")).first()[0])) // 2
+    want = _spans(
+        _contam_twin(docs, E0, E1, mid, K, MINLEN, MAXDF).unionByName(
+            _contam_twin(docs, E1, mid, 1 << 62, K, MINLEN, MAXDF)
+        )
     )
     assert got == want and got
 
@@ -471,10 +471,8 @@ def test_tws_contamination_rotation_applies_mid_stream(spark, sf_small):
     docs vs epoch 0, chunk-2 docs vs epoch 1 — and the rotation must
     be OBSERVABLE: at least one chunk-2 span anchored only by an
     epoch-1-only reference doc (id in [E0, E1))."""
-    from pyspark.sql import functions as F
+    import pytest
 
-    from biodwh2_arcadedb_server_spark.operators import dedup
-    from biodwh2_arcadedb_server_spark.sources.registry import load_table
     from biodwh2_arcadedb_server_spark.streaming.stateful import (
         HAS_TRANSFORM_WITH_STATE,
         TWS_UNAVAILABLE_REASON,
@@ -484,13 +482,12 @@ def test_tws_contamination_rotation_applies_mid_stream(spark, sf_small):
     if not HAS_TRANSFORM_WITH_STATE:
         pytest.skip(TWS_UNAVAILABLE_REASON)
     E0, E1, K, MINLEN, MAXDF = 150, 250, 8, 20, 16
-    got = sorted(
-        (r.doc_id, r.span_start, r.span_end, r.span_tokens)
-        for r in run_finite_substring_contamination_rotating(
+    got = _spans(
+        run_finite_substring_contamination_rotating(
             spark, sf_small, epoch0_below=E0, epoch1_below=E1,
             k=K, min_len=MINLEN, max_df=MAXDF,
             name="contam_rot_test", state_parts=4,
-        ).collect()
+        )
     )
 
     docs = load_table(spark, sf_small, "documents")
@@ -498,41 +495,17 @@ def test_tws_contamination_rotation_applies_mid_stream(spark, sf_small):
     mid = (E1 + int(max_id)) // 2
 
     def batch_epoch(ref_below, db_lo, db_hi):
-        post = dedup.reference_postings(
-            docs.where(F.col("doc_id") < ref_below), "doc_id", "text",
-            k=K, max_df=MAXDF,
-        )
-        ref_rows = post.select(
-            "gh", F.explode(F.arrays_zip("refs", "poss")).alias("_z")
-        ).select(
-            "gh", F.col("_z.refs").alias("da"), F.col("_z.poss").alias("pa")
-        )
-        grams = dedup.positional_shingles(
-            docs.where(
-                (F.col("doc_id") >= db_lo) & (F.col("doc_id") < db_hi)
-            ),
-            "doc_id", "text", K,
-        ).select("gh", F.col("_id").alias("db"), F.col("pos").alias("pb"))
-        return dedup.assemble_spans(ref_rows.join(grams, "gh").drop("gh"), K, MINLEN)
+        return _contam_twin(docs, ref_below, db_lo, db_hi, K, MINLEN, MAXDF)
 
-    want = sorted(
-        (r.doc_id, r.span_start, r.span_end, r.span_tokens)
-        for r in batch_epoch(E0, E1, mid)
-        .unionByName(batch_epoch(E1, mid, 1 << 62))
-        .collect()
+    want = _spans(
+        batch_epoch(E0, E1, mid).unionByName(batch_epoch(E1, mid, 1 << 62))
     )
     assert got == want and got, "rotated drain must match the two-epoch twin"
 
     # the rotation must be observable: some chunk-2 doc span exists
     # ONLY because an epoch-1 reference doc (id in [E0, E1)) matched
-    only_e1 = sorted(
-        (r.doc_id, r.span_start, r.span_end, r.span_tokens)
-        for r in batch_epoch(E1, mid, 1 << 62).collect()
-    )
-    pre_rotation_view = sorted(
-        (r.doc_id, r.span_start, r.span_end, r.span_tokens)
-        for r in batch_epoch(E0, mid, 1 << 62).collect()
-    )
+    only_e1 = _spans(batch_epoch(E1, mid, 1 << 62))
+    pre_rotation_view = _spans(batch_epoch(E0, mid, 1 << 62))
     assert only_e1 != pre_rotation_view, (
         "fixture too weak: epoch rotation changed nothing for chunk 2 — "
         "pick epochs so the new reference docs actually match"

@@ -120,3 +120,39 @@ def test_update_unknown_property_clean_error(spark, txn_ws):
         run("UPDATE Nation REMOVE ghost WHERE natural_key = 0")
     with pytest.raises(ArcadeSQLError, match="unknown propert"):
         run("UPDATE EDGE IN_REGION SET ghost = 1")
+
+
+def test_txn_insert_then_delete_same_vertex(spark, txn_ws):
+    """Every statement of a transaction applies to the shadow copy:
+    a DELETE staged after an INSERT of the same vertex must see (and
+    remove) the inserted record. Reading the dataset path from the
+    manifest sent the DELETE to the live workspace, so it matched
+    nothing and the committed vertex survived."""
+    before = _nation_count(spark)
+    mgr = TransactionManager()
+    sid = mgr.begin(txn_ws)
+    mgr.stage(sid, "INSERT INTO Nation SET natural_key = 980, n_name = 'T'")
+    mgr.stage(sid, "DELETE VERTEX Nation WHERE natural_key = 980")
+    assert mgr.commit(spark, sid, allow_writes=True) == 2
+    rows = execute(
+        spark, "SELECT natural_key FROM Nation WHERE natural_key = 980"
+    ).collect()
+    assert rows == []
+    assert _nation_count(spark) == before
+
+
+def test_txn_rolled_back_delete_leaves_live_workspace(spark, txn_ws):
+    """A transaction whose later statement fails is rolled back: the
+    live workspace keeps every record, including ones an earlier
+    statement deleted in the shadow (and the edges that delete
+    cascaded to)."""
+    before = _nation_count(spark)
+    edges_before = spark.table("e_IN_REGION").count()
+    mgr = TransactionManager()
+    sid = mgr.begin(txn_ws)
+    mgr.stage(sid, "DELETE VERTEX Nation WHERE natural_key = 1")
+    mgr.stage(sid, "UPDATE Nation SET ghost = 1 WHERE natural_key = 0")
+    with pytest.raises(TransactionError, match="rolled back"):
+        mgr.commit(spark, sid, allow_writes=True)
+    assert _nation_count(spark) == before
+    assert spark.table("e_IN_REGION").count() == edges_before
