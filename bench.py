@@ -291,12 +291,10 @@ CACHE_FAMILIES = [
     # q183 emits it, q187 applies it — one detection pass per session
     {"q183_exact_substring_spans", "q187_exact_substring_removal"},
 ]
-# Union kept for callers that only need membership; break-deferral is
-# strictly PER-FAMILY (ADVICE r14: a union-based check would fuse two
-# distinct families into one deferral block if they ever became
-# adjacent in HEADLINE). Families must stay pairwise-disjoint
-# (pytest invariant, tests/test_bench.py).
-CACHE_FAMILY = set().union(*CACHE_FAMILIES)
+# Break-deferral is strictly PER-FAMILY (ADVICE r14: a union-based
+# check would fuse two distinct families into one deferral block if
+# they ever became adjacent in HEADLINE). Families must stay
+# pairwise-disjoint (pytest invariant, tests/test_bench.py).
 
 
 class StageMeter:

@@ -2581,19 +2581,17 @@ def _execute_dml(
             "DML requires workspace_dir=<workspace path> so the mutation "
             "can rewrite the label dataset"
         )
-    import os
-
     from biodwh2_arcadedb_server_spark import workspace as ws
 
     pred = F.expr(stmt.where) if stmt.where else F.lit(True)
     with _DML_LOCK:
         return _execute_dml_locked(
-            spark, stmt, workspace_dir, pred, ws, os, refresh_views
+            spark, stmt, workspace_dir, pred, ws, refresh_views
         )
 
 
 def _execute_dml_locked(
-    spark, stmt, workspace_dir, pred, ws, os, refresh_views=True
+    spark, stmt, workspace_dir, pred, ws, refresh_views=True
 ):
     if stmt.kind.startswith("ddl_"):
         n_ddl = 0
@@ -2699,7 +2697,7 @@ def _execute_dml_locked(
             # recursion must NOT repoint the live session views at the
             # uncommitted shadow workspace (dirty read)
             res = _execute_dml_locked(
-                spark, ins, workspace_dir, pred, ws, os, refresh_views
+                spark, ins, workspace_dir, pred, ws, refresh_views
             )
             if ret_mode == "after":
                 # RETURN AFTER on the upsert-insert branch: the WHERE's
@@ -2735,18 +2733,15 @@ def _execute_dml_locked(
             return before_rows
     elif stmt.kind == "update_edge":
         try:
-            n = ws.update_edges(
-                spark, workspace_dir, stmt.label, pred,
+            n = ws.update_rows(
+                spark, workspace_dir, "edges", stmt.label, pred,
                 {col: F.expr(expr) for col, expr in stmt.assignments},
             )
         except ValueError as exc:  # structural-column guard
             raise ArcadeSQLError(str(exc)) from exc
     elif stmt.kind == "delete_edge":
         if stmt.edge_from is not None:
-            import json as _json
-
-            with open(os.path.join(workspace_dir, "manifest.json")) as mh:
-                e_info = _json.load(mh)["edges"].get(stmt.label)
+            e_info = ws.read_manifest(workspace_dir)["edges"].get(stmt.label)
             if e_info is None:
                 raise ArcadeSQLError(f"unknown edge type {stmt.label!r}")
             s_df, _ = _endpoint_df(
@@ -2756,16 +2751,12 @@ def _execute_dml_locked(
                 spark, ws, stmt.edge_to, e_info["dst_label"], "dst"
             )
             n = ws.delete_edges_between(
-                spark, workspace_dir, stmt.label, s_df, d_df, pred,
-                info=e_info,
+                spark, workspace_dir, stmt.label, s_df, d_df, pred
             )
         else:
             n = ws.delete_edges(spark, workspace_dir, stmt.label, pred)
     elif stmt.kind == "insert_edge":
-        import json as _json
-
-        with open(os.path.join(workspace_dir, "manifest.json")) as mh:
-            manifest = _json.load(mh)
+        manifest = ws.read_manifest(workspace_dir)
         if stmt.label not in manifest["edges"]:
             raise ArcadeSQLError(
                 f"unknown edge type {stmt.label!r} "
@@ -2851,11 +2842,7 @@ def _execute_dml_locked(
         rows_df = frames[0]
         for fr in frames[1:]:
             rows_df = rows_df.unionByName(fr)
-        with open(os.path.join(workspace_dir, "manifest.json")) as mh:
-            import json as _json
-
-            before = _json.load(mh)["nodes"][stmt.label]["count"]
-        n = ws.insert_nodes(spark, workspace_dir, stmt.label, rows_df) - before
+        n = ws.insert_nodes(spark, workspace_dir, stmt.label, rows_df)
     if refresh_views:
         ws.load_workspace(spark, workspace_dir)
     return local_df(
@@ -2992,9 +2979,6 @@ def _materialize_schema_sources(spark: SparkSession, sel: _Select) -> None:
         _materialize_schema_sources(spark, sel.subquery)
     if sel.schema_source is None:
         return
-    import json as _json
-    import os as _os
-
     from biodwh2_arcadedb_server_spark import workspace as ws
 
     which = sel.schema_source
@@ -3003,8 +2987,7 @@ def _materialize_schema_sources(spark: SparkSession, sel: _Select) -> None:
             f"schema:{which} requires a loaded workspace "
             "(load_workspace records the manifest location)"
         )
-    with open(_os.path.join(ws.LAST_WS_DIR, "manifest.json")) as mh:
-        manifest = _json.load(mh)
+    manifest = ws.read_manifest(ws.LAST_WS_DIR)
 
     def _props(info, internals) -> list[str]:
         schema_json = info.get("schema")

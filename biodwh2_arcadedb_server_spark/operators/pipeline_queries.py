@@ -248,8 +248,8 @@ def q84_stream_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # granularity; at production state volumes scale cells/partitions
     # back up (docstring sizing rule). State store: HDFS-backed wins
     # at THIS volume (RocksDB 6.7s vs 5.4s pre-kernel), but the 10x-
-    # state re-measure (bench/q84_experiments.py at /tmp/sfconv_x10,
-    # ROADMAP r6-b) shows the crossover: rocksdb_64c_8p 5.6s beats
+    # state re-measure (`git show 286b2a4:bench/q84_experiments.py`
+    # on a 10x documents set, ROADMAP r6-b) shows the crossover: rocksdb_64c_8p 5.6s beats
     # every HDFS variant (best 6.4s) and the un-scaled sf0.1 winner
     # degrades to 10.4s — both halves of the sizing rule, measured
     # (bench/sf1.json q84_state_store_x10).

@@ -114,7 +114,8 @@ def q44_tpch_q5_shape(spark: SparkSession, sf_dir: str) -> DataFrame:
     nation — the deep snowflake join (lineitem⋈orders⋈customer⋈
     supplier⋈nation⋈region).
 
-    Plan shape (round-9 profile, bench/q44_profile.json): the sf3
+    Plan shape (round-9 profile,
+    ``git show 286b2a4:bench/q44_profile.json``): the sf3
     cost is reduce-side CPU in the joint probe+agg stage, so the
     rewrite minimizes work PER FACT ROW instead of per join:
     region folds into nation (one tiny broadcast), customer folds

@@ -1203,6 +1203,10 @@ class QueryServer:
                 import shutil
                 import tempfile
 
+                from biodwh2_arcadedb_server_spark.workspace import (
+                    write_manifest,
+                )
+
                 n = int(self.headers.get("Content-Length", "0"))
                 req = json.loads(self.rfile.read(n) or b"{}")
                 if re.fullmatch(
@@ -1273,11 +1277,9 @@ class QueryServer:
                                      "another name",
                         })
                         return
-                    with open(os.path.join(dbdir, "manifest.json"), "w") as fh:
-                        json.dump(
-                            {"nodes": {}, "edges": {}, "rid_buckets": []},
-                            fh,
-                        )
+                    write_manifest(
+                        dbdir, {"nodes": {}, "edges": {}, "rid_buckets": []}
+                    )
                     server.databases[name] = dbdir
                     server.record_event(
                         "INFO", "Management", f"create database {name}"

@@ -23,9 +23,11 @@ declarative dataset rewrite + atomic swap):
   granularity).
 - ``commit``   — optimistic check (the manifest fingerprint must be
   unchanged, else 409-style conflict), then the staged statements
-  apply to a SHADOW copy of the workspace (hardlinked parquet —
-  O(#files) metadata, zero data copy; mutated datasets are rewritten
-  beside the links by the normal swap path). Only after every
+  apply to a SHADOW copy of the workspace: every file hardlinked —
+  O(#files) metadata, zero data copy. No lane writes a workspace file
+  in place (datasets are rewritten beside the links and swapped, the
+  manifest is replaced whole by ``workspace.write_manifest``), so the
+  shadow's changes never reach the live inodes. Only after every
   statement succeeds does the shadow swap in under the engine-wide
   DML lock — all-or-nothing: a failing statement discards the shadow
   and the live workspace is untouched.
@@ -39,6 +41,7 @@ DML; the final swap is two directory renames.
 from __future__ import annotations
 
 import hashlib
+import json
 import os
 import secrets
 import shutil
@@ -46,6 +49,8 @@ import threading
 import time
 
 from pyspark.sql import SparkSession
+
+from biodwh2_arcadedb_server_spark import workspace as ws_mod
 
 
 class TransactionError(ValueError):
@@ -65,26 +70,23 @@ IDLE_TTL_SECONDS = 30 * 60
 
 
 def _manifest_fingerprint(ws_dir: str) -> str:
-    path = os.path.join(ws_dir, "manifest.json")
-    with open(path, "rb") as fh:
-        return hashlib.sha256(fh.read()).hexdigest()
+    manifest = json.dumps(ws_mod.read_manifest(ws_dir), sort_keys=True)
+    return hashlib.sha256(manifest.encode()).hexdigest()
 
 
 def _shadow_copy(base: str, shadow: str) -> None:
-    """Copy the workspace with hardlinked parquet data files.
+    """Copy the workspace as hardlinks, every file included.
 
-    Parquet files are immutable here (every mutation writes NEW files
-    and swaps directories), so hardlinks are safe and free. JSON
-    metadata (manifest.json, index records) is REAL-copied: the DML
-    paths open it for write, which would truncate a shared inode."""
-
-    def _copy(src: str, dst: str) -> None:
-        if src.endswith(".json"):
-            shutil.copy2(src, dst)
-        else:
-            os.link(src, dst)
-
-    shutil.copytree(base, shadow, copy_function=_copy)
+    No workspace file is ever written in place: mutations write NEW
+    parquet files and swap directories, and the manifest is replaced
+    whole (tmp file + ``os.replace``). A write in the shadow therefore
+    replaces the shadow's link and never touches the live inode. A
+    replace-write's temp file is skipped: it is either mid-write or
+    about to be renamed away."""
+    shutil.copytree(
+        base, shadow, copy_function=os.link,
+        ignore=shutil.ignore_patterns(f"*{ws_mod.TMP_SUFFIX}"),
+    )
 
 
 class TransactionManager:
@@ -95,9 +97,11 @@ class TransactionManager:
         self._lock = threading.Lock()
 
     def begin(self, workspace_dir: str) -> str:
-        if not workspace_dir or not os.path.isfile(
-            os.path.join(workspace_dir, "manifest.json")
-        ):
+        try:
+            fingerprint = workspace_dir and _manifest_fingerprint(workspace_dir)
+        except OSError:
+            fingerprint = None
+        if not fingerprint:
             raise TransactionError(
                 "no workspace loaded — transactions require a "
                 "workspace-backed server"
@@ -116,7 +120,7 @@ class TransactionManager:
             sid = secrets.token_urlsafe(12)
             self._txns[sid] = {
                 "ws": workspace_dir,
-                "fingerprint": _manifest_fingerprint(workspace_dir),
+                "fingerprint": fingerprint,
                 "statements": [],
                 "touched": now,
             }
@@ -168,7 +172,6 @@ class TransactionManager:
         (the read-only client-library pattern) regardless of
         allow_writes."""
         from biodwh2_arcadedb_server_spark import arcadesql
-        from biodwh2_arcadedb_server_spark import workspace as ws_mod
 
         with self._lock:
             txn = self._txns.pop(sid or "", None)

@@ -144,6 +144,44 @@ def dataset_path(ws_dir: str, kind: str, label: str) -> str:
     return os.path.join(ws_dir, kind, label)
 
 
+# The workspace's schema catalog: types, schemas, counts, indexes and
+# RID bucket order. Only read_manifest/write_manifest touch the file.
+_MANIFEST = "manifest.json"
+# Suffix of the temp file a replace-write fills before its os.replace;
+# a transaction's shadow copy skips such files.
+TMP_SUFFIX = ".tmp"
+
+
+def _replace_text(path: str, text: str) -> None:
+    """Write ``path`` as a NEW file swapped in by ``os.replace``, never
+    in place: concurrent readers see the old or the new content whole,
+    and a transaction shadow's hardlink keeps the old inode."""
+    tmp = path + TMP_SUFFIX
+    with open(tmp, "w") as fh:
+        fh.write(text)
+    os.replace(tmp, path)
+
+
+def read_manifest(ws_dir: str) -> dict:
+    """The workspace manifest; safe without the DML lock, because every
+    write replaces the file whole."""
+    with open(os.path.join(ws_dir, _MANIFEST)) as mh:
+        return json.load(mh)
+
+
+def write_manifest(ws_dir: str, manifest: dict) -> None:
+    """Replace the workspace manifest atomically (see _replace_text)."""
+    _replace_text(os.path.join(ws_dir, _MANIFEST), json.dumps(manifest, indent=2))
+
+
+def label_kind(manifest: dict, label: str) -> str:
+    """The manifest section ("nodes" or "edges") declaring ``label``."""
+    for kind in ("nodes", "edges"):
+        if label in manifest[kind]:
+            return kind
+    raise ValueError(f"unknown type {label!r}")
+
+
 def _dataset_row_count(spark: SparkSession, path: str) -> int:
     """Row count for a freshly written dataset. Small datasets (the
     interactive create/DDL path) answer DRIVER-SIDE from the parquet
@@ -320,24 +358,19 @@ def build_workspace(
     under ``"rebuilt"`` (not persisted).
     """
     checksum_file = os.path.join(ws_dir, "checksum.txt")
-    manifest_file = os.path.join(ws_dir, "manifest.json")
     checksum = source_checksum(src_dir)
-    if not force and os.path.exists(checksum_file) and os.path.exists(manifest_file):
-        with open(checksum_file) as fh:
-            if fh.read().strip() == checksum:
-                with open(manifest_file) as mh:
-                    cached = json.load(mh)
-                cached["rebuilt"] = []
-                return cached
-
     old: dict = {"nodes": {}, "edges": {}}
     if force:
         # A14 destructive overwrite (deleteOldDatabase, ArcadeDBService.java:112-122)
         if os.path.exists(ws_dir):
             shutil.rmtree(ws_dir)
-    elif os.path.exists(manifest_file):
-        with open(manifest_file) as mh:
-            old = json.load(mh)
+    elif os.path.exists(os.path.join(ws_dir, _MANIFEST)):
+        old = read_manifest(ws_dir)
+        if os.path.exists(checksum_file):
+            with open(checksum_file) as fh:
+                if fh.read().strip() == checksum:
+                    old["rebuilt"] = []
+                    return old
     os.makedirs(ws_dir, exist_ok=True)
 
     def _src_hash(table: str) -> str:
@@ -423,10 +456,8 @@ def build_workspace(
     )
     manifest["rid_buckets"] = buckets
 
-    with open(manifest_file, "w") as mh:
-        json.dump(manifest, mh, indent=2)
-    with open(checksum_file, "w") as fh:
-        fh.write(checksum)
+    write_manifest(ws_dir, manifest)
+    _replace_text(checksum_file, checksum)
     manifest["rebuilt"] = rebuilt
     return manifest
 
@@ -447,15 +478,6 @@ def _rewrite_dataset(df: DataFrame, path: str) -> None:
     df.write.mode("overwrite").parquet(tmp)
     shutil.rmtree(path)
     os.replace(tmp, path)
-
-
-def _update_manifest_count(ws_dir: str, kind: str, label: str, count: int) -> None:
-    manifest_file = os.path.join(ws_dir, "manifest.json")
-    with open(manifest_file) as mh:
-        manifest = json.load(mh)
-    manifest[kind][label]["count"] = count
-    with open(manifest_file, "w") as mh:
-        json.dump(manifest, mh, indent=2)
 
 
 def _append_via_tmp(df: DataFrame, path: str, driver_cap: int = 10_000) -> int:
@@ -520,13 +542,15 @@ def _append_via_tmp(df: DataFrame, path: str, driver_cap: int = 10_000) -> int:
 def insert_nodes(spark: SparkSession, ws_dir: str, label: str, rows: DataFrame) -> int:
     """CREATE VERTEX: append rows (node_id derived from natural_key;
     existing ids are rejected rows — duplicates silently skipped, the
-    reference's error-tolerant ingest posture, A9). Returns new count.
+    reference's error-tolerant ingest posture, A9). Returns rows
+    inserted.
 
     Scale: inserts are mode("append") — new parquet files land next
     to the dataset, O(inserted) IO with no rewrite of existing data
     (at 100 TB an insert must never touch the other 100 TB). The
     anti-join against existing ids shuffles only the 8-byte id
     column."""
+    manifest = read_manifest(ws_dir)
     path = dataset_path(ws_dir, "nodes", label)
     cur = spark.read.parquet(path)
     new = rows.withColumn("node_id", node_id(label, F.col("natural_key"))).withColumn(
@@ -547,36 +571,58 @@ def insert_nodes(spark: SparkSession, ws_dir: str, label: str, rows: DataFrame) 
         .join(cur.select("node_id"), "node_id", "left_anti")
     )
     n_ins = _append_via_tmp(new, path)
-    with open(os.path.join(ws_dir, "manifest.json")) as mh:
-        n = json.load(mh)["nodes"][label]["count"] + n_ins
-    _update_manifest_count(ws_dir, "nodes", label, n)
-    return n
+    if n_ins:
+        manifest["nodes"][label]["count"] += n_ins
+        write_manifest(ws_dir, manifest)
+    return n_ins
 
 
-def update_nodes(
-    spark: SparkSession, ws_dir: str, label: str, predicate: F.Column, assignments: dict[str, F.Column]
+# UPDATE contract per kind: the identity columns no assignment may
+# touch, how the error names the record type, and the refusal wording.
+_UPDATE_RULES = {
+    "nodes": (
+        frozenset({"node_id", "node_id2", "label", "natural_key"}),
+        "vertex",
+        "cannot UPDATE identity column(s) {} — node ids derive "
+        "from (label, natural_key); DELETE + INSERT instead",
+    ),
+    "edges": (
+        frozenset({"src", "src2", "dst", "dst2", "label"}),
+        "edge",
+        "cannot UPDATE EDGE structural column(s) {} — "
+        "DELETE EDGE + CREATE EDGE instead",
+    ),
+}
+
+
+def update_rows(
+    spark: SparkSession,
+    ws_dir: str,
+    kind: str,
+    label: str,
+    predicate: F.Column,
+    assignments: dict[str, F.Column],
 ) -> int:
-    """UPDATE ... SET ... WHERE: rewrite the label dataset with the
-    assignments applied to matching rows. Returns rows touched.
-    Identity columns are immutable — ids DERIVE from (label,
-    natural_key), so rewriting the key without recomputing node_id
-    (and every referencing edge) would silently break the invariant
-    (round-7 review finding); use DELETE + INSERT, or ALTER TYPE for
-    label renames."""
-    frozen = {"node_id", "node_id2", "label", "natural_key"}
+    """UPDATE [EDGE] ... SET ... WHERE: rewrite the ``kind`` dataset
+    of ``label`` with the assignments applied to matching rows.
+    Returns rows touched. Identity columns are immutable — node ids
+    DERIVE from (label, natural_key), so rewriting the key without
+    recomputing node_id (and every referencing edge) would silently
+    break the invariant (round-7 review finding); use DELETE +
+    INSERT, or ALTER TYPE for label renames. Edge endpoints and the
+    label are immutable the same way — DELETE EDGE + CREATE EDGE
+    instead."""
+    frozen, type_word, refusal = _UPDATE_RULES[kind]
     bad = sorted(frozen & set(assignments))
     if bad:
-        raise ValueError(
-            f"cannot UPDATE identity column(s) {bad} — node ids derive "
-            "from (label, natural_key); DELETE + INSERT instead"
-        )
-    path = dataset_path(ws_dir, "nodes", label)
+        raise ValueError(refusal.format(bad))
+    path = dataset_path(ws_dir, kind, label)
     cur = spark.read.parquet(path)
     unknown = sorted(set(assignments) - set(cur.columns))
     if unknown:
         raise ValueError(
             f"unknown propert{'ies' if len(unknown) > 1 else 'y'} "
-            f"{unknown} on vertex type {label!r} — declare with "
+            f"{unknown} on {type_word} type {label!r} — declare with "
             "CREATE PROPERTY first"
         )
     # touched-count FOLDED into the rewrite via CollectMetrics
@@ -609,14 +655,21 @@ def update_nodes(
     return int(obs.get["touched"])
 
 
+def update_nodes(
+    spark: SparkSession, ws_dir: str, label: str, predicate: F.Column, assignments: dict[str, F.Column]
+) -> int:
+    """Vertex UPDATE: ``update_rows`` on the node datasets (the entry
+    point the dialect's UPDATE calls, and perfbench traces)."""
+    return update_rows(spark, ws_dir, "nodes", label, predicate, assignments)
+
+
 def delete_nodes(spark: SparkSession, ws_dir: str, label: str, predicate: F.Column) -> int:
     """DELETE VERTEX ... WHERE: drop matching nodes AND every edge
     touching them (ArcadeDB's DELETE VERTEX cascades to connected
     edges [B]). The cascade is a left_anti join per edge dataset on a
     1-column id set — broadcast when small, shuffle on the edge key
     otherwise. Returns nodes deleted."""
-    with open(os.path.join(ws_dir, "manifest.json")) as mh:
-        manifest = json.load(mh)
+    manifest = read_manifest(ws_dir)
     path = dataset_path(ws_dir, "nodes", label)
     cur = spark.read.parquet(path)
     doomed = cur.where(predicate).select("node_id").localCheckpoint(eager=True)
@@ -624,9 +677,8 @@ def delete_nodes(spark: SparkSession, ws_dir: str, label: str, predicate: F.Colu
     if n_del == 0:
         return 0
     _rewrite_dataset(cur.join(doomed, "node_id", "left_anti"), path)
-    _update_manifest_count(
-        ws_dir, "nodes", label, manifest["nodes"][label]["count"] - n_del
-    )
+    manifest["nodes"][label]["count"] -= n_del
+    write_manifest(ws_dir, manifest)
     for e_label, info in manifest["edges"].items():
         if label not in (info["src_label"], info["dst_label"]):
             continue
@@ -644,7 +696,8 @@ def delete_nodes(spark: SparkSession, ws_dir: str, label: str, predicate: F.Colu
         _rewrite_dataset(
             kept.observe(obs, F.count(F.lit(1)).alias("n")), e_path
         )
-        _update_manifest_count(ws_dir, "edges", e_label, int(obs.get["n"]))
+        info["count"] = int(obs.get["n"])
+        write_manifest(ws_dir, manifest)
     return n_del
 
 
@@ -656,8 +709,7 @@ def insert_edges(spark: SparkSession, ws_dir: str, label: str, rows: DataFrame) 
     null` posture (ArcadeDBService.java:241-243). Duplicates are NOT
     collapsed: ArcadeDB materializes one edge per statement. Returns
     edges appended."""
-    with open(os.path.join(ws_dir, "manifest.json")) as mh:
-        manifest = json.load(mh)
+    manifest = read_manifest(ws_dir)
     info = manifest["edges"][label]
     path = dataset_path(ws_dir, "edges", label)
     cur = spark.read.parquet(path)
@@ -691,57 +743,9 @@ def insert_edges(spark: SparkSession, ws_dir: str, label: str, rows: DataFrame) 
     # append, not rewrite: O(inserted) IO (100 TB posture)
     n_new = _append_via_tmp(new, path)
     if n_new:
-        _update_manifest_count(ws_dir, "edges", label, info["count"] + n_new)
+        info["count"] += n_new
+        write_manifest(ws_dir, manifest)
     return n_new
-
-
-def update_edges(
-    spark: SparkSession, ws_dir: str, label: str, predicate: F.Column, assignments: dict[str, F.Column]
-) -> int:
-    """UPDATE EDGE ... SET ... WHERE: rewrite the edge dataset with
-    the assignments applied to matching rows. Returns rows touched.
-    Endpoints and the label are immutable (same identity posture as
-    update_nodes) — DELETE EDGE + CREATE EDGE instead."""
-    frozen = {"src", "src2", "dst", "dst2", "label"}
-    bad = sorted(frozen & set(assignments))
-    if bad:
-        raise ValueError(
-            f"cannot UPDATE EDGE structural column(s) {bad} — "
-            "DELETE EDGE + CREATE EDGE instead"
-        )
-    path = dataset_path(ws_dir, "edges", label)
-    cur = spark.read.parquet(path)
-    unknown = sorted(set(assignments) - set(cur.columns))
-    if unknown:
-        raise ValueError(
-            f"unknown propert{'ies' if len(unknown) > 1 else 'y'} "
-            f"{unknown} on edge type {label!r} — declare with "
-            "CREATE PROPERTY first"
-        )
-    # same CollectMetrics fold as update_nodes (optimization r15):
-    # touched-count computed inside the rewrite job, no separate scan
-    obs = Observation()
-    out = cur.observe(
-        obs,
-        F.coalesce(
-            F.sum(F.when(predicate, 1).otherwise(0)), F.lit(0)
-        ).alias("touched"),
-    )
-    for col_name, expr in assignments.items():
-        # cast the assignment to the column's DECLARED type: the
-        # schema is the contract (manifest-registered views read with
-        # it), and an uncast when/otherwise would silently coerce the
-        # whole column — e.g. SET age = 'x' turning long into string
-        # parquet that the stale manifest schema can no longer scan
-        # (round-8 review finding)
-        out = out.withColumn(
-            col_name,
-            F.when(
-                predicate, expr.cast(cur.schema[col_name].dataType)
-            ).otherwise(F.col(col_name)),
-        )
-    _rewrite_dataset(out, path)
-    return int(obs.get["touched"])
 
 
 def delete_edges_between(
@@ -751,7 +755,6 @@ def delete_edges_between(
     src_ids: DataFrame,
     dst_ids: DataFrame,
     predicate: F.Column,
-    info: dict | None = None,
 ) -> int:
     """DELETE EDGE <T> FROM <x> TO <y> [WHERE …]: drop every edge
     whose src is in ``src_ids`` AND dst is in ``dst_ids`` (1-column
@@ -761,12 +764,7 @@ def delete_edges_between(
     removed with exceptAll — full-row multiset semantics, so
     duplicate edges between the same endpoints all go, matching
     ArcadeDB. Returns edges deleted."""
-    if info is None:
-        # callers that already resolved the manifest entry (the
-        # dialect executor reads it for the endpoint labels) pass it
-        # in — no second read/parse per statement (round-8 review)
-        with open(os.path.join(ws_dir, "manifest.json")) as mh:
-            info = json.load(mh)["edges"][label]
+    manifest = read_manifest(ws_dir)
     path = dataset_path(ws_dir, "edges", label)
     cur = spark.read.parquet(path)
     doomed = (
@@ -781,24 +779,22 @@ def delete_edges_between(
     n_del = doomed.count()
     if n_del:
         _rewrite_dataset(cur.exceptAll(doomed), path)
-        _update_manifest_count(ws_dir, "edges", label, info["count"] - n_del)
+        manifest["edges"][label]["count"] -= n_del
+        write_manifest(ws_dir, manifest)
     return n_del
 
 
 def delete_edges(spark: SparkSession, ws_dir: str, label: str, predicate: F.Column) -> int:
     """DELETE EDGE ... WHERE: drop matching edge rows (no cascade —
     edges have no dependents). Returns edges deleted."""
-    with open(os.path.join(ws_dir, "manifest.json")) as mh:
-        manifest = json.load(mh)
+    manifest = read_manifest(ws_dir)
     path = dataset_path(ws_dir, "edges", label)
     cur = spark.read.parquet(path)
     doomed = cur.where(predicate).count()
     if doomed:
         _rewrite_dataset(cur.where(~predicate), path)
-        _update_manifest_count(
-            ws_dir, "edges", label,
-            manifest["edges"][label]["count"] - doomed,
-        )
+        manifest["edges"][label]["count"] -= doomed
+        write_manifest(ws_dir, manifest)
     return doomed
 
 
@@ -835,8 +831,7 @@ def _write_empty_dataset(schema, path: str) -> None:
 
 
 def create_node_type(spark: SparkSession, ws_dir: str, label: str) -> None:
-    with open(os.path.join(ws_dir, "manifest.json")) as mh:
-        manifest = json.load(mh)
+    manifest = read_manifest(ws_dir)
     if label in manifest["nodes"]:
         raise ValueError(f"node type {label!r} already exists")
     # new types APPEND to the recorded bucket order (never reuse a
@@ -854,8 +849,7 @@ def create_node_type(spark: SparkSession, ws_dir: str, label: str) -> None:
         "schema": empty.schema.jsonValue(),
         "count": 0,
     }
-    with open(os.path.join(ws_dir, "manifest.json"), "w") as mh:
-        json.dump(manifest, mh, indent=2)
+    write_manifest(ws_dir, manifest)
 
 
 def create_edge_type(
@@ -864,8 +858,7 @@ def create_edge_type(
     """Engine extension vs plain ArcadeDB: endpoint labels are
     REQUIRED (``FROM <SrcType> TO <DstType>``) because edge appends
     validate endpoints against the typed node sets (A11)."""
-    with open(os.path.join(ws_dir, "manifest.json")) as mh:
-        manifest = json.load(mh)
+    manifest = read_manifest(ws_dir)
     if label in manifest["edges"]:
         raise ValueError(f"edge type {label!r} already exists")
     for lbl in (src_label, dst_label):
@@ -880,8 +873,7 @@ def create_edge_type(
         "schema": empty.schema.jsonValue(),
         "count": 0,
     }
-    with open(os.path.join(ws_dir, "manifest.json"), "w") as mh:
-        json.dump(manifest, mh, indent=2)
+    write_manifest(ws_dir, manifest)
 
 
 def add_property(
@@ -894,11 +886,8 @@ def add_property(
     posture in reverse)."""
     from biodwh2_arcadedb_server_spark.typemap import resolve_type
 
-    with open(os.path.join(ws_dir, "manifest.json")) as mh:
-        manifest = json.load(mh)
-    kind = "nodes" if label in manifest["nodes"] else "edges"
-    if label not in manifest[kind]:
-        raise ValueError(f"unknown type {label!r}")
+    manifest = read_manifest(ws_dir)
+    kind = label_kind(manifest, label)
     path = dataset_path(ws_dir, kind, label)
     cur = spark.read.parquet(path)
     if prop in cur.columns:
@@ -912,8 +901,7 @@ def add_property(
     else:
         _rewrite_dataset(out, path)
     manifest[kind][label]["schema"] = out.schema.jsonValue()
-    with open(os.path.join(ws_dir, "manifest.json"), "w") as mh:
-        json.dump(manifest, mh, indent=2)
+    write_manifest(ws_dir, manifest)
 
 
 def create_index(
@@ -924,11 +912,8 @@ def create_index(
     naming the violation count); both flavors are recorded in the
     manifest so layout tooling (sources/layout.py Z-order, bucketing)
     can pick the clustering columns — the 100 TB analog of an index."""
-    with open(os.path.join(ws_dir, "manifest.json")) as mh:
-        manifest = json.load(mh)
-    kind = "nodes" if label in manifest["nodes"] else "edges"
-    if label not in manifest[kind]:
-        raise ValueError(f"unknown type {label!r}")
+    manifest = read_manifest(ws_dir)
+    kind = label_kind(manifest, label)
     df = spark.read.parquet(dataset_path(ws_dir, kind, label))
     missing = [c for c in cols if c not in df.columns]
     if missing:
@@ -944,8 +929,7 @@ def create_index(
     manifest[kind][label].setdefault("indexes", []).append(
         {"columns": cols, "unique": unique}
     )
-    with open(os.path.join(ws_dir, "manifest.json"), "w") as mh:
-        json.dump(manifest, mh, indent=2)
+    write_manifest(ws_dir, manifest)
 
 
 def drop_type(spark: SparkSession, ws_dir: str, label: str, unsafe: bool = False) -> int:
@@ -956,8 +940,7 @@ def drop_type(spark: SparkSession, ws_dir: str, label: str, unsafe: bool = False
     referenced by a declared edge type cannot be dropped until those
     edge types are — otherwise the schema would dangle. Returns
     records dropped. O(1) IO: directory removal, no rewrite."""
-    with open(os.path.join(ws_dir, "manifest.json")) as mh:
-        manifest = json.load(mh)
+    manifest = read_manifest(ws_dir)
     if label in manifest["edges"]:
         info = manifest["edges"][label]
         # manifest counts are maintained by every mutation — a DDL
@@ -999,8 +982,7 @@ def drop_type(spark: SparkSession, ws_dir: str, label: str, unsafe: bool = False
         del manifest["nodes"][label]
     else:
         raise ValueError(f"unknown type {label!r}")
-    with open(os.path.join(ws_dir, "manifest.json"), "w") as mh:
-        json.dump(manifest, mh, indent=2)
+    write_manifest(ws_dir, manifest)
     return n
 
 
@@ -1009,17 +991,10 @@ def drop_property(spark: SparkSession, ws_dir: str, label: str, prop: str) -> No
     the column (the inverse of add_property). Structural columns
     (node_id/label/natural_key, src/dst) are protected; manifest
     index records referencing the property are removed with it."""
-    core = {
-        "node_id", "node_id2", "label", "natural_key",
-        "src", "src2", "dst", "dst2",
-    }
-    if prop in core:
+    if any(prop in frozen for frozen, _, _ in _UPDATE_RULES.values()):
         raise ValueError(f"cannot drop structural column {prop!r}")
-    with open(os.path.join(ws_dir, "manifest.json")) as mh:
-        manifest = json.load(mh)
-    kind = "nodes" if label in manifest["nodes"] else "edges"
-    if label not in manifest[kind]:
-        raise ValueError(f"unknown type {label!r}")
+    manifest = read_manifest(ws_dir)
+    kind = label_kind(manifest, label)
     path = dataset_path(ws_dir, kind, label)
     cur = spark.read.parquet(path)
     if prop not in cur.columns:
@@ -1032,18 +1007,14 @@ def drop_property(spark: SparkSession, ws_dir: str, label: str, prop: str) -> No
         manifest[kind][label]["indexes"] = [
             i for i in idx if prop not in i["columns"]
         ]
-    with open(os.path.join(ws_dir, "manifest.json"), "w") as mh:
-        json.dump(manifest, mh, indent=2)
+    write_manifest(ws_dir, manifest)
 
 
 def drop_index(spark: SparkSession, ws_dir: str, label: str, cols: list[str]) -> None:
     """DROP INDEX ON <T> (cols): remove the manifest index record
     (the clustering hint create_index recorded)."""
-    with open(os.path.join(ws_dir, "manifest.json")) as mh:
-        manifest = json.load(mh)
-    kind = "nodes" if label in manifest["nodes"] else "edges"
-    if label not in manifest[kind]:
-        raise ValueError(f"unknown type {label!r}")
+    manifest = read_manifest(ws_dir)
+    kind = label_kind(manifest, label)
     idx = manifest[kind][label].get("indexes", [])
     kept = [i for i in idx if i["columns"] != cols]
     if len(kept) == len(idx):
@@ -1052,8 +1023,7 @@ def drop_index(spark: SparkSession, ws_dir: str, label: str, cols: list[str]) ->
             f"(declared: {[i['columns'] for i in idx]})"
         )
     manifest[kind][label]["indexes"] = kept
-    with open(os.path.join(ws_dir, "manifest.json"), "w") as mh:
-        json.dump(manifest, mh, indent=2)
+    write_manifest(ws_dir, manifest)
 
 
 def rename_type(spark: SparkSession, ws_dir: str, label: str, new_label: str) -> int:
@@ -1066,8 +1036,7 @@ def rename_type(spark: SparkSession, ws_dir: str, label: str, new_label: str) ->
     remap shuffles only ids, and only for edge types declared against
     the renamed label). Edge renames rewrite just their own label
     column. Returns rows rewritten in the renamed dataset."""
-    with open(os.path.join(ws_dir, "manifest.json")) as mh:
-        manifest = json.load(mh)
+    manifest = read_manifest(ws_dir)
     for side in ("nodes", "edges"):
         if new_label in manifest[side]:
             raise ValueError(f"type {new_label!r} already exists")
@@ -1081,8 +1050,7 @@ def rename_type(spark: SparkSession, ws_dir: str, label: str, new_label: str) ->
         shutil.rmtree(path)
         manifest["edges"][new_label] = info
         del manifest["edges"][label]
-        with open(os.path.join(ws_dir, "manifest.json"), "w") as mh:
-            json.dump(manifest, mh, indent=2)
+        write_manifest(ws_dir, manifest)
         return n
     if label not in manifest["nodes"]:
         raise ValueError(f"unknown type {label!r}")
@@ -1182,8 +1150,7 @@ def rename_type(spark: SparkSession, ws_dir: str, label: str, new_label: str) ->
             touches = True
         if touches:
             _rewrite_dataset(e, e_path)
-    with open(os.path.join(ws_dir, "manifest.json"), "w") as mh:
-        json.dump(manifest, mh, indent=2)
+    write_manifest(ws_dir, manifest)
     return n
 
 
@@ -1248,8 +1215,7 @@ def load_workspace(spark: SparkSession, ws_dir: str) -> dict:
     per-label projections (the label that DID change is re-read, so
     the unified plan never references replaced files)."""
     global VIEW_EPOCH
-    with open(os.path.join(ws_dir, "manifest.json")) as mh:
-        manifest = json.load(mh)
+    manifest = read_manifest(ws_dir)
     # bucket order comes from the manifest (recorded at build time,
     # maintained by DDL: drops tombstone, renames keep their slot,
     # creates append — ADVICE r9), not from dict insertion order.

@@ -767,3 +767,68 @@ def test_dml_battery_parity_64_vs_128bit(spark, sf_small, tmp_path_factory):
     by_key = {r[0]: r for r in r128}
     assert by_key[990][1] == "ATLANTIS" and by_key[990][2] == 0
     assert by_key[0][2] == 2 and 7 not in by_key
+
+
+def test_schema_reads_never_see_a_torn_manifest(spark, sf_small, tmp_path_factory):
+    """``SELECT FROM schema:types`` reads the manifest without the DML
+    lock, so concurrent DDL must replace the file atomically: a reader
+    sees the old manifest or the new one, never a truncated one (an
+    in-place rewrite made these reads fail with JSONDecodeError)."""
+    import sys
+    import threading
+    import time
+
+    ws = str(tmp_path_factory.mktemp("torn_manifest") / "ws")
+    build_workspace(spark, sf_small, ws, force=True)
+    load_workspace(spark, ws)
+    stop = threading.Event()
+    writer_errors: list = []
+    reads: list = []  # None, or the failed read's error
+    writes = 0
+
+    def ddl_loop():
+        nonlocal writes
+        try:
+            while not stop.is_set():
+                for sql in (
+                    "CREATE INDEX ON Nation (n_name)",
+                    "DROP INDEX ON Nation (n_name)",
+                ):
+                    execute(spark, sql, workspace_dir=ws, allow_writes=True)
+                    writes += 1
+        except Exception as exc:  # noqa: BLE001
+            writer_errors.append(exc)
+
+    def read_once():
+        try:
+            execute(spark, "SELECT FROM schema:types")
+            reads.append(None)
+        except Exception as exc:  # noqa: BLE001
+            reads.append(repr(exc))
+
+    def read_loop():
+        while not stop.is_set():
+            read_once()
+
+    # frequent thread switches and two extra reader threads make the
+    # readers land inside a write often enough to catch a torn file
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    threads = [threading.Thread(target=ddl_loop)]
+    threads += [threading.Thread(target=read_loop) for _ in range(2)]
+    for t in threads:
+        t.start()
+    try:
+        deadline = time.monotonic() + 5
+        while time.monotonic() < deadline:
+            read_once()
+    finally:
+        stop.set()
+        for t in threads:
+            t.join(60)
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    assert writer_errors == []
+    assert writes > 0 and reads
+    errors = [r for r in reads if r is not None]
+    assert errors == [], f"{len(errors)} of {len(reads)} reads failed: {errors[:3]}"

@@ -145,14 +145,27 @@ def test_txn_rolled_back_delete_leaves_live_workspace(spark, txn_ws):
     """A transaction whose later statement fails is rolled back: the
     live workspace keeps every record, including ones an earlier
     statement deleted in the shadow (and the edges that delete
-    cascaded to)."""
+    cascaded to). The shadow hardlinks every workspace file, so the
+    manifest the staged DDL and DELETE rewrote in the shadow must
+    leave the live manifest byte-identical: a lane that wrote a
+    workspace file in place would change it through the link."""
+    import hashlib
+
+    def manifest_sha():
+        with open(os.path.join(txn_ws, "manifest.json"), "rb") as fh:
+            return hashlib.sha256(fh.read()).hexdigest()
+
     before = _nation_count(spark)
     edges_before = spark.table("e_IN_REGION").count()
+    sha_before = manifest_sha()
     mgr = TransactionManager()
     sid = mgr.begin(txn_ws)
     mgr.stage(sid, "DELETE VERTEX Nation WHERE natural_key = 1")
+    mgr.stage(sid, "CREATE PROPERTY Nation.note STRING")
     mgr.stage(sid, "UPDATE Nation SET ghost = 1 WHERE natural_key = 0")
     with pytest.raises(TransactionError, match="rolled back"):
         mgr.commit(spark, sid, allow_writes=True)
     assert _nation_count(spark) == before
     assert spark.table("e_IN_REGION").count() == edges_before
+    assert manifest_sha() == sha_before
+    assert "note" not in spark.table("n_Nation").columns

@@ -17,8 +17,9 @@ from biodwh2_arcadedb_server_spark.workspace import (
     is_stale,
     load_workspace,
     node_id,
+    read_manifest,
     source_checksum,
-    update_nodes,
+    update_rows,
 )
 
 
@@ -177,11 +178,13 @@ def test_dml_insert_update_delete_cascade(spark, sf_small, tmp_path):
     # INSERT: new nation appended; duplicate natural key skipped (A9 posture)
     rows = spark.createDataFrame([(990, "ATLANTIS"), (0, "DUPLICATE")], ["natural_key", "n_name"])
     n = insert_nodes(spark, ws, "Nation", rows)
-    assert n == n_nations0 + 1
+    assert n == 1
+    assert read_manifest(ws)["nodes"]["Nation"]["count"] == n_nations0 + 1
 
     # UPDATE: rename the new nation
-    touched = update_nodes(
-        spark, ws, "Nation", F.col("natural_key") == 990, {"n_name": F.lit("LEMURIA")}
+    touched = update_rows(
+        spark, ws, "nodes", "Nation", F.col("natural_key") == 990,
+        {"n_name": F.lit("LEMURIA")},
     )
     assert touched == 1
     got = (
@@ -416,15 +419,15 @@ def test_update_preserves_declared_column_type(spark, sf_small, tmp_path):
     from biodwh2_arcadedb_server_spark.workspace import (
         build_workspace,
         load_workspace,
-        update_nodes,
+        update_rows,
     )
 
     ws = str(tmp_path / "updtype")
     build_workspace(spark, sf_small, ws, force=True)
     load_workspace(spark, ws)
     before_type = dict(spark.table("n_Customer").dtypes)["c_acctbal"]
-    update_nodes(
-        spark, ws, "Customer",
+    update_rows(
+        spark, ws, "nodes", "Customer",
         F.col("natural_key") == 1,
         {"c_acctbal": F.lit("123.5")},  # string literal into a numeric col
     )
