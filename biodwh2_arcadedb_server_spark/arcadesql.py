@@ -1786,23 +1786,12 @@ class _Parser:
 
     def _graph_projection(self, sel: _Select, direction: str, label: str | None) -> str:
         """out('E') → array of neighbor ids, as a correlated aggregate
-        subquery over the unified edges view (Catalyst decorrelates it
-        into a left join + partial aggregate)."""
+        subquery over the step's oriented edge leg (Catalyst
+        decorrelates it into a left join + partial aggregate)."""
         sel.uses_graph_projection = True
-        a = sel.alias
-        cond = {"out": f"e.src = {a}.node_id", "in": f"e.dst = {a}.node_id"}
-        pick = {"out": "e.dst", "in": "e.src"}
-        lbl = f" AND e.label = '{_sql_str(label)}'" if label else ""
-        if direction == "both":
-            return (
-                "(SELECT sort_array(collect_list(x)) FROM (SELECT e.dst AS x "
-                f"FROM edges e WHERE e.src = {a}.node_id{lbl} UNION ALL "
-                "SELECT e.src AS x FROM edges e WHERE e.dst = "
-                f"{a}.node_id{lbl}))"
-            )
         return (
-            f"(SELECT sort_array(collect_list({pick[direction]})) FROM edges e "
-            f"WHERE {cond[direction]}{lbl})"
+            f"(SELECT sort_array(collect_list(e.__t)) FROM "
+            f"{_edge_leg(direction, label)} e WHERE e.__s = {sel.alias}.node_id)"
         )
 
 
@@ -2078,6 +2067,10 @@ def _rid_bucket_label(bucket: int) -> str:
     return label
 
 
+# FROM sources that name a registered view, not a node type
+_VIEW_SOURCE_RE = re.compile(r"edges|nodes|e_\w+")
+
+
 def _compile_select(sel: _Select) -> str:
     if sel.traverse_subquery is not None:
         raise ArcadeSQLError(
@@ -2094,31 +2087,23 @@ def _compile_select(sel: _Select) -> str:
         sel.where = f"({rid_pred}) AND ({sel.where})" if sel.where else rid_pred
         sel.source_type, sel.rid = label, None
         source = f"n_{label} {sel.alias}"
+    elif _VIEW_SOURCE_RE.fullmatch(sel.source_type):
+        source = f"{sel.source_type} {sel.alias}"
     else:
         source = f"n_{sel.source_type} {sel.alias}"
 
     if sel.expand_edge is not None:
         d, label = sel.expand_edge
-        lbl = f" AND e.label = '{_sql_str(label)}'" if label else ""
         inner = f"SELECT node_id FROM {source}"
         if sel.where:
             inner += f" WHERE {sel.where}"
-        if d in ("oute", "ine", "bothe"):
+        # outE/inE/bothE walk the same leg as out/in/both
+        walk = f"{_edge_leg(d.removesuffix('e'), label)} e WHERE e.__s IN ({inner})"
+        if d.endswith("e"):
             # edge-returning expand: outE()/inE()/bothE() — edge rows,
             # not neighbor nodes (ArcadeDB returns edge records; our
             # edge identity is the (src, dst, label) triple)
-            elegs = []
-            if d in ("oute", "bothe"):
-                elegs.append(
-                    f"SELECT e.src, e.dst, e.label FROM edges e "
-                    f"WHERE e.src IN ({inner}){lbl}"
-                )
-            if d in ("ine", "bothe"):
-                elegs.append(
-                    f"SELECT e.src, e.dst, e.label FROM edges e "
-                    f"WHERE e.dst IN ({inner}){lbl}"
-                )
-            sql = " UNION ALL ".join(elegs)
+            sql = f"SELECT e.src, e.dst, e.label FROM {walk}"
             if sel.order_by:
                 sql += " ORDER BY " + ", ".join(
                     f"{e} {dd}" for e, dd in sel.order_by
@@ -2128,19 +2113,9 @@ def _compile_select(sel: _Select) -> str:
             if sel.skip:
                 sql += f" OFFSET {sel.skip}"
             return _finalize_lets(sql, sel)
-        legs = []
-        if d in ("out", "both"):
-            legs.append(
-                f"SELECT e.dst AS __nid FROM edges e WHERE e.src IN ({inner}){lbl}"
-            )
-        if d in ("in", "both"):
-            legs.append(
-                f"SELECT e.src AS __nid FROM edges e WHERE e.dst IN ({inner}){lbl}"
-            )
-        nbr = " UNION ALL ".join(legs)
         sql = (
             "SELECT n.node_id, n.label, n.natural_key, n.props FROM nodes n "
-            f"WHERE n.node_id IN (SELECT __nid FROM ({nbr}))"
+            f"WHERE n.node_id IN (SELECT e.__t FROM {walk})"
         )
     else:
         if sel.star:
@@ -2178,21 +2153,21 @@ _AGG_RE = re.compile(
 )
 
 
-def _match_leg(
-    e: str, a: str, b: str, d: str, label: str | None
-) -> tuple[str, str]:
-    """Join conditions for one edge step: (edge-join cond anchored at
-    ``a``, node-join cond binding ``b``)."""
-    lbl = f" AND {e}.label = '{_sql_str(label)}'" if label else ""
-    if d == "out":
-        return f"{e}.src = {a}.node_id{lbl}", f"{b}.node_id = {e}.dst"
-    if d == "in":
-        return f"{e}.dst = {a}.node_id{lbl}", f"{b}.node_id = {e}.src"
-    return (
-        f"({e}.src = {a}.node_id OR {e}.dst = {a}.node_id){lbl}",
-        f"{b}.node_id = CASE WHEN {e}.src = {a}.node_id "
-        f"THEN {e}.dst ELSE {e}.src END",
-    )
+def _edge_leg(d: str, label: str | None, view: str = "edges") -> str:
+    """The one oriented-edge relation every graph step walks: the rows
+    of ``view`` (filtered to ``label``) plus ``__s``, the end the step
+    leaves from, and ``__t``, the end it reaches. ``out`` orients
+    (src, dst), ``in`` (dst, src), and ``both`` is the UNION ALL of
+    the two, so a self-loop appears once per orientation. A step
+    joins on ``__s = <anchor>.node_id`` and binds its target on
+    ``node_id = __t``: an equi-join in every direction."""
+    where = f" WHERE label = '{_sql_str(label)}'" if label else ""
+    ends = {"out": [("src", "dst")], "in": [("dst", "src")]}
+    ends["both"] = ends["out"] + ends["in"]
+    return "(" + " UNION ALL ".join(
+        f"SELECT *, {s} AS __s, {t} AS __t FROM {view}{where}"
+        for s, t in ends[d]
+    ) + ")"
 
 
 def _compile_chain(
@@ -2204,13 +2179,18 @@ def _compile_chain(
 ) -> None:
     """Append one pattern chain's joins to ``froms``/``wheres``.
     The chain's first node must already be in scope (``bound`` or
-    emitted by the caller). Non-optional steps are inner equi-joins;
-    an ``optional: true`` node turns its step — and every later step
-    in the chain — into a LEFT JOIN of a derived leg subquery
-    (edge ⋈ typed view, the node's own ``where:`` folded inside), so
-    per anchor row the leg yields its matches or ONE all-null row,
-    exactly ArcadeDB's optional-pattern semantics. Catalyst still
-    sees one join chain: pushdown and broadcast apply per leg."""
+    emitted by the caller). Every step walks the ``_edge_leg``
+    relation of its direction: a non-optional step is an inner
+    equi-join on ``__s = <anchor>.node_id`` and binds its target on
+    ``node_id = __t`` (a cycle-closing step constrains the bound
+    target instead of joining it). An ``optional: true`` node turns
+    its step — and every later step in the chain — into a LEFT JOIN
+    of a derived leg subquery (edge leg ⋈ typed view, the node's own
+    ``where:`` folded inside), so per anchor row the leg yields its
+    matches or ONE all-null row, exactly ArcadeDB's optional-pattern
+    semantics. A variable-length step unrolls the same leg into
+    bounded self-joins. Catalyst still sees one join chain: pushdown
+    and broadcast apply per leg."""
     optional = False
     for i, (d, label, ealias) in enumerate(steps):
         e = ealias or f"__e{tag}{i}"
@@ -2249,13 +2229,7 @@ def _compile_chain(
                     "variable-length steps cannot be optional or close "
                     "a cycle"
                 )
-            lbl_w = f" WHERE label = '{_sql_str(label)}'" if label else ""
-            legs = []
-            if d in ("out", "both"):
-                legs.append(f"SELECT src AS s, dst AS t FROM edges{lbl_w}")
-            if d in ("in", "both"):
-                legs.append(f"SELECT dst AS s, src AS t FROM edges{lbl_w}")
-            leg = "(" + " UNION ALL ".join(legs) + ")"
+            leg = _edge_leg(d, label)
             view = f"n_{nt['type']}" if nt["type"] else "nodes"
             # seed the unroll from the ANCHOR node set (its typed view
             # + its own where:, requalified) instead of expanding the
@@ -2283,17 +2257,19 @@ def _compile_chain(
             unions = []
             if lo == 0:
                 unions.append(
-                    f"SELECT __s.node_id AS __vsrc, __s.node_id AS __vdst "
-                    f"FROM {anchors} __s"
+                    f"SELECT __v.node_id AS __vsrc, __v.node_id AS __vdst "
+                    f"FROM {anchors} __v"
                 )
             for L in range(max(lo, 1), hi + 1):
                 hop_from = (
-                    f"{anchors} __s JOIN {leg} __h0 ON __h0.s = __s.node_id"
+                    f"{anchors} __v JOIN {leg} __h0 ON __h0.__s = __v.node_id"
                 )
                 for j in range(1, L):
-                    hop_from += f" JOIN {leg} __h{j} ON __h{j}.s = __h{j-1}.t"
+                    hop_from += (
+                        f" JOIN {leg} __h{j} ON __h{j}.__s = __h{j-1}.__t"
+                    )
                 unions.append(
-                    f"SELECT __s.node_id AS __vsrc, __h{L-1}.t AS __vdst "
+                    f"SELECT __v.node_id AS __vsrc, __h{L-1}.__t AS __vdst "
                     f"FROM {hop_from}"
                 )
             vl_name = f"__vl{tag}{i}"
@@ -2310,23 +2286,21 @@ def _compile_chain(
                 wheres.append(nt["where"])
             continue
         if not optional:
-            cond, nxt = _match_leg(e, a, b, d, label)
             # a user-bound edge alias joins the TYPED edge view so
             # RETURN can project edge properties (the unified `edges`
             # view is the 3-column (src, dst, label) slice)
-            etable = f"e_{label}" if ealias else "edges"
-            froms.append(f"JOIN {etable} {e} ON {cond}")
+            leg = _edge_leg(d, label, f"e_{label}" if ealias else "edges")
+            froms.append(f"JOIN {leg} {e} ON {e}.__s = {a}.node_id")
+            nxt = f"{b}.node_id = {e}.__t"
             if nt.get("bound"):
                 # cycle-closing step: the target alias is already in
                 # scope — constrain it instead of re-joining its view
                 wheres.append(nxt)
-                if nt.get("where"):
-                    wheres.append(nt["where"])
             else:
                 src = f"n_{nt['type']} {b}" if nt["type"] else f"nodes {b}"
                 froms.append(f"JOIN {src} ON {nxt}")
-                if nt.get("where"):
-                    wheres.append(nt["where"])
+            if nt.get("where"):
+                wheres.append(nt["where"])
             continue
         # optional leg: LEFT JOIN (edge ⋈ node view) keyed on a
         # sentinel anchor column, so a failed `where:` inside the leg
@@ -2348,31 +2322,21 @@ def _compile_chain(
             # the deferred where was compiled qualified with the
             # node's public alias; requalify onto the inner table
             inner_where = " AND " + _requalify_alias(nt["where"], b, inner_t)
-        lbl = f" AND {e}.label = '{_sql_str(label)}'" if label else ""
         anchor = f"__anchor{tag}{i}"
-        if d == "both":
-            leg = (
-                f"(SELECT {e}.src AS {anchor}, {inner_t}.* FROM edges {e} "
-                f"JOIN {view} {inner_t} ON {inner_t}.node_id = {e}.dst"
-                f"{lbl}{inner_where} UNION ALL "
-                f"SELECT {e}.dst AS {anchor}, {inner_t}.* FROM edges {e} "
-                f"JOIN {view} {inner_t} ON {inner_t}.node_id = {e}.src"
-                f"{lbl}{inner_where})"
-            )
-        else:
-            key, other = ("src", "dst") if d == "out" else ("dst", "src")
-            leg = (
-                f"(SELECT {e}.{key} AS {anchor}, {inner_t}.* FROM edges {e} "
-                f"JOIN {view} {inner_t} ON {inner_t}.node_id = {e}.{other}"
-                f"{lbl}{inner_where})"
-            )
+        leg = (
+            f"(SELECT {e}.__s AS {anchor}, {inner_t}.* FROM "
+            f"{_edge_leg(d, label)} {e} JOIN {view} {inner_t} "
+            f"ON {inner_t}.node_id = {e}.__t{inner_where})"
+        )
         froms.append(f"LEFT JOIN {leg} {b} ON {b}.{anchor} = {a}.node_id")
 
 
 def _compile_neg_chain(chain: dict, idx: int) -> str:
     """NOT { … } pattern → a NOT EXISTS anti-join leg correlated on
-    the chain's bound anchor alias(es). Catalyst plans this as a
-    LeftAnti join on the edge key — one shuffle, no cartesian."""
+    the chain's bound anchor alias(es). Each step joins its
+    ``_edge_leg`` relation on ``__s``/``__t`` exactly as an inner
+    step does, so Catalyst plans a LeftAnti join on the edge key in
+    every direction — one shuffle, no cartesian."""
     nodes, steps = chain["nodes"], chain["steps"]
     froms: list[str] = []
     conds: list[str] = []
@@ -2393,18 +2357,13 @@ def _compile_neg_chain(chain: dict, idx: int) -> str:
         a = nodes[i]["alias"]
         nt = nodes[i + 1]
         b = nt["alias"]
-        cond, nxt = _match_leg(e, a, b, d, label)
-        froms.append(f"edges {e}")
-        conds.append(cond)
-        if nt.get("bound"):
-            conds.append(nxt)
-            if nt.get("where"):
-                conds.append(nt["where"])
-        else:
+        froms.append(f"{_edge_leg(d, label)} {e}")
+        conds.append(f"{e}.__s = {a}.node_id")
+        if not nt.get("bound"):
             froms.append(f"n_{nt['type']} {b}" if nt["type"] else f"nodes {b}")
-            conds.append(nxt)
-            if nt.get("where"):
-                conds.append(nt["where"])
+        conds.append(f"{b}.node_id = {e}.__t")
+        if nt.get("where"):
+            conds.append(nt["where"])
     return (
         f"NOT EXISTS (SELECT 1 FROM {', '.join(froms)} "
         f"WHERE {' AND '.join(conds)})"
@@ -2413,9 +2372,11 @@ def _compile_neg_chain(chain: dict, idx: int) -> str:
 
 def _compile_match(m: _Match) -> str:
     """MATCH pattern chains → ONE Spark SQL join chain over the
-    per-label views and the unified ``edges`` view: each edge step is
-    an equi-join on the edge key (shuffle on src/dst — or a broadcast
-    probe when the anchored side is small, AQE's call), each node
+    per-label views and the unified ``edges`` view: each edge step
+    joins its direction's ``_edge_leg`` relation, an equi-join on the
+    oriented edge key ``__s``/``__t`` for ``out``, ``in`` and ``both``
+    alike (shuffle on the key — or a broadcast probe when the
+    anchored side is small, AQE's call), each node
     pattern a join back to its typed view; ``optional: true`` legs
     are LEFT JOINs of derived leg subqueries, additional comma chains
     extend the same join chain, and ``NOT { … }`` chains become
@@ -3073,23 +3034,14 @@ def _run_traverse(spark: SparkSession, stmt: "_Traverse") -> DataFrame:
     from biodwh2_arcadedb_server_spark.operators.graph import bfs
 
     roots = spark.sql(_compile_select(stmt.inner)).select("node_id")
-    edges = spark.table("edges")
     # Build the hop relation PER STEP: each step's label (or lack of one)
     # and direction apply only to that step's leg — TRAVERSE out('A'),
     # in('B') follows out-A edges and in-B edges, never in-A or out-B,
     # and an unlabeled out() leg follows every edge type.
-    legs = []
-    for d, lbl in stmt.steps:
-        e = edges.where(F.col("label") == F.lit(lbl)) if lbl else edges
-        if d in ("out", "both"):
-            legs.append(e.select("src", "dst"))
-        if d in ("in", "both"):
-            legs.append(
-                e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-            )
-    hop = legs[0]
-    for leg in legs[1:]:
-        hop = hop.unionByName(leg)
+    hop = spark.sql(" UNION ALL ".join(
+        f"SELECT __s AS src, __t AS dst FROM {_edge_leg(d, lbl)} __l"
+        for d, lbl in stmt.steps
+    ))
     depth = stmt.maxdepth if stmt.maxdepth is not None else 2**31 - 1
     if depth < 0:
         # WHILE bound false at depth 0 — inclusion-gated TRAVERSE

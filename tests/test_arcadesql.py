@@ -10,6 +10,10 @@ tiny deterministic graph.
 
 from __future__ import annotations
 
+import ast
+import re
+from pathlib import Path
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -1381,3 +1385,165 @@ def test_schema_tvf_errors(spark):
             arcadesql.execute(spark, "SELECT FROM schema:types")
     finally:
         ws.LAST_WS_DIR = saved
+
+
+def test_select_from_registered_views(graph_ws):
+    """FROM edges / nodes / e_<LABEL> name the registered views
+    themselves, not node types (they used to compile to n_edges)."""
+    df = execute(
+        graph_ws,
+        "SELECT label, count(*) AS n FROM edges GROUP BY label ORDER BY label",
+    )
+    assert [(r.label, r.n) for r in df.collect()] == [
+        ("KNOWS", 5), ("LIVES_IN", 5),
+    ]
+    df = execute(graph_ws, "SELECT FROM e_KNOWS WHERE weight > 20")
+    assert sorted((r.src, r.dst, r.weight) for r in df.collect()) == [
+        (2, 3, 23.0), (3, 4, 34.0), (4, 5, 45.0),
+    ]
+    assert execute(graph_ws, "SELECT count(*) AS n FROM nodes").first().n == 8
+
+
+# ------------------------------------------------- one oriented-edge leg
+def test_both_multiplicity_battery(spark):
+    """Every dialect form walks ``both`` as the UNION ALL of its two
+    orientations, so a form that keeps one row per edge meets a
+    self-loop twice; variable-length MATCH, expand(both()) and
+    TRAVERSE return distinct nodes. One graph pins every form: a self-loop 3->3, a 2-cycle 1<->2, an edge 2->3
+    and an isolated node 4. Its views live in a separate session, so
+    the module fixture's views stay as they are."""
+    from collections import Counter
+
+    s = spark.newSession()
+    s.createDataFrame(
+        [(i, "Person", str(i)) for i in range(1, 5)],
+        "node_id long, label string, natural_key string",
+    ).createOrReplaceTempView("n_Person")
+    s.sql(
+        "SELECT node_id, label, natural_key, map('k', natural_key) AS props "
+        "FROM n_Person"
+    ).createOrReplaceTempView("nodes")
+    s.createDataFrame(
+        [(1, 2, "KNOWS"), (2, 1, "KNOWS"), (2, 3, "KNOWS"), (3, 3, "KNOWS")],
+        "src long, dst long, label string",
+    ).createOrReplaceTempView("edges")
+
+    def pairs(sql):
+        return Counter(tuple(r) for r in execute(s, sql).collect())
+
+    # each edge once per orientation: the self-loop twice
+    both_pairs = {(1, 2): 2, (2, 1): 2, (2, 3): 1, (3, 2): 1, (3, 3): 2}
+    assert pairs(
+        "MATCH {type: Person, as: a}.both('KNOWS'){type: Person, as: b} "
+        "RETURN a.node_id AS a, b.node_id AS b"
+    ) == both_pairs
+    assert pairs(
+        "MATCH {type: Person, as: a}.both('KNOWS')"
+        "{type: Person, as: b, optional: true} "
+        "RETURN a.node_id AS a, b.node_id AS b"
+    ) == {**both_pairs, (4, None): 1}
+    assert pairs(
+        "MATCH {type: Person, as: a}, NOT {as: a}.both('KNOWS'){type: Person} "
+        "RETURN a.node_id AS a"
+    ) == {(4,): 1}
+    # cycle-closing: out pairs (1,2) (2,1) (2,3) (3,3), each times the
+    # number of both-rows leading back from b to a
+    assert pairs(
+        "MATCH {type: Person, as: a}-KNOWS->{type: Person, as: b}, "
+        "{as: b}.both('KNOWS'){as: a} RETURN a.node_id AS a, b.node_id AS b"
+    ) == {(1, 2): 2, (2, 1): 2, (2, 3): 1, (3, 3): 2}
+    # variable-length steps bind distinct endpoints
+    assert pairs(
+        "MATCH {type: Person, as: a, where: (node_id = 3)}.both('KNOWS')"
+        "{type: Person, as: b, maxDepth: 2} RETURN b.node_id AS b"
+    ) == {(1,): 1, (2,): 1, (3,): 1}
+    rows = execute(
+        s,
+        "SELECT node_id, both('KNOWS') AS nb, both('KNOWS').size() AS deg "
+        "FROM Person ORDER BY node_id",
+    ).collect()
+    assert [(r.node_id, list(r.nb), r.deg) for r in rows] == [
+        (1, [2, 2], 2), (2, [1, 1, 3], 3), (3, [2, 3, 3], 3), (4, [], 0),
+    ]
+    # expand(both()) returns each neighbour node once (IN semi-join)
+    assert _ids(execute(
+        s, "SELECT expand(both('KNOWS')) FROM Person WHERE node_id = 3"
+    )) == [2, 3]
+    assert pairs(
+        "SELECT expand(bothE('KNOWS')) FROM Person WHERE node_id = 3"
+    ) == {(2, 3, "KNOWS"): 1, (3, 3, "KNOWS"): 2}
+    df = execute(
+        s, "TRAVERSE both('KNOWS') FROM (SELECT FROM Person WHERE node_id = 3)"
+    )
+    assert {r.node_id: r.depth for r in df.collect()} == {3: 0, 2: 1, 1: 2}
+
+
+_GRAPH_STMT_RE = re.compile(r"\b(?:MATCH|TRAVERSE)\b|expand\(|\b(?:out|in|both)E?\(")
+
+
+def _graph_corpus() -> list[tuple[str, object]]:
+    """Every MATCH, TRAVERSE, expand() and graph-projection statement
+    this module passes as a literal argument outside a
+    ``pytest.raises`` block, with its literal params."""
+    tree = ast.parse(Path(__file__).read_text())
+    raising: set[int] = set()
+    for node in ast.walk(tree):
+        if isinstance(node, ast.With) and any(
+            isinstance(item.context_expr, ast.Call)
+            and ast.unparse(item.context_expr.func) == "pytest.raises"
+            for item in node.items
+        ):
+            raising |= {id(n) for n in ast.walk(node)}
+    corpus: dict[tuple[str, str], tuple[str, object]] = {}
+    for node in ast.walk(tree):
+        if not isinstance(node, ast.Call) or id(node) in raising:
+            continue
+        for arg in node.args:
+            if not (isinstance(arg, ast.Constant) and isinstance(arg.value, str)):
+                continue
+            stmt = arg.value
+            head = stmt.split(None, 1)[0].upper() if stmt.strip() else ""
+            if head in ("SELECT", "MATCH", "TRAVERSE") and _GRAPH_STMT_RE.search(stmt):
+                params = next(
+                    (ast.literal_eval(k.value) for k in node.keywords
+                     if k.arg == "params"),
+                    None,
+                )
+                corpus[(stmt, repr(params))] = (stmt, params)
+    return list(corpus.values())
+
+
+def test_graph_statements_plan_without_nested_loops(graph_ws, monkeypatch):
+    """Every graph statement in this module plans as equi-joins: no
+    NestedLoopJoin or CartesianProduct in the executed plan, with
+    broadcast joins allowed and with them switched off. TRAVERSE's
+    frontier BFS is replaced by a stub that records its hop relation,
+    so the lint plans the hop legs and the result join without
+    running the loop."""
+    from biodwh2_arcadedb_server_spark.operators import graph
+
+    hops = []
+
+    def plan_only_bfs(hop, roots, max_depth):
+        hops.append(hop)
+        return roots.select("node_id", F.lit(0).alias("depth"))
+
+    monkeypatch.setattr(graph, "bfs", plan_only_bfs)
+    corpus = _graph_corpus()
+    assert len(corpus) >= 50  # the scan found the corpus
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    saved = graph_ws.conf.get(key)
+    bad = []
+    try:
+        for threshold in (saved, "-1"):
+            graph_ws.conf.set(key, threshold)
+            for stmt, params in corpus:
+                del hops[:]
+                df = execute(graph_ws, stmt, params=params)
+                for frame in (df, *hops):
+                    plan = frame._jdf.queryExecution().executedPlan().toString()
+                    if "NestedLoopJoin" in plan or "CartesianProduct" in plan:
+                        bad.append((threshold, stmt))
+    finally:
+        graph_ws.conf.set(key, saved)
+    assert bad == []
