@@ -131,7 +131,7 @@ Scale notes: the compiled SQL references only the per-label views
 subqueries, which Catalyst decorrelates into a left outer join +
 partial aggregate — shuffle on the edge key, no driver loops, no
 per-row Python. TRAVERSE reuses ``operators.graph.bfs``
-(frontier-join iteration, checkpoint every 3 rounds).
+(frontier-join iteration, checkpointed every level).
 """
 
 from __future__ import annotations
@@ -2090,7 +2090,12 @@ def _compile_select(sel: _Select) -> str:
     elif _VIEW_SOURCE_RE.fullmatch(sel.source_type):
         source = f"{sel.source_type} {sel.alias}"
     else:
-        source = f"n_{sel.source_type} {sel.alias}"
+        from biodwh2_arcadedb_server_spark import workspace as ws
+
+        # an edge type of the loaded workspace reads its e_<LABEL> view
+        # (an in-memory set, so no JVM call per statement)
+        kind = "e" if sel.source_type in ws.EDGE_LABELS else "n"
+        source = f"{kind}_{sel.source_type} {sel.alias}"
 
     if sel.expand_edge is not None:
         d, label = sel.expand_edge
@@ -2168,6 +2173,15 @@ def _edge_leg(d: str, label: str | None, view: str = "edges") -> str:
         f"SELECT *, {s} AS __s, {t} AS __t FROM {view}{where}"
         for s, t in ends[d]
     ) + ")"
+
+
+def _hop_sql(spark: SparkSession, steps) -> DataFrame:
+    """(src, dst) relation that TRAVERSE and shortestPath() walk: the
+    UNION ALL of the (direction, label) ``steps``' oriented legs."""
+    return spark.sql(" UNION ALL ".join(
+        f"SELECT __s AS src, __t AS dst FROM {_edge_leg(d, lbl)} __l"
+        for d, lbl in steps
+    ))
 
 
 def _compile_chain(
@@ -2452,7 +2466,7 @@ def translate(sql: str, params=None) -> str:
 
 def _register_shortest_path_views(spark: SparkSession, specs: list[dict]) -> None:
     """Materialize each ``shortestPath()`` spec as a BFS-tree temp
-    view (dst, hops, path) over the unified ``edges`` view. One
+    view (dst, hops, path) over the spec's leg (``_hop_sql``). One
     frontier-join BFS per DISTINCT spec (the parser dedups), amortized
     across every call-site row via the correlated-subquery-turned-join
     the compiled SQL contains."""
@@ -2460,18 +2474,11 @@ def _register_shortest_path_views(spark: SparkSession, specs: list[dict]) -> Non
         return
     from biodwh2_arcadedb_server_spark.operators.graph import shortest_path_tree
 
-    edges = spark.table("edges")
     for spec in specs:
-        e = edges
-        if spec["label"]:
-            e = e.where(F.col("label") == F.lit(spec["label"]))
-        if spec["direction"] == "in":
-            e = e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
         tree = shortest_path_tree(
-            e.select("src", "dst"),
+            _hop_sql(spark, [(spec["direction"], spec["label"])]),
             source=spec["source"],
             max_depth=spec["maxdepth"],
-            directed=spec["direction"] != "both",
         )
         tree = tree.select(
             F.col("dst").alias("__sp_dst"),
@@ -3038,10 +3045,7 @@ def _run_traverse(spark: SparkSession, stmt: "_Traverse") -> DataFrame:
     # and direction apply only to that step's leg — TRAVERSE out('A'),
     # in('B') follows out-A edges and in-B edges, never in-A or out-B,
     # and an unlabeled out() leg follows every edge type.
-    hop = spark.sql(" UNION ALL ".join(
-        f"SELECT __s AS src, __t AS dst FROM {_edge_leg(d, lbl)} __l"
-        for d, lbl in stmt.steps
-    ))
+    hop = _hop_sql(spark, stmt.steps)
     depth = stmt.maxdepth if stmt.maxdepth is not None else 2**31 - 1
     if depth < 0:
         # WHILE bound false at depth 0 — inclusion-gated TRAVERSE

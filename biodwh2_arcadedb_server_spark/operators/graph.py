@@ -10,14 +10,17 @@ pointers — the idiomatic equivalents are:
 - fixed-depth motif → chained equi-joins (B6)
 - TRAVERSE / BFS   → frontier iteration: join frontier→edges, anti-join
   visited, union, repeat; lineage truncated via localCheckpoint (B7)
-- shortest path    → BFS recording first-reach depth (B8)
+- shortest path    → BFS recording first-reach depth and min
+  predecessor (B8)
 - degrees/CC/PageRank → GraphX-style batch analytics re-expressed as
   DataFrame joins + aggregations (C6; cf. the GraphX/Pregel model)
 
 Conventions: ``edges(src: long, dst: long, ...)``, ``nodes(node_id:
 long, ...)``. All loops are O(diameter) or fixed-iteration; each round
 is one distributed join + aggregation, and only the loop-termination
-scalar ever reaches the driver.
+scalar ever reaches the driver. Every traversal walks the hop relation
+built by `_hop_relation` (the edge list, plus its reverse when
+undirected, deduplicated and checkpointed once).
 
 Scale notes (100 TB):
 - Frontiers and component tables carry only (id, value) — the shuffle
@@ -27,7 +30,10 @@ Scale notes (100 TB):
   re-analyzes an exponentially growing tree). The monotone fixpoints
   (hash-min CC, k-core, core numbers, SSSP, both SCC sweeps)
   checkpoint once per batch of 1, 2, 4, 4, ... steps through
-  `_fixpoint`.
+  `_fixpoint`. The four frontier BFS operators (bfs,
+  shortest_path_tree, closeness and betweenness) run on one level
+  driver, `_bfs_levels`, which still checkpoints the level and the
+  visited set at every level and stops on the first empty level.
 - hash-min CC converges in O(diameter) rounds; for the pathological
   high-diameter case the known fix is large-star/small-star
   (Kiveris et al., "Connected Components in MapReduce and Beyond",
@@ -146,6 +152,58 @@ def _count_and_sum(col: str):
     return measure
 
 
+def _hop_relation(edges: DataFrame, directed: bool = True) -> DataFrame:
+    """The (src, dst) relation a traversal walks: the edge list, plus
+    its reverse when undirected, deduplicated and checkpointed once so
+    no level or round re-runs the dedup exchange."""
+    hop = edges.select("src", "dst")
+    if not directed:
+        hop = hop.unionByName(hop.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
+    return hop.dropDuplicates(["src", "dst"]).localCheckpoint(eager=True)
+
+
+def _bfs_levels(
+    hop: DataFrame, start: DataFrame, max_depth: int, keys: tuple = (), aggs: tuple = ()
+) -> tuple[DataFrame, int]:
+    """Level-synchronous BFS over ``hop`` from the ``start`` rows
+    (keys..., node_id, payload..., depth = 0), where ``keys`` name
+    independent traversals that run together (one per pivot).
+
+    Each level joins the last level to ``hop`` on node_id = src,
+    groups the reached (keys..., dst) with ``aggs`` (the payload each
+    new node keeps, e.g. a min predecessor or a summed path count),
+    drops the (keys..., node_id) pairs already visited with an
+    anti-join, stamps the depth and checkpoints; the visited set is
+    re-checkpointed with it, so lineage stays one level deep. Stops on
+    an empty level or at ``max_depth``. Returns (visited rows,
+    last depth reached)."""
+    on = [*keys, "node_id"]
+    visited = level = start
+    reached = 0
+    payload = [c for c in start.columns if c not in (*on, "depth")]
+
+    def group(df):
+        return df.groupBy(*on).agg(*aggs) if aggs else df.select(*on).distinct()
+
+    def unvisited(df):
+        return df.join(visited.select(*on), on, "left_anti")
+
+    for d in range(1, max_depth + 1):
+        step = level.join(hop, level.node_id == hop.src).select(
+            *keys, F.col("dst").alias("node_id"), "src", *payload
+        )
+        # Keyless, group first: Catalyst would push an anti-join on dst
+        # alone below the hop join, over the whole hop relation. Keyed,
+        # anti-join first: it spares the last, empty level one job.
+        step = group(unvisited(step)) if keys else unvisited(group(step))
+        nxt = step.withColumn("depth", F.lit(d)).localCheckpoint(eager=True)
+        if nxt.isEmpty():
+            break
+        visited = visited.unionByName(nxt).localCheckpoint(eager=True)
+        level, reached = nxt, d
+    return visited, reached
+
+
 # --- B5: 1-hop expansion ------------------------------------------------------
 def expand(
     start: DataFrame,
@@ -207,42 +265,19 @@ def bfs(
     edges: DataFrame,
     start: DataFrame,
     max_depth: int = 10,
-    directed: bool = True,
     id_col: str = "node_id",
 ) -> DataFrame:
-    """Breadth-first traversal; returns (node_id, depth) with the
-    minimum hop count at which each node is first reached (depth 0 =
-    start set). Equivalent to the reference's TRAVERSE ... MAXDEPTH n
-    and, restricted to min depth, shortestPath hop counts.
+    """Breadth-first traversal along directed edges; returns (node_id,
+    depth) with the minimum hop count at which each node is first
+    reached (depth 0 = start set). Equivalent to the reference's
+    TRAVERSE ... MAXDEPTH n and, restricted to min depth, shortestPath
+    hop counts. For an undirected traversal pass a symmetric edge list
+    (both orientations of every edge).
     """
-    hop = edges.select("src", "dst")
-    if not directed:
-        hop = hop.unionByName(edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-    # checkpoint once (optimization r14): the dedup exchange used to
-    # re-execute inside EVERY depth's frontier join — one full edge
-    # shuffle per level; materialized it is paid once per traversal,
-    # the same posture as pagerank/sssp's edge checkpoint
-    hop = hop.dropDuplicates(["src", "dst"]).localCheckpoint(eager=True)
-
-    visited = start.select(F.col(id_col).alias("node_id")).distinct().withColumn(
-        "depth", F.lit(0)
-    )
-    frontier = visited.select("node_id")
+    hop = _hop_relation(edges)
+    start = start.select(F.col(id_col).alias("node_id")).distinct().withColumn("depth", F.lit(0))
     with _tight_loop(edges.sparkSession, hop.count()):
-        for d in range(1, max_depth + 1):
-            nxt = (
-                frontier.join(hop, frontier.node_id == hop.src)
-                .select(F.col("dst").alias("node_id"))
-                .distinct()
-                .join(visited.select("node_id"), "node_id", "left_anti")
-                .localCheckpoint(eager=True)
-            )
-            if nxt.isEmpty():
-                break
-            visited = visited.unionByName(nxt.withColumn("depth", F.lit(d))).localCheckpoint(
-                eager=True
-            )
-            frontier = nxt
+        visited, _ = _bfs_levels(hop, start, max_depth)
     return visited
 
 
@@ -497,11 +532,7 @@ def connected_components(
     raw = edges.select("src", "dst").localCheckpoint(eager=True)
     if raw.count() <= _cc_driver_edge_cap(edges.sparkSession):
         return _cc_driver(raw, raw.schema["src"].dataType, id_col_out)
-    und = (
-        raw.unionByName(raw.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-        .dropDuplicates(["src", "dst"])
-        .localCheckpoint(eager=True)
-    )
+    und = _hop_relation(raw, directed=False)
     n_edges = und.count()
     comp = (
         und.select(F.col("src").alias("node_id"))
@@ -879,7 +910,6 @@ def shortest_path_tree(
     edges: DataFrame,
     source: int,
     max_depth: int = 10,
-    directed: bool = True,
     target: int | None = None,
 ) -> DataFrame:
     """Hop-count shortest paths from ``source`` with the actual node
@@ -887,8 +917,9 @@ def shortest_path_tree(
     (dependency surface: reference ``src/pom.xml:104-108``), which
     returns the path, not just its length.
 
-    Returns (dst, hops, path array<long>) for every reachable node
-    (or only ``target`` when given). Among equal-hop paths the result
+    Returns (dst, hops, path array<long>) for every node reachable
+    along directed edges (or only ``target`` when given); pass a
+    symmetric edge list for an undirected tree. Among equal-hop paths the result
     is deterministic: each node records its MINIMUM first-reach
     predecessor, so the emitted path minimizes the predecessor
     sequence read backwards from ``dst`` (lexicographically minimal
@@ -903,33 +934,19 @@ def shortest_path_tree(
     phases are plain hash joins + min-aggregates on node keys, and
     lineage is truncated per level with localCheckpoint.
     """
-    hop = edges.select("src", "dst")
-    if not directed:
-        hop = hop.unionByName(edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-    hop = hop.where(F.col("src") != F.col("dst")).dropDuplicates(["src", "dst"]).localCheckpoint(eager=True)
-
+    # A self-loop only reaches a visited node, so dropping it changes no
+    # row; the filter's constraint lets Catalyst infer non-null ids in
+    # the path rebuild below, so both uses of each level reuse one
+    # exchange (q97 at sf0.01: 52 jobs per call with it, 55 without).
+    hop = _hop_relation(edges.where(F.col("src") != F.col("dst")))
     spark = edges.sparkSession
-    visited = local_df(spark, [(int(source), 0, None)], "node_id long, depth int, pred long")
-    frontier = visited.select("node_id")
-    reached_depth = 0
+    start = local_df(spark, [(int(source), 0, None)], "node_id long, depth int, pred long")
     with _tight_loop(spark, hop.count()):
-        for d in range(1, max_depth + 1):
-            nxt = (
-                frontier.join(hop, frontier.node_id == hop.src)
-                # min() over the frontier preds that first reach each node
-                # — the deterministic tie-break the docstring promises
-                .groupBy(F.col("dst").alias("node_id"))
-                .agg(F.min("src").alias("pred"))
-                .join(visited.select("node_id"), "node_id", "left_anti")
-                .localCheckpoint(eager=True)
-            )
-            if nxt.isEmpty():
-                break
-            visited = visited.unionByName(nxt.withColumn("depth", F.lit(d))).localCheckpoint(
-                eager=True
-            )
-            frontier = nxt.select("node_id")
-            reached_depth = d
+        # min() over the last level's nodes that first reach a node —
+        # the deterministic tie-break the docstring promises
+        visited, reached_depth = _bfs_levels(
+            hop, start, max_depth, aggs=(F.min("src").alias("pred"),)
+        )
 
     # Level-wise path reconstruction: depth-d nodes append themselves
     # to their predecessor's (already final) depth d-1 path.
@@ -1133,6 +1150,37 @@ def k_truss(edges: DataFrame, k: int, max_iter: int = 30) -> DataFrame:
     return live.select("a", "b")
 
 
+def _pivot_bfs(
+    edges: DataFrame,
+    pivots: DataFrame | None,
+    max_depth: int,
+    directed: bool,
+    payload: tuple = (),
+    aggs: tuple = (),
+) -> tuple[DataFrame, DataFrame, DataFrame, int]:
+    """The multi-source BFS under closeness and betweenness: every
+    pivot (every node when ``pivots`` is None) traverses at once, keyed
+    by ``pivot``, so K sources cost depth-many levels, not K runs.
+    Returns (hop relation, all nodes, visited (pivot, node_id,
+    payload..., depth), last depth reached)."""
+    hop = _hop_relation(edges, directed)
+    all_nodes = (
+        hop.select(F.col("src").alias("node_id"))
+        .unionByName(hop.select(F.col("dst").alias("node_id")))
+        .distinct()
+        .localCheckpoint(eager=True)
+    )
+    start = (
+        (pivots if pivots is not None else all_nodes)
+        .select(F.col("node_id").alias("pivot"), "node_id", F.lit(0).alias("depth"), *payload)
+        .localCheckpoint(eager=True)
+    )
+    # per-level shuffle volume is O(pivots x reachable nodes)
+    with _tight_loop(edges.sparkSession, start.count() * all_nodes.count()):
+        visited, reached = _bfs_levels(hop, start, max_depth, ("pivot",), aggs)
+    return hop, all_nodes, visited, reached
+
+
 def closeness_centrality(
     edges: DataFrame,
     pivots: DataFrame | None = None,
@@ -1145,46 +1193,11 @@ def closeness_centrality(
     (n-1)/Σd when every node is a pivot and the graph is connected —
     and 0.0 when nothing reaches the node.
 
-    One multi-source BFS: the frontier carries (pivot, node, depth)
-    triples, so K sources traverse together in depth-many rounds —
-    one job per depth regardless of K, not K separate BFS runs. With
-    ``pivots=None`` every node is a source (exact closeness, cost
-    O(n·m) messages — fine to diameter on mid graphs); at 100 TB pass
-    a sampled pivot set: the estimator converges ~1/sqrt(K)
-    (Eppstein-Wang) and the plan is unchanged."""
-    e = edges.select("src", "dst")
-    if not directed:
-        e = e.unionByName(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-    e = e.dropDuplicates().localCheckpoint(eager=True)
-    all_nodes = (
-        e.select(F.col("src").alias("node_id"))
-        .unionByName(e.select(F.col("dst").alias("node_id")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    src = (pivots if pivots is not None else all_nodes).select(
-        F.col("node_id").alias("pivot")
-    )
-    # visited: (pivot, node_id, depth) — first reach wins (BFS depth)
-    visited = src.select("pivot", F.col("pivot").alias("node_id"), F.lit(0).alias("depth"))
-    visited = visited.localCheckpoint(eager=True)
-    frontier = visited
-    # per-round shuffle volume is O(pivots x reachable nodes)
-    _pivot_rows = visited.count() * all_nodes.count()
-    with _tight_loop(edges.sparkSession, _pivot_rows):
-        for d in range(1, max_depth + 1):
-            nxt = (
-                frontier.join(e, frontier.node_id == e.src)
-                .select("pivot", F.col("dst").alias("node_id"))
-                .join(visited.select("pivot", "node_id"), ["pivot", "node_id"], "left_anti")
-                .dropDuplicates(["pivot", "node_id"])
-                .withColumn("depth", F.lit(d))
-                .localCheckpoint(eager=True)
-            )
-            if nxt.isEmpty():
-                break
-            visited = visited.unionByName(nxt).localCheckpoint(eager=True)
-            frontier = nxt
+    One multi-source BFS (``_pivot_bfs``). With ``pivots=None`` every
+    node is a source (exact, O(n·m) messages); at 100 TB pass a sampled
+    pivot set: the estimator converges ~1/sqrt(K) (Eppstein-Wang) and
+    the plan is unchanged."""
+    _, all_nodes, visited, _ = _pivot_bfs(edges, pivots, max_depth, directed)
     per_node = (
         visited.where(F.col("depth") > 0)
         .groupBy("node_id")
@@ -1220,42 +1233,10 @@ def betweenness_centrality(
     never the node count. With ``pivots=None`` the result is exact;
     a sampled pivot set gives the standard Brandes-Pich estimator at
     K/n of the message volume, same plan."""
-    e = edges.select("src", "dst")
-    if not directed:
-        e = e.unionByName(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-    e = e.dropDuplicates().localCheckpoint(eager=True)
-    all_nodes = (
-        e.select(F.col("src").alias("node_id"))
-        .unionByName(e.select(F.col("dst").alias("node_id")))
-        .distinct()
-        .localCheckpoint(eager=True)
+    e, all_nodes, visited, max_d = _pivot_bfs(
+        edges, pivots, max_depth, directed,
+        payload=(F.lit(1.0).alias("sigma"),), aggs=(F.sum("sigma").alias("sigma"),),
     )
-    src = (pivots if pivots is not None else all_nodes).select(F.col("node_id").alias("pivot"))
-    visited = src.select(
-        "pivot", F.col("pivot").alias("node_id"), F.lit(0).alias("depth"), F.lit(1.0).alias("sigma")
-    ).localCheckpoint(eager=True)
-    frontier = visited
-    max_d = 0
-    # per-round shuffle volume is O(pivots x reachable nodes)
-    _pivot_rows = visited.count() * all_nodes.count()
-    with _tight_loop(edges.sparkSession, _pivot_rows):
-        for d in range(1, max_depth + 1):
-            nxt = (
-                frontier.join(e, frontier.node_id == e.src)
-                .select("pivot", F.col("dst").alias("node_id"), "sigma")
-                .join(visited.select("pivot", "node_id"), ["pivot", "node_id"], "left_anti")
-                .groupBy("pivot", "node_id")
-                .agg(F.sum("sigma").alias("sigma"))
-                .withColumn("depth", F.lit(d))
-                .localCheckpoint(eager=True)
-            )
-            if nxt.isEmpty():
-                break
-            visited = visited.unionByName(nxt.select("pivot", "node_id", "depth", "sigma")).localCheckpoint(
-                eager=True
-            )
-            frontier = nxt
-            max_d = d
     # per-pivot shortest-path DAG: u→v with depth_v = depth_u + 1.
     # Distinct column names on the two visited projections — a bare
     # self-join on `pivot` resolves as the trivially-true predicate.
@@ -1410,12 +1391,7 @@ def label_propagation(edges: DataFrame, max_iter: int = 5) -> DataFrame:
     """Synchronous LPA for community detection: each round a node
     adopts the most frequent label among neighbors (ties → smallest
     label, for determinism). Returns (node_id, community)."""
-    und = (
-        edges.select("src", "dst")
-        .unionByName(edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-        .dropDuplicates(["src", "dst"])
-        .localCheckpoint(eager=True)
-    )
+    und = _hop_relation(edges, directed=False)
     labels = und.select(F.col("src").alias("node_id")).distinct().withColumn(
         "community", F.col("node_id")
     )

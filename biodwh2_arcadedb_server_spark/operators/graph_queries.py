@@ -116,7 +116,7 @@ def q20_motif_2hop(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q21_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     g = nation_graph(spark, sf_dir, 211)
     start = spark.range(1).select(F.lit(0).cast("long").alias("node_id"))
-    return bfs(g, start, max_depth=4, directed=True)
+    return bfs(g, start, max_depth=4)
 
 
 # --- C6: connected components --------------------------------------------------------

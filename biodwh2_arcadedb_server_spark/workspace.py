@@ -80,6 +80,11 @@ class EdgeSpec:
 # registered views it addresses.
 RID_BUCKET_LABELS: list[str] = []
 
+# Edge types of the last-loaded workspace: the dialect compiles
+# `SELECT FROM <EdgeType>` to its `e_<LABEL>` view. Set under the DML
+# lock with RID_BUCKET_LABELS.
+EDGE_LABELS: frozenset[str] = frozenset()
+
 # Bumped every time load_workspace (re)registers the session views —
 # lets probe-side view caches (dialect_queries._register_star_workspace)
 # know their temp views were displaced and must re-register (round 10:
@@ -1225,7 +1230,7 @@ def load_workspace(spark: SparkSession, ws_dir: str) -> dict:
     # lock-free readers see either the old or the new list whole.
     from biodwh2_arcadedb_server_spark import arcadesql as _asql
 
-    global LAST_WS_DIR
+    global LAST_WS_DIR, EDGE_LABELS
     with _asql._DML_LOCK:
         # the epoch bump lives INSIDE the lock — an unguarded
         # read-modify-write here races _register_star_workspace's
@@ -1236,6 +1241,7 @@ def load_workspace(spark: SparkSession, ws_dir: str) -> dict:
             manifest["nodes"]
         )
         LAST_WS_DIR = ws_dir
+        EDGE_LABELS = frozenset(manifest["edges"])
 
     def _read(path, info):
         # The manifest carries the authoritative schema (written at

@@ -27,6 +27,22 @@ def _nation_count(spark):
     return execute(spark, "SELECT count(*) AS n FROM Nation").collect()[0].n
 
 
+def test_select_from_edge_type(spark, dml_ws):
+    """`SELECT … FROM <EdgeType>` reads the type's `e_<LABEL>` view,
+    over a workspace registered by load_workspace as the server does."""
+    from biodwh2_arcadedb_server_spark.arcadesql import translate
+    from biodwh2_arcadedb_server_spark.workspace import read_manifest
+
+    load_workspace(spark, dml_ws)
+    assert " e_PLACED " in translate("SELECT FROM PLACED")
+    n = execute(spark, "SELECT count(*) AS n FROM PLACED").collect()[0].n
+    assert n == read_manifest(dml_ws)["edges"]["PLACED"]["count"] > 0
+    row = execute(spark, "SELECT FROM PLACED LIMIT 1").collect()[0].asDict()
+    assert row["label"] == "PLACED" and {"src", "dst"} <= row.keys()
+    # node types still read their n_<Label> view
+    assert " n_Nation " in translate("SELECT FROM Nation")
+
+
 def test_writes_disabled_by_default(spark, dml_ws):
     with pytest.raises(ArcadeSQLError, match="read-only"):
         execute(spark, "UPDATE Nation SET n_name = 'X'")

