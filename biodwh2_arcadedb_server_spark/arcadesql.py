@@ -2503,8 +2503,8 @@ def _endpoint_df(spark, ws, expr: str, side_label: str, out: str):
     endpoint is ONE natural key (node id derives as xxhash64(label,
     key)); a ``(SELECT …)`` endpoint is the ArcadeDB set form — the
     statement applies to every (src, dst) pair of the two result
-    sets. Returns (1-column node-id DataFrame named ``out``,
-    is_set)."""
+    sets. Returns (1-column node-id DataFrame named ``out``, the key
+    Column for a one-key endpoint or None for a set)."""
     s = expr.strip()
     if s.startswith("(SELECT"):
         sub = spark.sql(s[1:-1])
@@ -2513,13 +2513,9 @@ def _endpoint_df(spark, ws, expr: str, side_label: str, out: str):
                 "edge endpoint subquery must return node rows "
                 "(missing node_id)"
             )
-        return sub.select(F.col("node_id").alias(out)), True
-    return (
-        spark.range(1).select(
-            ws.node_id(side_label, F.expr(expr)).alias(out)
-        ),
-        False,
-    )
+        return sub.select(F.col("node_id").alias(out)), None
+    key = ws.node_id(side_label, F.expr(expr)).alias(out)
+    return spark.range(0, 1, 1, 1).select(key), key
 
 
 def _execute_dml(
@@ -2629,9 +2625,10 @@ def _execute_dml_locked(
         # localCheckpoint. node_id is immutable under UPDATE (identity
         # columns are guarded), which is what makes the AFTER
         # semi-join correct.
-        npath = ws.dataset_path(workspace_dir, "nodes", stmt.label)
         try:
-            matched = spark.read.parquet(npath).where(pred)
+            matched = ws.read_dataset(
+                spark, workspace_dir, "nodes", stmt.label
+            ).where(pred)
         except Exception as exc:
             raise ArcadeSQLError(
                 f"unknown vertex type {stmt.label!r}"
@@ -2670,8 +2667,8 @@ def _execute_dml_locked(
             if ret_mode == "after":
                 # RETURN AFTER on the upsert-insert branch: the WHERE's
                 # key equality selects the freshly inserted record
-                return spark.read.parquet(
-                    ws.dataset_path(workspace_dir, "nodes", stmt.label)
+                return ws.read_dataset(
+                    spark, workspace_dir, "nodes", stmt.label
                 ).where(pred).localCheckpoint(eager=True)
             if ret_mode == "before":
                 return before_rows  # nothing matched: empty
@@ -2687,9 +2684,7 @@ def _execute_dml_locked(
             # mutation's dataset swap (a lazy plan over the current
             # files would die on it)
             return (
-                spark.read.parquet(
-                    ws.dataset_path(workspace_dir, "nodes", stmt.label)
-                )
+                ws.read_dataset(spark, workspace_dir, "nodes", stmt.label)
                 .join(ret_ids, "node_id", "left_semi")
                 .localCheckpoint(eager=True)
             )
@@ -2731,8 +2726,8 @@ def _execute_dml_locked(
                 f"(known: {sorted(manifest['edges'])})"
             )
         info = manifest["edges"][stmt.label]
-        e_schema = spark.read.parquet(
-            ws.dataset_path(workspace_dir, "edges", stmt.label)
+        e_schema = ws.read_dataset(
+            spark, workspace_dir, "edges", stmt.label, manifest
         ).schema
         props = stmt.rows[0]
         unknown = set(props) - {
@@ -2744,13 +2739,17 @@ def _execute_dml_locked(
                 f"unknown edge propert{'ies' if len(unknown) > 1 else 'y'} "
                 f"for {stmt.label}: {sorted(unknown)}"
             )
-        src_df, src_set = _endpoint_df(spark, ws, stmt.edge_from, info["src_label"], "src")
-        dst_df, dst_set = _endpoint_df(spark, ws, stmt.edge_to, info["dst_label"], "dst")
-        # pair product of the endpoint sets (1×1 for literal keys).
-        # Interactive endpoint selections are small; broadcasting the
-        # dst side keeps the product shuffle-free — the cross join IS
-        # the requested semantics, not an accident.
-        rows = src_df.crossJoin(F.broadcast(dst_df))
+        src_df, src_key = _endpoint_df(spark, ws, stmt.edge_from, info["src_label"], "src")
+        dst_df, dst_key = _endpoint_df(spark, ws, stmt.edge_to, info["dst_label"], "dst")
+        if src_key is not None and dst_key is not None:
+            # two one-key endpoints: one row, no join
+            rows = spark.range(0, 1, 1, 1).select(src_key, dst_key)
+        else:
+            # pair product of the endpoint sets. Interactive endpoint
+            # selections are small; broadcasting the dst side keeps the
+            # product shuffle-free — the cross join IS the requested
+            # semantics, not an accident.
+            rows = src_df.crossJoin(F.broadcast(dst_df))
         for f in e_schema.fields:
             if f.name in ("src", "src2", "dst", "dst2", "label"):
                 # structural columns, never statement-settable; on a
@@ -2767,8 +2766,9 @@ def _execute_dml_locked(
             )
         n = ws.insert_edges(spark, workspace_dir, stmt.label, rows)
     else:  # insert
-        path = ws.dataset_path(workspace_dir, "nodes", stmt.label)
-        cur_schema = spark.read.parquet(path).schema
+        cur_schema = ws.read_dataset(
+            spark, workspace_dir, "nodes", stmt.label
+        ).schema
         writable = [
             f for f in cur_schema.fields
             if f.name not in ("node_id", "node_id2", "label")
@@ -2777,8 +2777,8 @@ def _execute_dml_locked(
         # statement-level within-batch dedupe, FIRST literal wins —
         # deterministic, unlike a plan-level dropDuplicates whose
         # survivor is partitioning-dependent (round-7 review finding);
-        # the node_id-level dropDuplicates in insert_nodes stays as
-        # the safety net for differently-spelled equal keys
+        # insert_nodes' id-level dedupe stays as the safety net for
+        # differently-spelled equal keys
         seen_keys: set[str] = set()
         rows_in_order = []
         for row in stmt.rows:
@@ -2806,7 +2806,7 @@ def _execute_dml_locked(
                 .alias(f.name)
                 for f in writable
             ]
-            frames.append(spark.range(1).select(*cols))
+            frames.append(spark.range(0, 1, 1, 1).select(*cols))
         rows_df = frames[0]
         for fr in frames[1:]:
             rows_df = rows_df.unionByName(fr)

@@ -5,13 +5,14 @@ artifact (`/root/reference/src/pom.xml:109-113`): every vertex type is
 exposed as a GraphQL object type whose fields are the vertex
 properties, and relationship fields traverse edges to related
 vertices. This module re-expresses that surface Spark-first: a
-GraphQL executable document compiles to ONE declarative DataFrame
-plan over the workspace views (`n_<Label>` / `e_<LABEL>`,
+GraphQL read document compiles to ONE Spark SQL statement over the
+workspace views (`n_<Label>` / `e_<LABEL>`,
 workspace.load_workspace), so Catalyst sees the whole query —
-equality arguments push down to the parquet scan, selection sets
-become column pruning, and nested selections become edge joins
-aggregated into `array<struct>` columns (the natural relational
-encoding of GraphQL's nested lists).
+argument values are bound as ``spark.sql`` args (the literals
+``F.lit`` would build), equality arguments push down to the parquet
+scan, selection sets become column pruning, and nested selections
+become edge joins aggregated into `array<struct>` columns (the
+natural relational encoding of GraphQL's nested lists).
 
 Supported subset (the read path the reference's plugin serves):
 
@@ -59,10 +60,12 @@ insert/update/delete (cascading) behind the same ``allow_writes``
 opt-in as the SQL dialect — default OFF, the reference's read-only
 posture.
 
-Scale notes: the compiled plan is join + groupBy(collect_list) per
-nesting level, shuffling on node ids only after per-label column
-pruning; a root `limit` truncates the parent side before any
-traversal join. No driver-side row handling anywhere — execution
+Scale notes (SCALE.md "Serving reads"): each relationship field is
+joined from the kept parent rows (kept rows LEFT JOIN edge LEFT JOIN
+child) and grouped by the parent's node id, one aggregate per field,
+so a one-key request aggregates that key's edges only. A root `limit`
+applies to the answer; the nested aggregates cover every root the
+arguments keep. No driver-side row handling anywhere — execution
 returns an unmaterialized DataFrame.
 """
 
@@ -72,7 +75,6 @@ import re
 from dataclasses import dataclass, field as dc_field
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from biodwh2_arcadedb_server_spark.workspace import EDGE_SPECS, NODE_SPECS
 from biodwh2_arcadedb_server_spark.localrel import local_df
@@ -505,35 +507,68 @@ def _expand_inline(spark: SparkSession, selection: list[Field], label: str) -> l
     return out
 
 
-def _build(
+class _Statement:
+    """One SQL statement under construction: its CTEs in dependency
+    order and the values bound to its ``:aN`` parameter markers."""
+
+    def __init__(self) -> None:
+        self.ctes: list[str] = []
+        self.args: dict = {}
+
+    def bind(self, value) -> str:
+        # spark.sql(args=) turns each value into the literal F.lit would
+        # build (a float stays DOUBLE, a string never meets the parser)
+        name = f"a{len(self.args)}"
+        self.args[name] = value
+        return f":{name}"
+
+    def cte(self, body: str) -> str:
+        name = f"__gql{len(self.ctes)}"
+        self.ctes.append(f"{name} AS ({body})")
+        return name
+
+
+def _level(
     spark: SparkSession,
     label: str,
     fld: Field,
     rels: dict[str, dict[str, Rel]],
-    *,
-    keep_node_id: bool,
-) -> DataFrame:
+    q: _Statement,
+    kept: str | None = None,
+) -> tuple[str, list[str]]:
+    """Compile one selection level into a CTE holding one row per kept
+    ``n_<label>`` node: its id (``__gql_id``) plus the response keys,
+    which are returned with the CTE's name. Rows are the label filtered
+    by the equality arguments and, when ``kept`` names a relation of
+    ids, by membership in it. Each relationship field is joined from
+    these rows (rows LEFT JOIN edge LEFT JOIN child) and grouped by the
+    row's id into a sorted array, one aggregate per field: siblings
+    never meet in one join, so they cannot multiply."""
     try:
-        df = spark.table(f"n_{label}")
+        cols = set(spark.table(f"n_{label}").columns)
     except Exception as exc:
         raise GraphQLError(f"unknown type {label!r} (no n_{label} view)") from exc
-    limit = None
+    preds = []
     for k, v in fld.args.items():
+        # `limit` is read, never popped: Field objects are shared across
+        # fragment spreads, so the second spread of a fragment must still
+        # see it. The root applies it to the answer, a nested field
+        # slices each parent's array.
         if k == "limit":
-            limit = int(v)
             continue
-        if k not in df.columns:
+        if k not in cols:
             raise GraphQLError(f"unknown argument {k!r} on type {label!r}")
-        df = df.where(F.col(k) == F.lit(v))
+        preds.append(f"`{k}` = {q.bind(v)}")
+    if kept is not None:
+        preds.append(f"node_id IN (SELECT id FROM {kept})")
 
     selection = _expand_inline(spark, fld.selection, label)
     scalars: dict[str, str] = {}  # response key -> source column
-    nested: list[Field] = []
+    nested: dict[str, Field] = {}
     # response key -> ("scalar"|"nested", source field) across BOTH
     # kinds: an aliased scalar and a nested relationship sharing one
     # response key is just as unmergeable as scalar-vs-scalar (spec
-    # §5.3.2) — without this the nested join's withColumn would
-    # silently overwrite the scalar column (round-9 review finding)
+    # §5.3.2)
     key_kinds: dict[str, tuple[str, str]] = {}
     for sub in selection:
         kind = "nested" if sub.selection else "scalar"
@@ -545,86 +580,86 @@ def _build(
                 "§5.3.2 field merging)"
             )
         if sub.selection:
-            nested.append(sub)
+            nested.setdefault(sub.out, sub)
+        elif sub.name == "__typename":
+            # meta-field (spec §4.4): the enclosing type's name — every
+            # real client (Apollo normalized caches, GraphiQL) sprinkles
+            # this into selections
+            scalars.setdefault(sub.out, "__typename")
+        elif sub.name not in cols:
+            raise GraphQLError(f"unknown field {sub.name!r} on type {label!r}")
         else:
-            if sub.name == "__typename":
-                # meta-field (spec §4.4): the enclosing type's name as
-                # a literal — every real client (Apollo normalized
-                # caches, GraphiQL) sprinkles this into selections
-                scalars.setdefault(sub.out, "__typename")
-                continue
-            if sub.name not in df.columns:
-                raise GraphQLError(f"unknown field {sub.name!r} on type {label!r}")
-            # response key is the alias when present (spec §2.7);
-            # identical keys selecting the SAME field merge (spec
-            # §5.3.2), but the same key over DIFFERENT fields is an
-            # unmergeable document — silently keeping the first would
-            # hand the client the wrong column under that key
-            # (round-8 review finding)
-            prev = scalars.setdefault(sub.out, sub.name)
-            if prev != sub.name:
-                raise GraphQLError(
-                    f"response key {sub.out!r} selects conflicting "
-                    f"fields {prev!r} and {sub.name!r} (spec §5.3.2 "
-                    "field merging)"
-                )
+            # identical keys over the same field merge (spec §5.3.2);
+            # the same key over different fields was rejected above
+            scalars.setdefault(sub.out, sub.name)
     if not selection:
         raise GraphQLError(f"selection set required on type {label!r}")
 
-    # column pruning before any join: only requested fields travel
-    df = df.select(
-        "node_id",
-        *[
-            (F.lit(label) if src == "__typename" else F.col(src)).alias(out)
+    # only requested fields travel
+    rows = q.cte(
+        "SELECT node_id AS __gql_id"
+        + "".join(
+            f", {q.bind(label) if src == '__typename' else f'`{src}`'} AS `{out}`"
             for out, src in scalars.items()
-        ],
+        )
+        + f" FROM n_{label}"
+        + (f" WHERE {' AND '.join(preds)}" if preds else "")
     )
-    # row limit applies at the ROOT only; on nested fields the caller
-    # slices each parent's collected array instead (per-parent
-    # semantics), so the same arg must not also truncate the child
-    # table here
-    if limit is not None and keep_node_id:
-        df = df.limit(limit)
-
-    for nf in nested:
+    kept_rows, keys = rows, list(scalars)
+    for out, nf in nested.items():
         rel = rels.get(label, {}).get(nf.name)
         if rel is None:
             known = sorted(rels.get(label, {}))
             raise GraphQLError(
                 f"unknown relationship {nf.name!r} on type {label!r} (known: {known})"
             )
-        e = spark.table(f"e_{rel.edge}").select("src", "dst")
-        if rel.direction == "in":
-            e = e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        # `limit` on a NESTED field is PER PARENT (GraphQL client
-        # expectation): it must slice each parent's sorted child
-        # array, not truncate the child table globally before the
-        # join (which would return "the first N children overall").
-        # READ, never pop: Field objects are shared across fragment
-        # spreads (shallow-copied selections), so mutating args here
-        # would drop the limit from the second spread of the same
-        # fragment (round-7 review finding); _build ignores `limit`
-        # on non-root fields instead.
-        nested_limit = nf.args.get("limit")
-        child = _build(spark, rel.target, nf, rels, keep_node_id=False)
-        linked = e.join(child, e.dst == child._gql_key).select(
-            F.col("src").alias("_parent"),
-            F.struct(*[c for c in child.columns if c != "_gql_key"]).alias("_s"),
+        near, far = ("src", "dst") if rel.direction == "out" else ("dst", "src")
+        edges = f"(SELECT {near} AS near, {far} AS far FROM e_{rel.edge})"
+        reached = None
+        if any(sub.selection for sub in nf.selection):
+            # the child has relationships of its own: compute them only
+            # for the children these rows reach
+            reached = q.cte(
+                f"SELECT far AS id FROM {edges} "
+                f"WHERE near IN (SELECT __gql_id FROM {kept_rows})"
+            )
+        child, child_keys = _level(spark, rel.target, nf, rels, q, reached)
+        item = "named_struct({})".format(
+            ", ".join(f"'{k}', c.`{k}`" for k in child_keys)
         )
-        arr = F.sort_array(F.collect_list("_s"))
-        if nested_limit is not None:
-            arr = F.slice(arr, 1, int(nested_limit))
-        agg = linked.groupBy("_parent").agg(arr.alias(nf.out))
-        arr_type = agg.schema[nf.out].dataType
-        df = (
-            df.join(agg, df.node_id == agg._parent, "left")
-            .drop("_parent")
-            .withColumn(nf.out, F.coalesce(F.col(nf.out), F.array().cast(arr_type)))
+        arr = (
+            f"sort_array(collect_list("
+            f"CASE WHEN c.__gql_id IS NOT NULL THEN {item} END))"
         )
+        if nf.args.get("limit") is not None:
+            arr = f"slice({arr}, 1, {int(nf.args['limit'])})"
+        rows = q.cte(
+            "SELECT r.__gql_id, "
+            + "".join(f"any_value(r.`{k}`) AS `{k}`, " for k in keys)
+            + f"{arr} AS `{out}` FROM {rows} r "
+            f"LEFT JOIN {edges} e ON e.near = r.__gql_id "
+            f"LEFT JOIN {child} c ON c.__gql_id = e.far GROUP BY r.__gql_id"
+        )
+        keys.append(out)
+    return rows, keys
 
-    if keep_node_id:
-        return df
-    return df.withColumnRenamed("node_id", "_gql_key")
+
+def _compile(
+    spark: SparkSession, fld: Field, rels: dict[str, dict[str, Rel]]
+) -> tuple[str, dict]:
+    """A read document → one Spark SQL statement and its bound values.
+    Every relationship field is joined from the kept parent rows and
+    grouped by the parent id, so a one-key request aggregates that
+    key's edges only; a root ``limit`` applies to the answer."""
+    q = _Statement()
+    top, keys = _level(spark, fld.name, fld, rels, q)
+    text = (
+        "WITH " + ", ".join(q.ctes)
+        + f" SELECT {', '.join(f'`{k}`' for k in keys)} FROM {top}"
+    )
+    if fld.args.get("limit") is not None:
+        text += f" LIMIT {int(fld.args['limit'])}"
+    return text, q.args
 
 
 def execute(
@@ -669,8 +704,8 @@ def execute(
         return _introspect(spark, rels)
     if root.name == "__type":
         return _introspect_type(spark, rels, root)
-    df = _build(spark, root.name, root, rels, keep_node_id=True)
-    return df.drop("node_id")
+    text, args = _compile(spark, root, rels)
+    return spark.sql(text, args=args or None)
 
 
 def _sql_literal(v) -> str:

@@ -233,7 +233,7 @@ def q146_shortestpath_dialect(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q145_graphql(spark: SparkSession, sf_dir: str) -> DataFrame:
     """User-typed GraphQL document through graphql.execute — root
     scan + argument pushdown + one nested edge join aggregated to a
-    sorted array<struct>, compiled to ONE DataFrame plan. The nested
+    sorted array<struct>, compiled to ONE Spark SQL statement. The nested
     array is stringified for the driver canonicalizer (struct sort
     is by field order; o_orderkey leads and is unique)."""
     from biodwh2_arcadedb_server_spark import graphql

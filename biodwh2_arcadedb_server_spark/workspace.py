@@ -44,8 +44,9 @@ import shutil
 from dataclasses import dataclass, field
 
 from pyspark import StorageLevel
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, Observation, Row, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from biodwh2_arcadedb_server_spark.sources.registry import load_table
 from biodwh2_arcadedb_server_spark.typemap import IGNORED_FIELDS
@@ -185,6 +186,27 @@ def label_kind(manifest: dict, label: str) -> str:
         if label in manifest[kind]:
             return kind
     raise ValueError(f"unknown type {label!r}")
+
+
+def read_dataset(
+    spark: SparkSession,
+    ws_dir: str,
+    kind: str,
+    label: str,
+    manifest: dict | None = None,
+) -> DataFrame:
+    """One label's dataset, read with the schema its manifest entry
+    declares. The manifest schema is written at build time and kept
+    current by every schema-changing DDL, so no parquet footer is read
+    (each inferring read is a one-task Spark job); the schema is
+    inferred only for an entry without one, or an unknown label."""
+    if manifest is None:
+        manifest = read_manifest(ws_dir)
+    schema_json = manifest.get(kind, {}).get(label, {}).get("schema")
+    path = dataset_path(ws_dir, kind, label)
+    if schema_json:
+        return spark.read.schema(StructType.fromJson(schema_json)).parquet(path)
+    return spark.read.parquet(path)
 
 
 def _dataset_row_count(spark: SparkSession, path: str) -> int:
@@ -485,21 +507,27 @@ def _rewrite_dataset(df: DataFrame, path: str) -> None:
     os.replace(tmp, path)
 
 
-def _append_via_tmp(df: DataFrame, path: str, driver_cap: int = 10_000) -> int:
-    """Append ``df`` to the dataset through the STAGED-COMMIT
-    protocol (sources/staged_write.py — round 13, VERDICT r12 #6):
-    stage → commit(moves only reported files) → token summary, so a
-    failed or cancelled insert leaves the dataset byte-identical (the
-    r8 tmp-dir move could die mid-move), retries cannot double-
-    append, and the count comes from the commit record (no footer
-    re-read). Size-dispatched like a join strategy: statement-scale
-    batches (≤ ``driver_cap`` rows after the validation joins —
-    every dialect INSERT/CREATE EDGE) collect once and the DRIVER is
-    the single write task (``driver_staged_append``; the distributed
-    Python-DataSource writer pays a measured ~0.3s worker launch per
-    write job, which at 2-row statements was 2× the whole old path);
-    anything larger re-runs through the distributed
-    ``workspace_append`` writer, whose tasks stage in parallel.
+def _append_via_tmp(
+    df: DataFrame,
+    path: str,
+    driver_cap: int = 10_000,
+    screen=None,
+    validate=None,
+) -> int:
+    """Append the candidate rows of ``df`` through the STAGED-COMMIT
+    protocol (sources/staged_write.py): a failed or cancelled insert
+    leaves the dataset byte-identical, retries cannot double-append,
+    and the count comes from the commit record. Size-dispatched on the
+    CANDIDATE rows, ahead of any validation:
+
+    - at most ``driver_cap`` rows (every dialect INSERT / CREATE EDGE):
+      the rows are collected once, ``screen(rows)`` checks them on the
+      driver (point probes of the id columns) and the DRIVER is the
+      single write task (``driver_staged_append``) — no join, no
+      shuffle, no Python-worker launch;
+    - more: ``validate(df)`` applies the distributed joins and the
+      ``workspace_append`` writer stages in parallel tasks.
+
     Returns rows appended."""
     import uuid as _uuid
 
@@ -510,26 +538,21 @@ def _append_via_tmp(df: DataFrame, path: str, driver_cap: int = 10_000) -> int:
     )
 
     spark = df.sparkSession
-    # Persist BEFORE the size probe (ADVICE r13): the probe plan and
-    # the >cap distributed write must see the same data exactly once.
-    # Caching is partition-granular — partitions the limit() touched
-    # are reused by the write, the rest compute once there — so a
-    # nondeterministic upstream expression (rand-derived ids) cannot
-    # diverge between "rows probed" and "rows appended", and the
-    # at-threshold case no longer pays the validation joins twice.
+    # Persisted BEFORE the size probe: partitions the probe computed are
+    # reused by the >cap write, so every input row is evaluated once (a
+    # nondeterministic upstream cannot diverge between probe and write).
     df = df.persist(StorageLevel.MEMORY_AND_DISK)
     try:
-        # ONE parallel count materializes the persist and sizes the
-        # dispatch (optimization r15, VERDICT r14 next #3): the former
-        # ``limit(cap+1).collect()`` probe ran through executeTake's
-        # incremental partition escalation — 3-5 tiny sequential jobs
-        # per statement, each paying the ~50-80 ms scheduling gap the
-        # q158 profile attributed most of the probe's wall to. The
-        # ≤cap path then collects from the cache (cheap second job);
-        # the >cap path no longer collects cap+1 rows at all.
-        n = df.count()
-        if n <= driver_cap:
-            return driver_staged_append(path, df.schema, df.collect())
+        # one job over a one-partition input (the dialect builds its
+        # statement rows as one partition); a wider input takes a few
+        # jobs over growing partition counts
+        rows = df.limit(driver_cap + 1).collect()
+        if len(rows) <= driver_cap:
+            if screen is not None:
+                rows = screen(rows)
+            return driver_staged_append(path, df.schema, rows)
+        if validate is not None:
+            df = validate(df)
         ensure_registered(spark)
         token = _uuid.uuid4().hex
         (
@@ -544,38 +567,65 @@ def _append_via_tmp(df: DataFrame, path: str, driver_cap: int = 10_000) -> int:
         df.unpersist()
 
 
+def _probe_nodes(
+    spark: SparkSession,
+    ws_dir: str,
+    manifest: dict,
+    label: str,
+    ids: set,
+    cols: tuple[str, ...] = ("node_id",),
+) -> dict:
+    """node_id → Row of ``cols`` for those of ``ids`` present in the
+    label's node dataset: one job, the IN list pushed to the scan."""
+    if not ids:
+        return {}
+    found = (
+        read_dataset(spark, ws_dir, "nodes", label, manifest)
+        .where(F.col("node_id").isin(*ids))
+        .select(*cols)
+    )
+    return {r.node_id: r for r in found.collect()}
+
+
 def insert_nodes(spark: SparkSession, ws_dir: str, label: str, rows: DataFrame) -> int:
     """CREATE VERTEX: append rows (node_id derived from natural_key;
     existing ids are rejected rows — duplicates silently skipped, the
-    reference's error-tolerant ingest posture, A9). Returns rows
-    inserted.
+    reference's error-tolerant ingest posture, A9). Within one batch
+    the first row of an id wins. Returns rows inserted.
 
-    Scale: inserts are mode("append") — new parquet files land next
-    to the dataset, O(inserted) IO with no rewrite of existing data
-    (at 100 TB an insert must never touch the other 100 TB). The
-    anti-join against existing ids shuffles only the 8-byte id
-    column."""
+    Scale: inserts are appends — new parquet files land next to the
+    dataset, O(inserted) IO with no rewrite of existing data (at 100 TB
+    an insert must never touch the other 100 TB). A statement-scale
+    batch probes its ids with one pushed-down ``node_id IN (…)`` scan;
+    a larger one anti-joins against the existing ids, shuffling only
+    the 8-byte id column."""
     manifest = read_manifest(ws_dir)
     path = dataset_path(ws_dir, "nodes", label)
-    cur = spark.read.parquet(path)
+    cur = read_dataset(spark, ws_dir, "nodes", label, manifest)
     new = rows.withColumn("node_id", node_id(label, F.col("natural_key"))).withColumn(
         "label", F.lit(label)
     )
     if "node_id2" in cur.columns:  # 128-bit scheme: derive both lanes
         new = new.withColumn("node_id2", node_id2(label, F.col("natural_key")))
-    new = (
-        new.select(*cur.columns)
-        # within-batch duplicates (a multi-row VALUES repeating a
-        # natural_key) would append two rows with the same node_id —
-        # the anti-join only guards against EXISTING ids (ADVICE r6).
-        # NOTE: the surviving row is partition-arbitrary; the dialect
-        # executor dedupes deterministically (first literal wins)
-        # BEFORE this call — this is the id-level safety net for
-        # callers feeding raw DataFrames
-        .dropDuplicates(["node_id"])
-        .join(cur.select("node_id"), "node_id", "left_anti")
+
+    def screen(batch):
+        first: dict = {}
+        for r in batch:
+            first.setdefault(r.node_id, r)
+        taken = _probe_nodes(spark, ws_dir, manifest, label, set(first))
+        return [r for i, r in first.items() if i not in taken]
+
+    def validate(df):
+        # the surviving row of a within-batch duplicate is
+        # partition-arbitrary here; the dialect dedupes its literal rows
+        # first-wins BEFORE this call
+        return df.dropDuplicates(["node_id"]).join(
+            cur.select("node_id"), "node_id", "left_anti"
+        )
+
+    n_ins = _append_via_tmp(
+        new.select(*cur.columns), path, screen=screen, validate=validate
     )
-    n_ins = _append_via_tmp(new, path)
     if n_ins:
         manifest["nodes"][label]["count"] += n_ins
         write_manifest(ws_dir, manifest)
@@ -622,7 +672,7 @@ def update_rows(
     if bad:
         raise ValueError(refusal.format(bad))
     path = dataset_path(ws_dir, kind, label)
-    cur = spark.read.parquet(path)
+    cur = read_dataset(spark, ws_dir, kind, label)
     unknown = sorted(set(assignments) - set(cur.columns))
     if unknown:
         raise ValueError(
@@ -676,7 +726,7 @@ def delete_nodes(spark: SparkSession, ws_dir: str, label: str, predicate: F.Colu
     otherwise. Returns nodes deleted."""
     manifest = read_manifest(ws_dir)
     path = dataset_path(ws_dir, "nodes", label)
-    cur = spark.read.parquet(path)
+    cur = read_dataset(spark, ws_dir, "nodes", label, manifest)
     doomed = cur.where(predicate).select("node_id").localCheckpoint(eager=True)
     n_del = doomed.count()
     if n_del == 0:
@@ -688,7 +738,7 @@ def delete_nodes(spark: SparkSession, ws_dir: str, label: str, predicate: F.Colu
         if label not in (info["src_label"], info["dst_label"]):
             continue
         e_path = dataset_path(ws_dir, "edges", e_label)
-        kept = spark.read.parquet(e_path)
+        kept = read_dataset(spark, ws_dir, "edges", e_label, manifest)
         if info["src_label"] == label:
             kept = kept.join(doomed.withColumnRenamed("node_id", "src"), "src", "left_anti")
         if info["dst_label"] == label:
@@ -708,45 +758,82 @@ def delete_nodes(spark: SparkSession, ws_dir: str, label: str, predicate: F.Colu
 
 def insert_edges(spark: SparkSession, ws_dir: str, label: str, rows: DataFrame) -> int:
     """CREATE EDGE: append edge rows (``src``/``dst`` node ids +
-    declared props). Endpoint existence is validated with left_semi
-    joins against the endpoint node sets — dangling edges are
-    silently skipped, the reference's `fromNode != null && toNode !=
-    null` posture (ArcadeDBService.java:241-243). Duplicates are NOT
-    collapsed: ArcadeDB materializes one edge per statement. Returns
-    edges appended."""
+    declared props). Edges with a missing endpoint are silently
+    skipped, the reference's `fromNode != null && toNode != null`
+    posture (ArcadeDBService.java:241-243): a statement-scale batch
+    probes its endpoint ids (one pushed-down scan per endpoint dataset),
+    a larger one left_semi-joins the endpoint node sets. Duplicates are
+    NOT collapsed: ArcadeDB materializes one edge per statement.
+    Returns edges appended."""
     manifest = read_manifest(ws_dir)
     info = manifest["edges"][label]
     path = dataset_path(ws_dir, "edges", label)
-    cur = spark.read.parquet(path)
+    cur = read_dataset(spark, ws_dir, "edges", label, manifest)
     new = rows.withColumn("label", F.lit(label))
-    src_nodes = spark.read.parquet(dataset_path(ws_dir, "nodes", info["src_label"]))
-    dst_nodes = spark.read.parquet(dataset_path(ws_dir, "nodes", info["dst_label"]))
-    if "src2" in cur.columns and "src2" not in new.columns:
-        # 128-bit workspace fed first-lane-only rows (the dialect
-        # CREATE EDGE path): the second lane cannot be derived from
-        # the first (both are independent xxhash64 lanes of the
-        # natural key), so pull it from the endpoint node tables —
-        # the same join that validates existence
-        new = new.join(
-            src_nodes.select(
-                F.col("node_id").alias("src"), F.col("node_id2").alias("src2")
-            ),
-            "src",
-        ).join(
-            dst_nodes.select(
-                F.col("node_id").alias("dst"), F.col("node_id2").alias("dst2")
-            ),
-            "dst",
+    src_label, dst_label = info["src_label"], info["dst_label"]
+    # 128-bit workspace fed first-lane-only rows (the dialect CREATE
+    # EDGE path): the second lane cannot be derived from the first
+    # (both are independent xxhash64 lanes of the natural key), so it
+    # comes from the endpoint node rows — the lookup that validates
+    # existence
+    lane2 = "src2" in cur.columns and "src2" not in new.columns
+    if lane2:
+        new = new.withColumn("src2", F.lit(None).cast("long")).withColumn(
+            "dst2", F.lit(None).cast("long")
         )
-        new = new.select(*cur.columns)
-    else:
-        new = new.select(*cur.columns)
+    cols = ("node_id", "node_id2") if lane2 else ("node_id",)
+
+    def screen(batch):
+        srcs = {r.src for r in batch}
+        dsts = {r.dst for r in batch}
+        if src_label == dst_label:
+            found = _probe_nodes(spark, ws_dir, manifest, src_label, srcs | dsts, cols)
+            src_found = dst_found = found
+        else:
+            src_found = _probe_nodes(spark, ws_dir, manifest, src_label, srcs, cols)
+            dst_found = _probe_nodes(spark, ws_dir, manifest, dst_label, dsts, cols)
+        kept = [r for r in batch if r.src in src_found and r.dst in dst_found]
+        if not lane2:
+            return kept
+        return [
+            Row(**{
+                **r.asDict(),
+                "src2": src_found[r.src].node_id2,
+                "dst2": dst_found[r.dst].node_id2,
+            })
+            for r in kept
+        ]
+
+    def validate(df):
+        src_nodes = read_dataset(spark, ws_dir, "nodes", src_label, manifest)
+        dst_nodes = read_dataset(spark, ws_dir, "nodes", dst_label, manifest)
+        if lane2:
+            return (
+                df.drop("src2", "dst2")
+                .join(
+                    src_nodes.select(
+                        F.col("node_id").alias("src"), F.col("node_id2").alias("src2")
+                    ),
+                    "src",
+                )
+                .join(
+                    dst_nodes.select(
+                        F.col("node_id").alias("dst"), F.col("node_id2").alias("dst2")
+                    ),
+                    "dst",
+                )
+                .select(*cur.columns)
+            )
         src_ids = src_nodes.select("node_id")
         dst_ids = dst_nodes.select("node_id")
-        new = new.join(src_ids, new.src == src_ids.node_id, "left_semi")
-        new = new.join(dst_ids, new.dst == dst_ids.node_id, "left_semi")
+        return df.join(src_ids, df.src == src_ids.node_id, "left_semi").join(
+            dst_ids, df.dst == dst_ids.node_id, "left_semi"
+        )
+
     # append, not rewrite: O(inserted) IO (100 TB posture)
-    n_new = _append_via_tmp(new, path)
+    n_new = _append_via_tmp(
+        new.select(*cur.columns), path, screen=screen, validate=validate
+    )
     if n_new:
         info["count"] += n_new
         write_manifest(ws_dir, manifest)
@@ -771,7 +858,7 @@ def delete_edges_between(
     ArcadeDB. Returns edges deleted."""
     manifest = read_manifest(ws_dir)
     path = dataset_path(ws_dir, "edges", label)
-    cur = spark.read.parquet(path)
+    cur = read_dataset(spark, ws_dir, "edges", label, manifest)
     doomed = (
         cur.join(F.broadcast(src_ids), "src", "left_semi")
         .join(F.broadcast(dst_ids), "dst", "left_semi")
@@ -794,7 +881,7 @@ def delete_edges(spark: SparkSession, ws_dir: str, label: str, predicate: F.Colu
     edges have no dependents). Returns edges deleted."""
     manifest = read_manifest(ws_dir)
     path = dataset_path(ws_dir, "edges", label)
-    cur = spark.read.parquet(path)
+    cur = read_dataset(spark, ws_dir, "edges", label, manifest)
     doomed = cur.where(predicate).count()
     if doomed:
         _rewrite_dataset(cur.where(~predicate), path)
@@ -894,7 +981,7 @@ def add_property(
     manifest = read_manifest(ws_dir)
     kind = label_kind(manifest, label)
     path = dataset_path(ws_dir, kind, label)
-    cur = spark.read.parquet(path)
+    cur = read_dataset(spark, ws_dir, kind, label, manifest)
     if prop in cur.columns:
         raise ValueError(f"property {label}.{prop} already exists")
     dtype = resolve_type({"datetime": "timestamp"}.get(type_name.lower(), type_name))
@@ -919,7 +1006,7 @@ def create_index(
     can pick the clustering columns — the 100 TB analog of an index."""
     manifest = read_manifest(ws_dir)
     kind = label_kind(manifest, label)
-    df = spark.read.parquet(dataset_path(ws_dir, kind, label))
+    df = read_dataset(spark, ws_dir, kind, label, manifest)
     missing = [c for c in cols if c not in df.columns]
     if missing:
         raise ValueError(f"unknown column(s) {missing} on {label!r}")
@@ -1001,7 +1088,7 @@ def drop_property(spark: SparkSession, ws_dir: str, label: str, prop: str) -> No
     manifest = read_manifest(ws_dir)
     kind = label_kind(manifest, label)
     path = dataset_path(ws_dir, kind, label)
-    cur = spark.read.parquet(path)
+    cur = read_dataset(spark, ws_dir, kind, label, manifest)
     if prop not in cur.columns:
         raise ValueError(f"unknown property {label}.{prop}")
     out = cur.drop(prop)
@@ -1048,7 +1135,7 @@ def rename_type(spark: SparkSession, ws_dir: str, label: str, new_label: str) ->
     if label in manifest["edges"]:
         info = manifest["edges"][label]
         path = dataset_path(ws_dir, "edges", label)
-        cur = spark.read.parquet(path)
+        cur = read_dataset(spark, ws_dir, "edges", label, manifest)
         n = info["count"]  # maintained invariant — no re-scan
         new_path = dataset_path(ws_dir, "edges", new_label)
         cur.withColumn("label", F.lit(new_label)).write.mode("overwrite").parquet(new_path)
@@ -1061,7 +1148,7 @@ def rename_type(spark: SparkSession, ws_dir: str, label: str, new_label: str) ->
         raise ValueError(f"unknown type {label!r}")
     info = manifest["nodes"][label]
     path = dataset_path(ws_dir, "nodes", label)
-    cur = spark.read.parquet(path)
+    cur = read_dataset(spark, ws_dir, "nodes", label, manifest)
     # 128-bit workspaces (SCALE.md collision-ceiling escape hatch)
     # rename the SAME way with both lanes recomputed and the edge
     # remap joined on the 16-byte pair — a first-lane collision can't
@@ -1088,9 +1175,9 @@ def rename_type(spark: SparkSession, ws_dir: str, label: str, new_label: str) ->
     for other in manifest["nodes"]:
         if other == label:
             continue
-        part = spark.read.parquet(
-            dataset_path(ws_dir, "nodes", other)
-        ).select(*id_cols)
+        part = read_dataset(spark, ws_dir, "nodes", other, manifest).select(
+            *id_cols
+        )
         others = part if others is None else others.unionByName(part)
     if others is not None:
         new_ids = mapping.select(F.col("_new").alias("node_id"))
@@ -1128,7 +1215,7 @@ def rename_type(spark: SparkSession, ws_dir: str, label: str, new_label: str) ->
     for e_label, e_info in manifest["edges"].items():
         touches = False
         e_path = dataset_path(ws_dir, "edges", e_label)
-        e = spark.read.parquet(e_path)
+        e = read_dataset(spark, ws_dir, "edges", e_label, manifest)
         if e_info["src_label"] == label:
             cond = e.src == mapping._old
             if two_lane:
@@ -1243,22 +1330,6 @@ def load_workspace(spark: SparkSession, ws_dir: str) -> dict:
         LAST_WS_DIR = ws_dir
         EDGE_LABELS = frozenset(manifest["edges"])
 
-    def _read(path, info):
-        # The manifest carries the authoritative schema (written at
-        # build time and kept current by every schema-changing DDL),
-        # so view registration needs NO parquet footer read — at 14
-        # statements per interactive DDL sequence the per-statement
-        # re-registration was paying a footer read per label
-        # (round-8 q158 trim; ~40% of the sequence wall time).
-        schema_json = info.get("schema")
-        if schema_json:
-            from pyspark.sql.types import StructType
-
-            return spark.read.schema(
-                StructType.fromJson(schema_json)
-            ).parquet(path)
-        return spark.read.parquet(path)
-
     # single-slot memo: valid only for (this session, this ws_dir) —
     # switching workspaces re-registers everything, because temp-view
     # NAMES are session-global and now point elsewhere
@@ -1295,7 +1366,7 @@ def load_workspace(spark: SparkSession, ws_dir: str) -> dict:
             if got is not None and got[0] == key:
                 slims.append(got[1])
                 continue
-            df = _read(path, info)
+            df = read_dataset(spark, ws_dir, kind, label, manifest)
             df.createOrReplaceTempView(f"{prefix}{label}")
             slim = slim_fn(df)
             reg[label] = (key, slim)

@@ -848,3 +848,33 @@ def test_schema_reads_never_see_a_torn_manifest(spark, sf_small, tmp_path_factor
     assert writes > 0 and reads
     errors = [r for r in reads if r is not None]
     assert errors == [], f"{len(errors)} of {len(reads)} reads failed: {errors[:3]}"
+
+
+def test_statement_scale_writes_run_few_jobs_without_shuffle(spark, dml_ws):
+    """A one-row INSERT and a one-edge CREATE EDGE run on the driver
+    lane: the rows are collected once and their ids probed with a
+    pushed-down scan per dataset — at most 3 and 4 Spark jobs, each a
+    single stage (no shuffle)."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+
+    def run(sql, group):
+        sc.setJobGroup(group, sql)
+        try:
+            res = execute(spark, sql, workspace_dir=dml_ws, allow_writes=True)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        jobs = tracker.getJobIdsForGroup(group)
+        stages = [len(tracker.getJobInfo(j).stageIds) for j in jobs]
+        return res.collect()[0]["count"], stages
+
+    n, stages = run(
+        "INSERT INTO Nation SET natural_key = 4242, n_name = 'PIN'", "pin-insert"
+    )
+    assert n == 1 and len(stages) <= 3 and set(stages) == {1}, stages
+    n, stages = run("CREATE EDGE IN_REGION FROM 4242 TO 1", "pin-edge")
+    assert n == 1 and len(stages) <= 4 and set(stages) == {1}, stages
+    execute(
+        spark, "DELETE VERTEX Nation WHERE natural_key = 4242",
+        workspace_dir=dml_ws, allow_writes=True,
+    )

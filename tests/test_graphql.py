@@ -1,5 +1,5 @@
-"""B20 GraphQL surface: executable-document subset compiled to
-DataFrame plans over the workspace views, differentially checked
+"""B20 GraphQL surface: executable-document subset compiled to one
+Spark SQL statement over the workspace views, differentially checked
 against the equivalent Spark SQL."""
 
 from __future__ import annotations
@@ -514,3 +514,224 @@ def test_type_introspection_spec_shaped(spark, ws):
         spark, '{ __type(name: "String") { kind name fields { name } } }'
     ).collect()[0]
     assert s.kind == "SCALAR" and s.fields is None
+
+
+# ------------------------------------------- differential battery (one packed set)
+def _gql_key(v):
+    """Sort key with Spark's ascending order: NULL first, structs and
+    arrays field by field."""
+    if v is None:
+        return (0,)
+    if isinstance(v, (tuple, list)):
+        return (1, tuple(_gql_key(x) for x in v))
+    return (1, v)
+
+
+def _gql_norm(v):
+    """Result value → plain tuples (structs) and lists (arrays)."""
+    from pyspark.sql import Row
+
+    if isinstance(v, Row):
+        return tuple(_gql_norm(x) for x in v)
+    if isinstance(v, list):
+        return [_gql_norm(x) for x in v]
+    return v
+
+
+def _gql_kids(spark, edge, direction, label, cols, where="", nested=None):
+    """Oracle for one relationship field: parent node_id → the sorted
+    list of child tuples, from a flat SQL join grouped in Python.
+    ``nested`` maps a child node_id to its own nested list (appended
+    to the child tuple) for two-level documents."""
+    near, far = ("src", "dst") if direction == "out" else ("dst", "src")
+    sel = ", ".join(f"c.`{c}`" for c in cols)
+    rows = spark.sql(
+        f"SELECT e.{near} AS _p, c.node_id AS _k, {sel} FROM e_{edge} e "
+        f"JOIN n_{label} c ON c.node_id = e.{far}"
+        + (f" WHERE {where}" if where else "")
+    ).collect()
+    out: dict = {}
+    for r in rows:
+        t = tuple(r[2:])
+        if nested is not None:
+            t = t + (nested.get(r._k, []),)
+        out.setdefault(r._p, []).append(t)
+    return {p: sorted(v, key=_gql_key) for p, v in out.items()}
+
+
+def test_differential_battery(spark, ws):
+    """One packed document set, each answer checked against a flat SQL
+    join grouped and sorted in Python: quoting, literal types, limits,
+    sibling and two-level relationships, childless roots, duplicated
+    edges, aliases, __typename and fragments."""
+    # the customer of an order holding the same part twice
+    dup_order = spark.sql(
+        "SELECT src FROM e_CONTAINS GROUP BY src, dst HAVING count(*) > 1 "
+        "ORDER BY src LIMIT 1"
+    ).collect()[0].src
+    (ok, cust), = spark.sql(
+        "SELECT o.natural_key AS ok, c.natural_key AS cust FROM n_Order o "
+        "JOIN e_PLACED e ON e.dst = o.node_id JOIN n_Customer c "
+        f"ON c.node_id = e.src WHERE o.node_id = {dup_order}"
+    ).collect()
+    bal = spark.sql(
+        f"SELECT c_acctbal FROM n_Customer WHERE natural_key = {cust}"
+    ).collect()[0].c_acctbal
+    assert isinstance(bal, float)
+
+    def roots(label, cols, where=""):
+        sel = ", ".join(f"`{c}`" for c in cols)
+        return spark.sql(
+            f"SELECT node_id, {sel} FROM n_{label}"
+            + (f" WHERE {where}" if where else "")
+        ).collect()
+
+    contains = _gql_kids(spark, "CONTAINS", "out", "Part", ["natural_key"])
+    assert any(
+        len(v) != len(set(v)) for v in contains.values()
+    ), "fixture holds no duplicated edge"
+    placed_nk = _gql_kids(spark, "PLACED", "out", "Order", ["natural_key"])
+    placed_two = _gql_kids(
+        spark, "PLACED", "out", "Order", ["natural_key"],
+        nested={k: v for k, v in contains.items()},
+    )
+    placed_price = _gql_kids(
+        spark, "PLACED", "out", "Order", ["natural_key", "o_totalprice"]
+    )
+    in_nation = _gql_kids(spark, "CUST_IN_NATION", "out", "Nation", ["n_name"])
+    nation_custs = _gql_kids(
+        spark, "CUST_IN_NATION", "in", "Customer", ["natural_key"]
+    )
+    nation_supps = _gql_kids(
+        spark, "SUPP_IN_NATION", "in", "Supplier", ["natural_key"]
+    )
+    typed_orders = {
+        p: [("Order",) + t for t in v] for p, v in placed_nk.items()
+    }
+    building = roots("Customer", ["natural_key"], "c_mktsegment = 'BUILDING'")
+
+    cases = [
+        # ' and \ reach the filter as data, never as SQL
+        (
+            '{ Customer(c_name: "O\'Brien \\\\ x") { c_name } }', None,
+            ["c_name"], [],
+        ),
+        (
+            "query ($n: String!) { Customer(c_name: $n) "
+            "{ c_name placed(o_orderpriority: $n) { natural_key } } }",
+            {"n": "x' OR '1'='1"}, ["c_name", "placed"], [],
+        ),
+        # a float argument against a DOUBLE column
+        (
+            f"{{ Customer(c_acctbal: {bal!r}) {{ natural_key }} }}", None,
+            ["natural_key"],
+            [(r.natural_key,) for r in roots(
+                "Customer", ["natural_key", "c_acctbal"]
+            ) if r.c_acctbal == bal],
+        ),
+        # sibling relationships on one type
+        (
+            f"{{ Customer(natural_key: {cust}) {{ c_name "
+            "placed { natural_key o_totalprice } cust_in_nation { n_name } } }",
+            None, ["c_name", "placed", "cust_in_nation"],
+            [
+                (r.c_name, placed_price.get(r.node_id, []),
+                 in_nation.get(r.node_id, []))
+                for r in roots("Customer", ["c_name"], f"natural_key = {cust}")
+            ],
+        ),
+        # a per-parent nested limit
+        (
+            "{ Nation { natural_key cust_in_nation_rev(limit: 2) "
+            "{ natural_key } } }", None,
+            ["natural_key", "cust_in_nation_rev"],
+            [
+                (r.natural_key, nation_custs.get(r.node_id, [])[:2])
+                for r in roots("Nation", ["natural_key"])
+            ],
+        ),
+        # two-level nesting over an order holding a duplicated edge
+        (
+            f"{{ Customer(natural_key: {cust}) {{ natural_key "
+            "placed { natural_key contains { natural_key } } } }",
+            None, ["natural_key", "placed"],
+            [
+                (r.natural_key, placed_two.get(r.node_id, []))
+                for r in roots("Customer", ["natural_key"], f"natural_key = {cust}")
+            ],
+        ),
+        # the duplicated edge is kept twice
+        (
+            f"{{ Order(natural_key: {ok}) {{ contains {{ natural_key }} }} }}",
+            None, ["contains"], [(contains[dup_order],)],
+        ),
+        # roots without children answer []
+        (
+            "{ Nation { natural_key supp_in_nation_rev { natural_key } } }",
+            None, ["natural_key", "supp_in_nation_rev"],
+            [
+                (r.natural_key, nation_supps.get(r.node_id, []))
+                for r in roots("Nation", ["natural_key"])
+            ],
+        ),
+        # aliases, __typename and a fragment
+        (
+            f"query {{ Customer(natural_key: {cust}) {{ t: __typename "
+            "__typename nm: c_name ...F orders: placed { __typename "
+            "key: natural_key } } } fragment F on Customer { c_mktsegment }",
+            None, ["t", "__typename", "nm", "c_mktsegment", "orders"],
+            [
+                ("Customer", "Customer", r.c_name, r.c_mktsegment,
+                 typed_orders.get(r.node_id, []))
+                for r in roots(
+                    "Customer", ["c_name", "c_mktsegment"],
+                    f"natural_key = {cust}",
+                )
+            ],
+        ),
+    ]
+    childless = cases[-2][3]
+    assert any(kids == [] for _, kids in childless), "fixture holds no childless Nation"
+    for doc, variables, cols, want in cases:
+        df = graphql.execute(spark, doc, variables=variables)
+        assert df.columns == cols, doc
+        got = sorted((_gql_norm(r) for r in df.collect()), key=_gql_key)
+        assert got == sorted(want, key=_gql_key), doc
+
+    # a root limit keeps that many filtered roots, each answered whole
+    df = graphql.execute(
+        spark,
+        '{ Customer(c_mktsegment: "BUILDING", limit: 4) '
+        "{ natural_key placed { natural_key } } }",
+    )
+    full = {r.natural_key: placed_nk.get(r.node_id, []) for r in building}
+    got = [_gql_norm(r) for r in df.collect()]
+    assert len(got) == min(4, len(full)) == len({k for k, _ in got})
+    assert all(full[k] == v for k, v in got)
+
+
+def test_nested_aggregate_reads_only_kept_roots(spark, ws):
+    """A one-key read pays for that key's edges: the root's equality
+    predicate sits in the input subtree of the nested field's
+    aggregate, so the aggregate never reads the whole edge label."""
+    import re
+
+    df = graphql.execute(
+        spark, "{ Customer(natural_key: 1) { placed { o_totalprice } } }"
+    )
+    df.collect()
+    text = df._jdf.queryExecution().executedPlan().toString()
+    if "== Final Plan ==" in text:
+        text = text.split("== Final Plan ==", 1)[1].split("== Initial Plan ==")[0]
+    lines = text.splitlines()
+    depth = [len(ln) - len(ln.lstrip(" :+-")) for ln in lines]
+    root_pred = re.compile(r"natural_key#\d+L? = 1\b|EqualTo\(natural_key,1\)")
+    aggs = [i for i, ln in enumerate(lines) if "Aggregate(" in ln]
+    assert aggs, text
+    for i in aggs:
+        below = []
+        for j in range(i + 1, len(lines)):
+            if depth[j] <= depth[i]:
+                break
+            below.append(lines[j])
+        assert any(root_pred.search(ln) for ln in below), text
