@@ -126,11 +126,11 @@ Out of scope (raise a clear error): projections mixing expand() with
 other fields — the same restriction ArcadeDB itself enforces.
 
 Scale notes: the compiled SQL references only the per-label views
-(typed, pruned scans) and the unified ``edges`` view (partitioned on
-``src``). Graph projections compile to correlated aggregate
-subqueries, which Catalyst decorrelates into a left outer join +
-partial aggregate — shuffle on the edge key, no driver loops, no
-per-row Python. TRAVERSE reuses ``operators.graph.bfs``
+(typed, pruned scans) and the unified ``edges`` view. Graph steps
+come from ``relations.py``: a projection is one ``gather`` over the
+SELECT's FROM + WHERE rows, joined back on ``node_id`` — a one-key
+read aggregates that key's edges only, no driver loops, no per-row
+Python. TRAVERSE reuses ``operators.graph.bfs``
 (frontier-join iteration, checkpointed every level).
 """
 
@@ -142,6 +142,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from biodwh2_arcadedb_server_spark.localrel import local_df
+from biodwh2_arcadedb_server_spark.relations import edge_leg, gather, reach, sql_str
 
 # ---------------------------------------------------------------- tokenizer
 _TOKEN_RE = re.compile(
@@ -202,19 +203,13 @@ class ArcadeSQLError(ValueError):
     """Parse/translate failure with a user-facing message."""
 
 
-def _sql_str(val: str) -> str:
-    """Re-escape a user-supplied string (e.g. an edge label) for safe
-    interpolation as a Spark SQL single-quoted literal."""
-    return val.replace("\\", "\\\\").replace("'", "\\'")
-
-
 # ------------------------------------------------------------- parameters
 _NAMED_PARAM_RE = re.compile(r":([A-Za-z_]\w*)")
 
 
 def _render_param(val) -> str:
     """Render a Python parameter value as a dialect literal. Strings
-    go through ``_sql_str`` (quote + backslash escaping) so a value
+    go through ``sql_str`` (quote + backslash escaping) so a value
     like ``O'Brien' OR 1=1 --`` stays ONE string literal — binding is
     the injection boundary, exactly like a real driver's."""
     import datetime as _dt
@@ -244,7 +239,7 @@ def _render_param(val) -> str:
     if isinstance(val, _dt.date):
         return f"'{val.isoformat()}'"
     if isinstance(val, str):
-        return f"'{_sql_str(val)}'"
+        return f"'{sql_str(val)}'"
     raise ArcadeSQLError(
         f"unsupported parameter type {type(val).__name__}"
     )
@@ -331,7 +326,8 @@ class _Select:
     skip: int | None
     limit: int | None
     distinct: bool = False
-    uses_graph_projection: bool = False
+    # (direction, edge label) of each out()/in()/both() projection
+    relations: list[tuple[str, str | None]] = field(default_factory=list)
     lets: dict = field(default_factory=dict)  # $var -> compiled expr
     # FROM alias of this SELECT in the compiled SQL. Top-level keeps
     # "__self"; every nested (scalar / LET) subquery gets a fresh
@@ -1785,14 +1781,13 @@ class _Parser:
         return expr
 
     def _graph_projection(self, sel: _Select, direction: str, label: str | None) -> str:
-        """out('E') → array of neighbor ids, as a correlated aggregate
-        subquery over the step's oriented edge leg (Catalyst
-        decorrelates it into a left join + partial aggregate)."""
-        sel.uses_graph_projection = True
-        return (
-            f"(SELECT sort_array(collect_list(e.__t)) FROM "
-            f"{_edge_leg(direction, label)} e WHERE e.__s = {sel.alias}.node_id)"
-        )
+        """out('E') → array of neighbor ids: the column of the
+        ``relations.gather`` that _compile_select joins per distinct
+        relationship (a row it misses has no edges)."""
+        if (direction, label) not in sel.relations:
+            sel.relations.append((direction, label))
+        i = sel.relations.index((direction, label))
+        return f"coalesce({sel.alias}_r{i}.__g, array())"
 
 
 # ---------------------------------------------------------------- compiler
@@ -2071,6 +2066,19 @@ def _rid_bucket_label(bucket: int) -> str:
 _VIEW_SOURCE_RE = re.compile(r"edges|nodes|e_\w+")
 
 
+def _kept_rows(sel: _Select, source: str) -> str | None:
+    """The ids a SELECT's relationships gather over: its FROM + WHERE,
+    so a one-key read aggregates that key's edges only. None (the
+    whole leg, what the SELECT cost before) when a FROM subquery need
+    not repeat its rows, or the WHERE reads a compiled name of another
+    scope: a relationship, a LET, a ``$parent`` record, a subquery."""
+    where = _STRING_SPAN_RE.sub("''", sel.where or "")
+    if sel.subquery is not None or "__" in where.replace(f"{sel.alias}.", ""):
+        return None
+    where = f" WHERE {sel.where}" if sel.where else ""
+    return f"(SELECT {sel.alias}.node_id AS __k FROM {source}{where})"
+
+
 def _compile_select(sel: _Select) -> str:
     if sel.traverse_subquery is not None:
         raise ArcadeSQLError(
@@ -2096,19 +2104,24 @@ def _compile_select(sel: _Select) -> str:
         # (an in-memory set, so no JVM call per statement)
         kind = "e" if sel.source_type in ws.EDGE_LABELS else "n"
         source = f"{kind}_{sel.source_type} {sel.alias}"
+    kept = _kept_rows(sel, source) if sel.relations else None
+    for i, (d, label) in enumerate(sel.relations):
+        r = f"{sel.alias}_r{i}"
+        g = gather(kept, d, label, "e.__t")
+        source += f" LEFT JOIN ({g}) {r} ON {r}.__k = {sel.alias}.node_id"
 
     if sel.expand_edge is not None:
         d, label = sel.expand_edge
         inner = f"SELECT node_id FROM {source}"
         if sel.where:
             inner += f" WHERE {sel.where}"
-        # outE/inE/bothE walk the same leg as out/in/both
-        walk = f"{_edge_leg(d.removesuffix('e'), label)} e WHERE e.__s IN ({inner})"
         if d.endswith("e"):
             # edge-returning expand: outE()/inE()/bothE() — edge rows,
             # not neighbor nodes (ArcadeDB returns edge records; our
-            # edge identity is the (src, dst, label) triple)
-            sql = f"SELECT e.src, e.dst, e.label FROM {walk}"
+            # edge identity is the (src, dst, label) triple) — walk
+            # the same leg as out/in/both
+            leg = edge_leg(d.removesuffix("e"), label)
+            sql = f"SELECT e.src, e.dst, e.label FROM {leg} e WHERE e.__s IN ({inner})"
             if sel.order_by:
                 sql += " ORDER BY " + ", ".join(
                     f"{e} {dd}" for e, dd in sel.order_by
@@ -2120,7 +2133,7 @@ def _compile_select(sel: _Select) -> str:
             return _finalize_lets(sql, sel)
         sql = (
             "SELECT n.node_id, n.label, n.natural_key, n.props FROM nodes n "
-            f"WHERE n.node_id IN (SELECT e.__t FROM {walk})"
+            f"WHERE n.node_id IN ({reach(d, label, inner)})"
         )
     else:
         if sel.star:
@@ -2158,28 +2171,11 @@ _AGG_RE = re.compile(
 )
 
 
-def _edge_leg(d: str, label: str | None, view: str = "edges") -> str:
-    """The one oriented-edge relation every graph step walks: the rows
-    of ``view`` (filtered to ``label``) plus ``__s``, the end the step
-    leaves from, and ``__t``, the end it reaches. ``out`` orients
-    (src, dst), ``in`` (dst, src), and ``both`` is the UNION ALL of
-    the two, so a self-loop appears once per orientation. A step
-    joins on ``__s = <anchor>.node_id`` and binds its target on
-    ``node_id = __t``: an equi-join in every direction."""
-    where = f" WHERE label = '{_sql_str(label)}'" if label else ""
-    ends = {"out": [("src", "dst")], "in": [("dst", "src")]}
-    ends["both"] = ends["out"] + ends["in"]
-    return "(" + " UNION ALL ".join(
-        f"SELECT *, {s} AS __s, {t} AS __t FROM {view}{where}"
-        for s, t in ends[d]
-    ) + ")"
-
-
 def _hop_sql(spark: SparkSession, steps) -> DataFrame:
     """(src, dst) relation that TRAVERSE and shortestPath() walk: the
     UNION ALL of the (direction, label) ``steps``' oriented legs."""
     return spark.sql(" UNION ALL ".join(
-        f"SELECT __s AS src, __t AS dst FROM {_edge_leg(d, lbl)} __l"
+        f"SELECT __s AS src, __t AS dst FROM {edge_leg(d, lbl)} __l"
         for d, lbl in steps
     ))
 
@@ -2193,7 +2189,7 @@ def _compile_chain(
 ) -> None:
     """Append one pattern chain's joins to ``froms``/``wheres``.
     The chain's first node must already be in scope (``bound`` or
-    emitted by the caller). Every step walks the ``_edge_leg``
+    emitted by the caller). Every step walks the ``edge_leg``
     relation of its direction: a non-optional step is an inner
     equi-join on ``__s = <anchor>.node_id`` and binds its target on
     ``node_id = __t`` (a cycle-closing step constrains the bound
@@ -2243,7 +2239,7 @@ def _compile_chain(
                     "variable-length steps cannot be optional or close "
                     "a cycle"
                 )
-            leg = _edge_leg(d, label)
+            leg = edge_leg(d, label)
             view = f"n_{nt['type']}" if nt["type"] else "nodes"
             # seed the unroll from the ANCHOR node set (its typed view
             # + its own where:, requalified) instead of expanding the
@@ -2303,7 +2299,7 @@ def _compile_chain(
             # a user-bound edge alias joins the TYPED edge view so
             # RETURN can project edge properties (the unified `edges`
             # view is the 3-column (src, dst, label) slice)
-            leg = _edge_leg(d, label, f"e_{label}" if ealias else "edges")
+            leg = edge_leg(d, label, f"e_{label}" if ealias else "edges")
             froms.append(f"JOIN {leg} {e} ON {e}.__s = {a}.node_id")
             nxt = f"{b}.node_id = {e}.__t"
             if nt.get("bound"):
@@ -2339,7 +2335,7 @@ def _compile_chain(
         anchor = f"__anchor{tag}{i}"
         leg = (
             f"(SELECT {e}.__s AS {anchor}, {inner_t}.* FROM "
-            f"{_edge_leg(d, label)} {e} JOIN {view} {inner_t} "
+            f"{edge_leg(d, label)} {e} JOIN {view} {inner_t} "
             f"ON {inner_t}.node_id = {e}.__t{inner_where})"
         )
         froms.append(f"LEFT JOIN {leg} {b} ON {b}.{anchor} = {a}.node_id")
@@ -2348,7 +2344,7 @@ def _compile_chain(
 def _compile_neg_chain(chain: dict, idx: int) -> str:
     """NOT { … } pattern → a NOT EXISTS anti-join leg correlated on
     the chain's bound anchor alias(es). Each step joins its
-    ``_edge_leg`` relation on ``__s``/``__t`` exactly as an inner
+    ``edge_leg`` relation on ``__s``/``__t`` exactly as an inner
     step does, so Catalyst plans a LeftAnti join on the edge key in
     every direction — one shuffle, no cartesian."""
     nodes, steps = chain["nodes"], chain["steps"]
@@ -2371,7 +2367,7 @@ def _compile_neg_chain(chain: dict, idx: int) -> str:
         a = nodes[i]["alias"]
         nt = nodes[i + 1]
         b = nt["alias"]
-        froms.append(f"{_edge_leg(d, label)} {e}")
+        froms.append(f"{edge_leg(d, label)} {e}")
         conds.append(f"{e}.__s = {a}.node_id")
         if not nt.get("bound"):
             froms.append(f"n_{nt['type']} {b}" if nt["type"] else f"nodes {b}")
@@ -2387,7 +2383,7 @@ def _compile_neg_chain(chain: dict, idx: int) -> str:
 def _compile_match(m: _Match) -> str:
     """MATCH pattern chains → ONE Spark SQL join chain over the
     per-label views and the unified ``edges`` view: each edge step
-    joins its direction's ``_edge_leg`` relation, an equi-join on the
+    joins its direction's ``edge_leg`` relation, an equi-join on the
     oriented edge key ``__s``/``__t`` for ``out``, ``in`` and ``both``
     alike (shuffle on the key — or a broadcast probe when the
     anchored side is small, AQE's call), each node

@@ -164,9 +164,9 @@ def q138_let_dialect(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- B5 scalar: graph-projection degree through the dialect ----------------------
 def q139_degree_dialect(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """out('PLACED').size() — the correlated-aggregate graph
-    projection, which Catalyst decorrelates into a left join +
-    partial aggregate (one shuffle on the edge key)."""
+    """out('PLACED').size() — the graph projection: one
+    ``relations.gather`` over the kept customers (FROM + WHERE),
+    LEFT JOINed back on ``node_id``."""
     _register_star_workspace(spark, sf_dir)
     return arcadesql.execute(
         spark,
@@ -301,7 +301,7 @@ def q150_unwind_dialect(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders kept as a single null row (LATERAL VIEW OUTER explode —
     the record is never dropped, ArcadeDB semantics). Explode is a
     map-side Generate node: no shuffle beyond the projection's own
-    decorrelated join."""
+    gather join."""
     _register_star_workspace(spark, sf_dir)
     return arcadesql.execute(
         spark,

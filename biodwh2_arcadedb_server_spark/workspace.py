@@ -1340,7 +1340,7 @@ def load_workspace(spark: SparkSession, ws_dir: str) -> dict:
             _VIEW_REG.update({"owner": owner, "nodes": {}, "edges": {}})
         node_reg, edge_reg = _VIEW_REG["nodes"], _VIEW_REG["edges"]
 
-    def _node_slim(df):
+    def _node_slim(df, _label):
         prop_cols = [c for c in df.columns if c not in ("node_id", "node_id2", "label", "natural_key")]
         if prop_cols:
             entries: list = []
@@ -1353,8 +1353,10 @@ def load_workspace(spark: SparkSession, ws_dir: str) -> dict:
             props = F.create_map()
         return df.select("node_id", "label", "natural_key", props.alias("props"))
 
-    def _edge_slim(df):
-        return df.select("src", "dst", "label")
+    def _edge_slim(df, label):
+        # a literal label (every writer stores the manifest key) lets
+        # Catalyst prune `edges WHERE label = 'X'` to dataset X
+        return df.select("src", "dst", F.lit(label).alias("label"))
 
     def _refresh(kind, prefix, reg, slim_fn):
         changed = False
@@ -1368,7 +1370,7 @@ def load_workspace(spark: SparkSession, ws_dir: str) -> dict:
                 continue
             df = read_dataset(spark, ws_dir, kind, label, manifest)
             df.createOrReplaceTempView(f"{prefix}{label}")
-            slim = slim_fn(df)
+            slim = slim_fn(df, label)
             reg[label] = (key, slim)
             slims.append(slim)
             changed = True

@@ -446,6 +446,20 @@ def test_ddl_alter_type_rename_cascades_ids(spark, sf_small, tmp_path_factory):
     assert all(r.ok for r in ids)
     with pytest.raises(ArcadeSQLError, match="already exists"):
         run("ALTER TYPE Region NAME Country")
+    # an edge rename: the unified edges view's label is the manifest
+    # key, so the new name walks every edge and the old one none
+    run("ALTER TYPE IN_REGION NAME LOCATED_IN")
+    degree = lambda lbl: sorted(
+        (r.natural_key, r.d)
+        for r in execute(
+            spark,
+            f"SELECT natural_key, out('{lbl}').size() AS d FROM Country",
+        ).collect()
+    )
+    assert degree("LOCATED_IN") == sorted(
+        (r.natural_key, r.d) for r in before
+    )
+    assert {d for _, d in degree("IN_REGION")} == {0}
 
 
 def test_update_upsert(spark, dml_ws):

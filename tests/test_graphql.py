@@ -710,15 +710,29 @@ def test_differential_battery(spark, ws):
     assert all(full[k] == v for k, v in got)
 
 
-def test_nested_aggregate_reads_only_kept_roots(spark, ws):
+@pytest.mark.parametrize(
+    "language, request_text",
+    [
+        ("graphql", "{ Customer(natural_key: 1) { placed { o_totalprice } } }"),
+        (
+            "sql",
+            "SELECT natural_key, out('PLACED').size() AS n FROM Customer "
+            "WHERE natural_key = 1",
+        ),
+    ],
+    ids=["graphql", "dialect"],
+)
+def test_nested_aggregate_reads_only_kept_roots(spark, ws, language, request_text):
     """A one-key read pays for that key's edges: the root's equality
-    predicate sits in the input subtree of the nested field's
-    aggregate, so the aggregate never reads the whole edge label."""
+    predicate sits in the input subtree of every aggregate, so no
+    aggregate reads the whole edge label, and the labelled edge leg
+    scans the one edge dataset it names."""
     import re
 
-    df = graphql.execute(
-        spark, "{ Customer(natural_key: 1) { placed { o_totalprice } } }"
-    )
+    from biodwh2_arcadedb_server_spark import arcadesql
+
+    run = graphql.execute if language == "graphql" else arcadesql.execute
+    df = run(spark, request_text)
     df.collect()
     text = df._jdf.queryExecution().executedPlan().toString()
     if "== Final Plan ==" in text:
@@ -735,3 +749,28 @@ def test_nested_aggregate_reads_only_kept_roots(spark, ws):
                 break
             below.append(lines[j])
         assert any(root_pred.search(ln) for ln in below), text
+    edge_scans = {
+        m.group(1)
+        for ln in lines
+        if "FileScan" in ln
+        for m in [re.search(r"/edges/(\w+)\]", ln)]
+        if m
+    }
+    assert edge_scans == {"PLACED"}, text
+
+
+@pytest.mark.parametrize("limit", ['"x"', "2.5", "true", "-1"])
+@pytest.mark.parametrize("level", ["root", "nested"])
+def test_limit_must_be_a_non_negative_int(spark, ws, level, limit):
+    """`limit` is outside input: anything but a non-negative Int is a
+    GraphQLError, never a bare ValueError, a silently truncated count
+    or a negative LIMIT / slice length handed to Spark."""
+    doc = {
+        "root": f"{{ Customer(limit: {limit}) {{ c_name }} }}",
+        "nested": (
+            f"{{ Customer(natural_key: 1) {{ placed(limit: {limit}) "
+            "{ o_totalprice } } }"
+        ),
+    }[level]
+    with pytest.raises(graphql.GraphQLError, match="non-negative Int"):
+        graphql.execute(spark, doc)
