@@ -141,7 +141,7 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from biodwh2_arcadedb_server_spark.localrel import local_df
+from biodwh2_arcadedb_server_spark.localrel import literal_rows, local_df
 from biodwh2_arcadedb_server_spark.relations import edge_leg, gather, reach, sql_str
 
 # ---------------------------------------------------------------- tokenizer
@@ -2299,7 +2299,7 @@ def _compile_chain(
             # a user-bound edge alias joins the TYPED edge view so
             # RETURN can project edge properties (the unified `edges`
             # view is the 3-column (src, dst, label) slice)
-            leg = edge_leg(d, label, f"e_{label}" if ealias else "edges")
+            leg = edge_leg(d, label, f"e_{label}" if ealias else None)
             froms.append(f"JOIN {leg} {e} ON {e}.__s = {a}.node_id")
             nxt = f"{b}.node_id = {e}.__t"
             if nt.get("bound"):
@@ -2510,8 +2510,8 @@ def _endpoint_df(spark, ws, expr: str, side_label: str, out: str):
                 "(missing node_id)"
             )
         return sub.select(F.col("node_id").alias(out)), None
-    key = ws.node_id(side_label, F.expr(expr)).alias(out)
-    return spark.range(0, 1, 1, 1).select(key), key
+    key = ws.node_id(side_label, F.expr(expr))
+    return literal_rows(spark, [out], [[key]]), key
 
 
 def _execute_dml(
@@ -2699,21 +2699,28 @@ def _execute_dml_locked(
         except ValueError as exc:  # structural-column guard
             raise ArcadeSQLError(str(exc)) from exc
     elif stmt.kind == "delete_edge":
+        joins = []
         if stmt.edge_from is not None:
             e_info = ws.read_manifest(workspace_dir)["edges"].get(stmt.label)
             if e_info is None:
                 raise ArcadeSQLError(f"unknown edge type {stmt.label!r}")
-            s_df, _ = _endpoint_df(
-                spark, ws, stmt.edge_from, e_info["src_label"], "src"
-            )
-            d_df, _ = _endpoint_df(
-                spark, ws, stmt.edge_to, e_info["dst_label"], "dst"
-            )
-            n = ws.delete_edges_between(
-                spark, workspace_dir, stmt.label, s_df, d_df, pred
-            )
-        else:
-            n = ws.delete_edges(spark, workspace_dir, stmt.label, pred)
+            # a one-key endpoint is a predicate on its column, a set
+            # endpoint a broadcast semi-join on it
+            for col, expr in (("src", stmt.edge_from), ("dst", stmt.edge_to)):
+                ids, key = _endpoint_df(
+                    spark, ws, expr, e_info[f"{col}_label"], col
+                )
+                if key is None:
+                    joins.append((ids, col))
+                else:
+                    pred = pred & (F.col(col) == key)
+
+        def match(rows):
+            for ids, col in joins:
+                rows = rows.join(F.broadcast(ids), col, "left_semi")
+            return rows
+
+        n = ws.delete_edges(spark, workspace_dir, stmt.label, pred, match)
     elif stmt.kind == "insert_edge":
         manifest = ws.read_manifest(workspace_dir)
         if stmt.label not in manifest["edges"]:
@@ -2739,7 +2746,7 @@ def _execute_dml_locked(
         dst_df, dst_key = _endpoint_df(spark, ws, stmt.edge_to, info["dst_label"], "dst")
         if src_key is not None and dst_key is not None:
             # two one-key endpoints: one row, no join
-            rows = spark.range(0, 1, 1, 1).select(src_key, dst_key)
+            rows = literal_rows(spark, ["src", "dst"], [[src_key, dst_key]])
         else:
             # pair product of the endpoint sets. Interactive endpoint
             # selections are small; broadcasting the dst side keeps the
@@ -2769,7 +2776,6 @@ def _execute_dml_locked(
             f for f in cur_schema.fields
             if f.name not in ("node_id", "node_id2", "label")
         ]
-        frames = []
         # statement-level within-batch dedupe, FIRST literal wins —
         # deterministic, unlike a plan-level dropDuplicates whose
         # survivor is partitioning-dependent (round-7 review finding);
@@ -2796,16 +2802,14 @@ def _execute_dml_locked(
                     f"unknown propert{'ies' if len(unknown) > 1 else 'y'} "
                     f"for {stmt.label}: {sorted(unknown)}"
                 )
-            cols = [
+        rows_df = literal_rows(spark, [f.name for f in writable], [
+            [
                 (F.expr(row[f.name]) if f.name in row else F.lit(None))
                 .cast(f.dataType)
-                .alias(f.name)
                 for f in writable
             ]
-            frames.append(spark.range(0, 1, 1, 1).select(*cols))
-        rows_df = frames[0]
-        for fr in frames[1:]:
-            rows_df = rows_df.unionByName(fr)
+            for row in rows_in_order
+        ])
         n = ws.insert_nodes(spark, workspace_dir, stmt.label, rows_df)
     if refresh_views:
         ws.load_workspace(spark, workspace_dir)

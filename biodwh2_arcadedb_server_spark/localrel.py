@@ -14,8 +14,10 @@ once per un-truncated re-evaluation.
 
 ``local_df`` keeps the rows in the JVM instead: the row list is
 serialized to ONE json string literal and decoded with ``from_json``
-over a single-partition ``range`` — a three-node expression whatever
-the payload shape, so Catalyst analysis stays O(1) too. (A first cut
+— over ``VALUES`` for one row, which Catalyst folds into a
+LocalRelation (collecting it runs no job), over a single-partition
+``range`` for several — a three-node expression whatever the payload
+shape, so Catalyst analysis stays O(1) too. (A first cut
 rendered each value as a nested ``lit``/``struct``/``array`` tree;
 the q189 introspection row alone produced a multi-thousand-node tree
 that cost ~4s of driver analysis — the json literal form replaces the
@@ -119,11 +121,42 @@ def local_df(
         )
     except (_Unsupported, TypeError, ValueError, IndexError, KeyError):
         return spark.createDataFrame(rows, schema)
-    one = spark.range(0, 1, 1, 1)
     if len(rows) == 1:
-        return one.select(
-            F.from_json(F.lit(payload[1:-1]), schema).alias("_r")
+        # over VALUES, Catalyst folds the row into a LocalRelation:
+        # collecting it runs no Spark job
+        return literal_rows(
+            spark, ["_r"], [[F.from_json(F.lit(payload[1:-1]), schema)]]
         ).select("_r.*")
-    return one.select(
+    # several rows stay a plan over range: folding a large literal
+    # (q22's connected-components seed) into the optimizer would make
+    # every optimizer pass carry it
+    return spark.range(0, 1, 1, 1).select(
         F.inline(F.from_json(F.lit(payload), T.ArrayType(schema)))
     )
+
+
+# The one-row base relation per session: parsing ``VALUES (0)`` again
+# costs ~9 ms a statement.
+_ONE_ROW: dict = {}
+
+
+def literal_rows(spark: SparkSession, names: list[str], rows: list[list]) -> DataFrame:
+    """Statement rows (each a list of Column expressions, one per name)
+    as ONE local relation: ``VALUES (0), …, (n-1)`` with each column
+    picked from the array of its per-row values. Catalyst evaluates the
+    projection on the driver and folds it into a LocalRelation, so
+    collecting or probing the rows runs no job."""
+    if len(rows) == 1:
+        base = _ONE_ROW.get(spark)
+        if base is None:
+            base = _ONE_ROW[spark] = spark.sql("VALUES (0)")
+        return base.select(*[c.alias(n) for c, n in zip(rows[0], names)])
+    base = spark.sql(
+        "SELECT * FROM VALUES "
+        + ", ".join(f"({i})" for i in range(len(rows)))
+        + " AS t(__i)"
+    )
+    return base.select(*[
+        F.array(*[r[j] for r in rows])[F.col("__i")].alias(name)
+        for j, name in enumerate(names)
+    ])

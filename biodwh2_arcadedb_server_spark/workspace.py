@@ -491,11 +491,20 @@ def build_workspace(
 
 # --- B19: DML as batch recompute ------------------------------------------------
 # The shipped system accepts INSERT / UPDATE / DELETE VERTEX through
-# ArcadeDB SQL (pom.xml:104-108 [B]); per the north star this engine
-# serves them as *batch recompute*: a declarative transform of the
-# label dataset followed by an atomic dataset swap — the Spark-native
-# mutation model (no in-place record edits at 100 TB; rewrites are
-# partition-parallel and the swap is O(1) metadata).
+# ArcadeDB SQL (pom.xml:104-108 [B]). Every statement is size-dispatched
+# on the rows it touches, at most _DRIVER_CAP of them:
+# - INSERT / CREATE EDGE append new files (_append_via_tmp);
+# - UPDATE and DELETE locate their rows with one scan-only job
+#   (_locate: file name + row index of each match) and the DRIVER
+#   rewrites only the files holding them (_patch_files), each published
+#   by an os.replace onto its own name;
+# - above the cap, a declarative transform of the whole label dataset
+#   followed by an atomic dataset swap (_rewrite_dataset), the
+#   partition-parallel Spark mutation.
+
+# Statement scale: the most rows a DML statement moves through the
+# driver lanes above.
+_DRIVER_CAP = 10_000
 
 
 def _rewrite_dataset(df: DataFrame, path: str) -> None:
@@ -507,10 +516,17 @@ def _rewrite_dataset(df: DataFrame, path: str) -> None:
     os.replace(tmp, path)
 
 
+def _is_local(df: DataFrame) -> bool:
+    """True when Catalyst folds ``df`` to a LocalRelation (statement
+    literals projected over ``VALUES``): collecting it runs no job."""
+    plan = df._jdf.queryExecution().optimizedPlan()
+    return plan.getClass().getSimpleName() == "LocalRelation"
+
+
 def _append_via_tmp(
     df: DataFrame,
     path: str,
-    driver_cap: int = 10_000,
+    driver_cap: int = _DRIVER_CAP,
     screen=None,
     validate=None,
 ) -> int:
@@ -541,11 +557,13 @@ def _append_via_tmp(
     # Persisted BEFORE the size probe: partitions the probe computed are
     # reused by the >cap write, so every input row is evaluated once (a
     # nondeterministic upstream cannot diverge between probe and write).
-    df = df.persist(StorageLevel.MEMORY_AND_DISK)
+    # A local input (the dialect's statement rows) is already evaluated
+    # in the plan, and its probe runs no job.
+    persist = not _is_local(df)
+    if persist:
+        df = df.persist(StorageLevel.MEMORY_AND_DISK)
     try:
-        # one job over a one-partition input (the dialect builds its
-        # statement rows as one partition); a wider input takes a few
-        # jobs over growing partition counts
+        # a wider input takes a few jobs over growing partition counts
         rows = df.limit(driver_cap + 1).collect()
         if len(rows) <= driver_cap:
             if screen is not None:
@@ -564,7 +582,92 @@ def _append_via_tmp(
         )
         return read_last_append(path, token)
     finally:
-        df.unpersist()
+        if persist:
+            df.unpersist()
+
+
+def _positioned(df: DataFrame) -> DataFrame:
+    """A dataset read with each row's position: its file's name
+    (``_file``) and its index among that file's rows (``_row``)."""
+    return df.select(
+        "*",
+        F.col("_metadata.file_name").alias("_file"),
+        F.col("_metadata.row_index").alias("_row"),
+    )
+
+
+def _locate(matched: DataFrame, *cols) -> list | None:
+    """Positions (``_file``, ``_row``) and ``cols`` of the rows of
+    ``matched``, a filter or semi-join of a ``_positioned`` read: one
+    scan-only job. None when more than _DRIVER_CAP rows match. A task
+    keeps at most _DRIVER_CAP + 1 of its rows (the low 33 bits of
+    ``monotonically_increasing_id`` count them), so an above-cap match
+    ships a bounded list, not every match, to the driver."""
+    nth = F.monotonically_increasing_id() % F.lit(1 << 33)
+    rows = (
+        matched.select("_file", "_row", *cols, nth.alias("_nth"))
+        .where(F.col("_nth") <= _DRIVER_CAP)
+        .collect()
+    )
+    return rows if len(rows) <= _DRIVER_CAP else None
+
+
+def _data_files(path: str) -> list:
+    """The dataset's data files, one ``os.scandir``: names starting
+    with ``.`` or ``_`` are skipped, as Spark's listing skips them."""
+    with os.scandir(path) as entries:
+        return [e for e in entries if not e.name.startswith((".", "_"))]
+
+
+def _patch_files(
+    path: str, schema: StructType, located: list, assigned: tuple = ()
+) -> None:
+    """Rewrite, on the driver, only the files holding ``located``
+    rows: drop those rows, or with ``assigned`` set those columns to
+    each row's located value. A file is written beside itself under a
+    hidden temp name and published by ``os.replace`` onto its own name,
+    so a transaction shadow's hardlink of it is replaced, never
+    written, and every other file keeps its inode. A file left with no
+    rows is removed; a dataset left with no file gets one empty file."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pa_pq
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    arrow = to_arrow_schema(schema)
+    by_file: dict = {}
+    for r in located:
+        by_file.setdefault(r["_file"], []).append(r)
+    for name, hits in by_file.items():
+        hits.sort(key=lambda r: r["_row"])
+        target = os.path.join(path, name)
+        old = pa_pq.read_table(target)
+        mask = np.zeros(old.num_rows, dtype=bool)
+        mask[[r["_row"] for r in hits]] = True
+        cols = []
+        for f in arrow:
+            col = old.column(f.name).combine_chunks().cast(f.type)
+            if f.name in assigned:
+                new = pa.array([r[f.name] for r in hits], f.type)
+                col = pc.replace_with_mask(col, pa.array(mask), new)
+            cols.append(col)
+        table = pa.Table.from_arrays(cols, schema=arrow)
+        if not assigned:
+            table = table.filter(pa.array(~mask))
+        # Hadoop's local filesystem checks a file against its `.crc`
+        # sibling; a stale one would fail the next Spark read
+        crc = os.path.join(path, f".{name}.crc")
+        if os.path.exists(crc):
+            os.remove(crc)
+        if table.num_rows == 0:
+            os.remove(target)
+            continue
+        tmp = os.path.join(path, f".{name}{TMP_SUFFIX}")
+        pa_pq.write_table(table, tmp)
+        os.replace(tmp, target)
+    if not _data_files(path):
+        _write_empty_dataset(schema, path)
 
 
 def _probe_nodes(
@@ -658,15 +761,17 @@ def update_rows(
     predicate: F.Column,
     assignments: dict[str, F.Column],
 ) -> int:
-    """UPDATE [EDGE] ... SET ... WHERE: rewrite the ``kind`` dataset
-    of ``label`` with the assignments applied to matching rows.
-    Returns rows touched. Identity columns are immutable — node ids
-    DERIVE from (label, natural_key), so rewriting the key without
-    recomputing node_id (and every referencing edge) would silently
-    break the invariant (round-7 review finding); use DELETE +
-    INSERT, or ALTER TYPE for label renames. Edge endpoints and the
-    label are immutable the same way — DELETE EDGE + CREATE EDGE
-    instead."""
+    """UPDATE [EDGE] ... SET ... WHERE: set the assignments on the
+    rows of ``label``'s ``kind`` dataset that match. Returns rows
+    touched. Statement scale patches the files holding the matches
+    (the located values are the assignments evaluated on each matched
+    row); more matches rewrite the dataset. Identity columns are
+    immutable — node ids DERIVE from (label, natural_key), so
+    rewriting the key without recomputing node_id (and every
+    referencing edge) would silently break the invariant (round-7
+    review finding); use DELETE + INSERT, or ALTER TYPE for label
+    renames. Edge endpoints and the label are immutable the same way —
+    DELETE EDGE + CREATE EDGE instead."""
     frozen, type_word, refusal = _UPDATE_RULES[kind]
     bad = sorted(frozen & set(assignments))
     if bad:
@@ -680,12 +785,22 @@ def update_rows(
             f"{unknown} on {type_word} type {label!r} — declare with "
             "CREATE PROPERTY first"
         )
-    # touched-count FOLDED into the rewrite via CollectMetrics
-    # (optimization r15, VERDICT r14 next #3): the former
-    # ``cur.where(predicate).count()`` was a separate scan + job per
-    # UPDATE statement; observing sum(predicate) on the pre-update
-    # rows during the write job computes the identical number (nulls
-    # count 0 either way) in the same pass.
+    # cast the assignment to the column's DECLARED type: the schema is
+    # the contract (manifest-registered views read with it), and an
+    # uncast when/otherwise would silently coerce the whole column —
+    # e.g. SET age = 'x' turning long into string parquet that the
+    # stale manifest schema can no longer scan (round-8 review finding)
+    typed = {
+        c: expr.cast(cur.schema[c].dataType) for c, expr in assignments.items()
+    }
+    located = _locate(
+        _positioned(cur).where(predicate), *[v.alias(c) for c, v in typed.items()]
+    )
+    if located is not None:
+        _patch_files(path, cur.schema, located, tuple(typed))
+        return len(located)
+    # above the cap: the touched count is observed during the rewrite
+    # (nulls count 0, as they match nothing)
     obs = Observation()
     out = cur.observe(
         obs,
@@ -693,18 +808,9 @@ def update_rows(
             F.sum(F.when(predicate, 1).otherwise(0)), F.lit(0)
         ).alias("touched"),
     )
-    for col_name, expr in assignments.items():
-        # cast the assignment to the column's DECLARED type: the
-        # schema is the contract (manifest-registered views read with
-        # it), and an uncast when/otherwise would silently coerce the
-        # whole column — e.g. SET age = 'x' turning long into string
-        # parquet that the stale manifest schema can no longer scan
-        # (round-8 review finding)
+    for col_name, value in typed.items():
         out = out.withColumn(
-            col_name,
-            F.when(
-                predicate, expr.cast(cur.schema[col_name].dataType)
-            ).otherwise(F.col(col_name)),
+            col_name, F.when(predicate, value).otherwise(F.col(col_name))
         )
     _rewrite_dataset(out, path)
     return int(obs.get["touched"])
@@ -721,38 +827,69 @@ def update_nodes(
 def delete_nodes(spark: SparkSession, ws_dir: str, label: str, predicate: F.Column) -> int:
     """DELETE VERTEX ... WHERE: drop matching nodes AND every edge
     touching them (ArcadeDB's DELETE VERTEX cascades to connected
-    edges [B]). The cascade is a left_anti join per edge dataset on a
-    1-column id set — broadcast when small, shuffle on the edge key
-    otherwise. Returns nodes deleted."""
+    edges [B]). Statement scale locates the doomed nodes with their
+    ids, then each touching edge dataset's rows with ``src``/``dst IN
+    (ids)``, one job per dataset, and patches the files holding them.
+    More doomed nodes rewrite the label and anti-join every touching
+    edge dataset on a 1-column id set. Returns nodes deleted."""
     manifest = read_manifest(ws_dir)
     path = dataset_path(ws_dir, "nodes", label)
     cur = read_dataset(spark, ws_dir, "nodes", label, manifest)
-    doomed = cur.where(predicate).select("node_id").localCheckpoint(eager=True)
-    n_del = doomed.count()
-    if n_del == 0:
-        return 0
-    _rewrite_dataset(cur.join(doomed, "node_id", "left_anti"), path)
+    located = _locate(_positioned(cur).where(predicate), "node_id")
+    if located is not None:
+        if not located:
+            return 0
+        n_del = len(located)
+        _patch_files(path, cur.schema, located)
+        ids = [r.node_id for r in located]
+    else:
+        doomed = cur.where(predicate).select("node_id").localCheckpoint(eager=True)
+        n_del = doomed.count()
+        _rewrite_dataset(cur.join(doomed, "node_id", "left_anti"), path)
     manifest["nodes"][label]["count"] -= n_del
-    write_manifest(ws_dir, manifest)
     for e_label, info in manifest["edges"].items():
-        if label not in (info["src_label"], info["dst_label"]):
+        ends = [e for e in ("src", "dst") if info[f"{e}_label"] == label]
+        if not ends:
             continue
         e_path = dataset_path(ws_dir, "edges", e_label)
-        kept = read_dataset(spark, ws_dir, "edges", e_label, manifest)
-        if info["src_label"] == label:
-            kept = kept.join(doomed.withColumnRenamed("node_id", "src"), "src", "left_anti")
-        if info["dst_label"] == label:
-            kept = kept.join(doomed.withColumnRenamed("node_id", "dst"), "dst", "left_anti")
+        e_cur = read_dataset(spark, ws_dir, "edges", e_label, manifest)
+        if located is not None:
+            hit = F.lit(False)
+            for e in ends:
+                hit = hit | F.col(e).isin(ids)
+            info["count"] -= _delete_rows(e_path, e_cur, hit)
+            continue
+        kept = e_cur
+        for e in ends:
+            kept = kept.join(doomed.withColumnRenamed("node_id", e), e, "left_anti")
         # surviving-edge count observed DURING the rewrite
-        # (optimization r15): the former post-swap
-        # ``spark.read.parquet(path).count()`` re-read the dataset a
-        # second time for a number the write job already knows.
         obs = Observation()
-        _rewrite_dataset(
-            kept.observe(obs, F.count(F.lit(1)).alias("n")), e_path
-        )
+        _rewrite_dataset(kept.observe(obs, F.count(F.lit(1)).alias("n")), e_path)
         info["count"] = int(obs.get["n"])
-        write_manifest(ws_dir, manifest)
+    write_manifest(ws_dir, manifest)
+    return n_del
+
+
+def _delete_rows(path: str, cur: DataFrame, predicate: F.Column, match=None) -> int:
+    """Delete the rows of the dataset ``cur`` (read from ``path``) where
+    ``predicate`` is TRUE and, given ``match``, that survive
+    ``match(rows)`` (semi-joins); returns rows deleted. A NULL
+    predicate keeps its row. At most _DRIVER_CAP rows patch their
+    files; more rewrite the dataset without their positions."""
+    matched = _positioned(cur).where(predicate)
+    if match is not None:
+        matched = match(matched)
+    located = _locate(matched)
+    if located is not None:
+        if located:
+            _patch_files(path, cur.schema, located)
+        return len(located)
+    doomed = matched.select("_file", "_row")
+    n_del = doomed.count()
+    _rewrite_dataset(
+        _positioned(cur).join(doomed, ["_file", "_row"], "left_anti").select(*cur.columns),
+        path,
+    )
     return n_del
 
 
@@ -840,54 +977,22 @@ def insert_edges(spark: SparkSession, ws_dir: str, label: str, rows: DataFrame) 
     return n_new
 
 
-def delete_edges_between(
-    spark: SparkSession,
-    ws_dir: str,
-    label: str,
-    src_ids: DataFrame,
-    dst_ids: DataFrame,
-    predicate: F.Column,
+def delete_edges(
+    spark: SparkSession, ws_dir: str, label: str, predicate: F.Column, match=None
 ) -> int:
-    """DELETE EDGE <T> FROM <x> TO <y> [WHERE …]: drop every edge
-    whose src is in ``src_ids`` AND dst is in ``dst_ids`` (1-column
-    node-id frames named src/dst) and that matches ``predicate``.
-    The doomed set is identified by two semi-joins on the 8-byte
-    endpoint columns (broadcast for interactive endpoint sets) and
-    removed with exceptAll — full-row multiset semantics, so
-    duplicate edges between the same endpoints all go, matching
-    ArcadeDB. Returns edges deleted."""
+    """DELETE EDGE ... [FROM … TO …] WHERE: drop the edge rows where
+    ``predicate`` is TRUE (no cascade — edges have no dependents);
+    ``match`` narrows them as in ``_delete_rows``, e.g. semi-joins on
+    endpoint sets. Rows go by position, so duplicate edges between the
+    same endpoints all go, matching ArcadeDB. Returns edges deleted."""
     manifest = read_manifest(ws_dir)
     path = dataset_path(ws_dir, "edges", label)
     cur = read_dataset(spark, ws_dir, "edges", label, manifest)
-    doomed = (
-        cur.join(F.broadcast(src_ids), "src", "left_semi")
-        .join(F.broadcast(dst_ids), "dst", "left_semi")
-        .where(predicate)
-        # the USING-joins move the join keys to the FRONT of the
-        # schema and exceptAll matches POSITIONALLY — restore cur's
-        # column order or nothing ever matches
-        .select(*cur.columns)
-    )
-    n_del = doomed.count()
+    n_del = _delete_rows(path, cur, predicate, match)
     if n_del:
-        _rewrite_dataset(cur.exceptAll(doomed), path)
         manifest["edges"][label]["count"] -= n_del
         write_manifest(ws_dir, manifest)
     return n_del
-
-
-def delete_edges(spark: SparkSession, ws_dir: str, label: str, predicate: F.Column) -> int:
-    """DELETE EDGE ... WHERE: drop matching edge rows (no cascade —
-    edges have no dependents). Returns edges deleted."""
-    manifest = read_manifest(ws_dir)
-    path = dataset_path(ws_dir, "edges", label)
-    cur = read_dataset(spark, ws_dir, "edges", label, manifest)
-    doomed = cur.where(predicate).count()
-    if doomed:
-        _rewrite_dataset(cur.where(~predicate), path)
-        manifest["edges"][label]["count"] -= doomed
-        write_manifest(ws_dir, manifest)
-    return doomed
 
 
 # --- DDL as manifest + dataset operations (B19 companion) ----------------------
@@ -1258,23 +1363,24 @@ def is_stale(src_dir: str, ws_dir: str) -> bool:
 def _label_view_key(path: str, info: dict) -> tuple:
     """Freshness fingerprint for one label's registered view: the
     dataset path, the manifest entry's schema and count, and the
-    dataset directory's mtime. EVERY mutation lane replaces files
-    under the dataset path (staged write + atomic swap), which bumps
-    the directory mtime — the same mtime-parity contract the
-    incremental builder (A15) already relies on — so an unchanged
-    key ⟺ unchanged files AND unchanged declared schema, and the
-    previously registered view (whose plan captured the file listing
-    at creation) is still exact."""
+    ``(name, inode)`` pair of every data file, from one ``os.scandir``
+    (``DirEntry.inode()`` needs no extra ``stat``). Every mutation lane
+    adds a file name, publishes a new inode under an existing name (a
+    patch's ``os.replace``) or swaps in a directory of new files, so an
+    unchanged key ⟺ unchanged files AND unchanged declared schema, and
+    the previously registered view (whose plan captured the file
+    listing at creation) is still exact. A transaction's hardlinked
+    shadow keeps the inode of every file it did not touch, so its
+    commit re-registers only the labels it changed."""
     try:
-        st = os.stat(path)
-        mt = (st.st_mtime_ns, st.st_ino)
+        files = tuple(sorted((e.name, e.inode()) for e in _data_files(path)))
     except OSError:
-        mt = None
+        files = None
     return (
         path,
         json.dumps(info.get("schema"), sort_keys=True) if info.get("schema") else None,
         info.get("count"),
-        mt,
+        files,
     )
 
 
@@ -1299,7 +1405,7 @@ def load_workspace(spark: SparkSession, ws_dir: str) -> dict:
     without widening every label to a common schema.
 
     Optimization r14: per-label registration is MEMOIZED on a
-    freshness key (manifest entry + dataset dir mtime, see
+    freshness key (manifest entry + data files' inodes, see
     `_label_view_key`). An interactive DML sequence refreshes views
     after every statement, but each statement touches one label —
     unchanged labels skip the re-read/re-register py4j chatter

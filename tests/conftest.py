@@ -33,3 +33,23 @@ def sf_small():
 @pytest.fixture(scope="session")
 def sf_medium():
     return SF001
+
+
+@pytest.fixture(scope="module")
+def dml_ws(spark, sf_small, tmp_path_factory):
+    """A workspace for one module's DML tests, registered as the
+    session's views. It is written with a small maxRecordsPerFile, so
+    every label of more than 8 rows spans several files and the DML
+    lanes meet multi-file datasets. The module's tests share it, so
+    each must touch rows (or types) of its own."""
+    from biodwh2_arcadedb_server_spark.workspace import build_workspace, load_workspace
+
+    ws = str(tmp_path_factory.mktemp("dml") / "ws")
+    key = "spark.sql.files.maxRecordsPerFile"
+    spark.conf.set(key, "8")
+    try:
+        build_workspace(spark, sf_small, ws, force=True)
+    finally:
+        spark.conf.unset(key)
+    load_workspace(spark, ws)
+    return ws

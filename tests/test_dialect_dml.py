@@ -12,15 +12,10 @@ from biodwh2_arcadedb_server_spark.arcadesql import ArcadeSQLError, execute
 from biodwh2_arcadedb_server_spark.workspace import build_workspace, load_workspace
 
 
-@pytest.fixture(scope="module")
-def dml_ws(spark, sf_small, tmp_path_factory):
-    # ONE workspace for the module — the mutations below are written
-    # to touch disjoint rows (inserts use keys ≥990, update touches
-    # keys <5, delete removes key 7) so order doesn't matter.
-    ws = str(tmp_path_factory.mktemp("dialect_dml") / "ws")
-    build_workspace(spark, sf_small, ws, force=True)
-    load_workspace(spark, ws)
-    return ws
+# The module shares conftest's multi-file ``dml_ws``: inserts use keys
+# ≥990, update touches keys <5, delete removes key 7, and the lane
+# tests at the end use Nation 4242, Customer 3 and 90 and a Note type
+# of their own, so order doesn't matter.
 
 
 def _nation_count(spark):
@@ -865,30 +860,266 @@ def test_schema_reads_never_see_a_torn_manifest(spark, sf_small, tmp_path_factor
 
 
 def test_statement_scale_writes_run_few_jobs_without_shuffle(spark, dml_ws):
-    """A one-row INSERT and a one-edge CREATE EDGE run on the driver
-    lane: the rows are collected once and their ids probed with a
-    pushed-down scan per dataset — at most 3 and 4 Spark jobs, each a
-    single stage (no shuffle)."""
+    """Statement-scale DML runs on the driver lanes. INSERT and CREATE
+    EDGE collect their literal rows with no job and probe their ids
+    with one pushed-down scan per dataset; UPDATE, DELETE EDGE and
+    DELETE VERTEX locate their rows with one scan-only job per touched
+    dataset and patch the files holding them. Every job is a single
+    stage (no shuffle), and collecting a result runs no job."""
+    from biodwh2_arcadedb_server_spark.workspace import read_manifest
+
     sc = spark.sparkContext
     tracker = sc.statusTracker()
 
-    def run(sql, group):
-        sc.setJobGroup(group, sql)
+    def stages_of(group, fn):
+        sc.setJobGroup(group, group)
         try:
-            res = execute(spark, sql, workspace_dir=dml_ws, allow_writes=True)
+            out = fn()
         finally:
             sc.setLocalProperty("spark.jobGroup.id", None)
         jobs = tracker.getJobIdsForGroup(group)
-        stages = [len(tracker.getJobInfo(j).stageIds) for j in jobs]
-        return res.collect()[0]["count"], stages
+        return out, [len(tracker.getJobInfo(j).stageIds) for j in jobs]
 
-    n, stages = run(
+    def run(sql, group):
+        res, stages = stages_of(group, lambda: execute(
+            spark, sql, workspace_dir=dml_ws, allow_writes=True
+        ))
+        rows, collect_stages = stages_of(group + "-collect", res.collect)
+        assert collect_stages == [], (sql, collect_stages)
+        assert set(stages) <= {1}, (sql, stages)
+        return rows[0]["count"], len(stages)
+
+    assert run(
         "INSERT INTO Nation SET natural_key = 4242, n_name = 'PIN'", "pin-insert"
+    ) == (1, 1)  # the Nation id probe
+    # the Nation and the Region probe
+    assert run("CREATE EDGE IN_REGION FROM 4242 TO 1", "pin-edge") == (1, 2)
+    assert run(
+        "UPDATE Nation SET n_name = 'PUN' WHERE natural_key = 4242", "pin-update"
+    ) == (1, 1)
+    assert run("CREATE EDGE IN_REGION FROM 4242 TO 2", "pin-edge2") == (1, 2)
+    src = _nid(spark, "Nation", 4242)
+    assert run(
+        f"DELETE EDGE IN_REGION WHERE src = {src} AND dst = "
+        f"{_nid(spark, 'Region', 2)}", "pin-delete-edge",
+    ) == (1, 1)
+    touching = sum(
+        "Nation" in (i["src_label"], i["dst_label"])
+        for i in read_manifest(dml_ws)["edges"].values()
     )
-    assert n == 1 and len(stages) <= 3 and set(stages) == {1}, stages
-    n, stages = run("CREATE EDGE IN_REGION FROM 4242 TO 1", "pin-edge")
-    assert n == 1 and len(stages) <= 4 and set(stages) == {1}, stages
-    execute(
-        spark, "DELETE VERTEX Nation WHERE natural_key = 4242",
-        workspace_dir=dml_ws, allow_writes=True,
+    assert run(
+        "DELETE VERTEX Nation WHERE natural_key = 4242", "pin-delete"
+    ) == (1, 1 + touching)
+    assert execute(
+        spark, f"SELECT count(*) AS n FROM e_IN_REGION WHERE src = {src}"
+    ).collect()[0].n == 0
+
+
+def _nid(spark, label, key):
+    from pyspark.sql import functions as F
+
+    from biodwh2_arcadedb_server_spark.workspace import node_id
+
+    return spark.range(1).select(node_id(label, F.lit(key)).alias("i")).collect()[0].i
+
+
+def _inodes(path):
+    import os
+
+    return {
+        e.name: e.inode() for e in os.scandir(path)
+        if not e.name.startswith((".", "_"))
+    }
+
+
+def _file_of(spark, ws_dir, kind, label, where):
+    from biodwh2_arcadedb_server_spark.workspace import read_dataset
+
+    rows = (
+        read_dataset(spark, ws_dir, kind, label)
+        .where(where).select("_metadata.file_name").distinct().collect()
     )
+    return {r.file_name for r in rows}
+
+
+def test_patch_keeps_every_untouched_file(spark, dml_ws):
+    """UPDATE and DELETE VERTEX replace only the files holding their
+    rows: every other file of the multi-file label keeps its inode."""
+    import os
+
+    from biodwh2_arcadedb_server_spark.workspace import dataset_path
+
+    def run(sql):
+        return execute(
+            spark, sql, workspace_dir=dml_ws, allow_writes=True
+        ).collect()[0]["count"]
+
+    path = dataset_path(dml_ws, "nodes", "Customer")
+    before = _inodes(path)
+    assert len(before) > 2
+    held = _file_of(spark, dml_ws, "nodes", "Customer", "natural_key IN (3, 90)")
+    assert run("UPDATE Customer SET c_name = 'X' WHERE natural_key = 3 OR natural_key = 90") == 2
+    after = _inodes(path)
+    assert after.keys() == before.keys()
+    assert {n for n in after if after[n] != before[n]} == held
+    assert [r.c_name for r in execute(
+        spark, "SELECT c_name FROM Customer WHERE natural_key = 3 OR natural_key = 90"
+    ).collect()] == ["X", "X"]
+
+    edges = dataset_path(dml_ws, "edges", "CUST_IN_NATION")
+    e_before = _inodes(edges)
+    e_held = _file_of(
+        spark, dml_ws, "edges", "CUST_IN_NATION",
+        f"src = {_nid(spark, 'Customer', 90)}",
+    )
+    held = _file_of(spark, dml_ws, "nodes", "Customer", "natural_key = 90")
+    before = _inodes(path)
+    assert run("DELETE VERTEX Customer WHERE natural_key = 90") == 1
+    after = _inodes(path)
+    assert {n: i for n, i in after.items() if n not in held} == {
+        n: i for n, i in before.items() if n not in held
+    }
+    e_after = _inodes(edges)
+    assert {n: i for n, i in e_after.items() if n not in e_held} == {
+        n: i for n, i in e_before.items() if n not in e_held
+    }
+    assert all(e_after.get(n) != e_before[n] for n in e_held)
+    # no patch temp file, and no checksum of a replaced file, is left
+    for d, files in ((path, after), (edges, e_after)):
+        for f in os.listdir(d):
+            assert not f.endswith(".tmp"), f
+            if f.endswith(".parquet.crc"):
+                assert f[1:-len(".crc")] in files and f[1:-len(".crc")] not in held | e_held, f
+
+
+@pytest.fixture(scope="module")
+def note_types(spark, dml_ws):
+    """A vertex type Note and a Note→Note edge type NOTE_ON carrying a
+    DOUBLE property ``w``, for the positional-semantics tests."""
+    for sql in (
+        "CREATE VERTEX TYPE Note",
+        "CREATE PROPERTY Note.score DOUBLE",
+        "CREATE EDGE TYPE NOTE_ON FROM Note TO Note",
+        "CREATE PROPERTY NOTE_ON.w DOUBLE",
+        "INSERT INTO Note (natural_key, score) VALUES (1, 0.0), (2, 0.0), (3, 0.0)",
+    ):
+        execute(spark, sql, workspace_dir=dml_ws, allow_writes=True)
+    return dml_ws
+
+
+@pytest.mark.parametrize("lane", ["patch", "rewrite"])
+def test_delete_edge_keeps_rows_whose_predicate_is_null(
+    spark, note_types, monkeypatch, lane
+):
+    """DELETE EDGE … WHERE deletes only the rows where the predicate is
+    TRUE: an edge whose ``w`` is NULL stays, on the patch lane and on
+    the above-cap rewrite."""
+    from biodwh2_arcadedb_server_spark import workspace as ws
+
+    if lane == "rewrite":
+        monkeypatch.setattr(ws, "_DRIVER_CAP", 0)
+
+    def run(sql):
+        return execute(
+            spark, sql, workspace_dir=note_types, allow_writes=True
+        ).collect()[0]["count"]
+
+    run("DELETE EDGE NOTE_ON WHERE src = src")
+    for w in ("10.0", "NULL", "1.0"):
+        assert run(f"CREATE EDGE NOTE_ON FROM 1 TO 2 SET w = {w}") == 1
+    assert run("DELETE EDGE NOTE_ON WHERE w > 5") == 1
+    left = sorted(
+        (r.w is None, r.w) for r in
+        spark.sql("SELECT w FROM e_NOTE_ON").collect()
+    )
+    assert left == [(False, 1.0), (True, None)]
+    assert ws.read_manifest(note_types)["edges"]["NOTE_ON"]["count"] == 2
+    run("DELETE EDGE NOTE_ON WHERE src = src")
+
+
+@pytest.mark.parametrize("lane", ["patch", "rewrite"])
+def test_dml_is_positional(spark, note_types, monkeypatch, lane):
+    """UPDATE EDGE sets every duplicate edge it matches, and DELETE
+    VERTEX removes a self-loop on the vertex once: rows are addressed
+    by position, so identical rows are distinct rows."""
+    from biodwh2_arcadedb_server_spark import workspace as ws
+
+    if lane == "rewrite":
+        monkeypatch.setattr(ws, "_DRIVER_CAP", 0)
+
+    def run(sql):
+        return execute(
+            spark, sql, workspace_dir=note_types, allow_writes=True
+        ).collect()[0]["count"]
+
+    def edges():
+        return sorted(
+            (r.s, r.d, r.w) for r in spark.sql(
+                "SELECT n1.natural_key AS s, n2.natural_key AS d, e.w "
+                "FROM e_NOTE_ON e JOIN n_Note n1 ON e.src = n1.node_id "
+                "JOIN n_Note n2 ON e.dst = n2.node_id"
+            ).collect()
+        )
+
+    run("DELETE EDGE NOTE_ON WHERE src = src")
+    run("INSERT INTO Note SET natural_key = 9, score = 0.0")
+    for sql in (
+        "CREATE EDGE NOTE_ON FROM 1 TO 3 SET w = 0.5",
+        "CREATE EDGE NOTE_ON FROM 1 TO 3 SET w = 0.5",
+        "CREATE EDGE NOTE_ON FROM 9 TO 9 SET w = 0.5",
+        "CREATE EDGE NOTE_ON FROM 9 TO 1 SET w = 0.5",
+        "CREATE EDGE NOTE_ON FROM 2 TO 3 SET w = 0.5",
+    ):
+        assert run(sql) == 1
+    one = _nid(spark, "Note", 1)
+    assert run(f"UPDATE EDGE NOTE_ON SET w = 2.0 WHERE src = {one}") == 2
+    assert edges() == [
+        (1, 3, 2.0), (1, 3, 2.0), (2, 3, 0.5), (9, 1, 0.5), (9, 9, 0.5)
+    ]
+    assert run("DELETE VERTEX Note WHERE natural_key = 9") == 1
+    assert edges() == [(1, 3, 2.0), (1, 3, 2.0), (2, 3, 0.5)]
+    manifest = ws.read_manifest(note_types)
+    assert manifest["edges"]["NOTE_ON"]["count"] == 3
+    assert manifest["nodes"]["Note"]["count"] == spark.sql(
+        "SELECT count(*) AS n FROM n_Note"
+    ).collect()[0].n == 3
+    run("DELETE EDGE NOTE_ON WHERE src = src")
+
+
+def test_delete_reinsert_delete_same_id(spark, note_types):
+    """DELETE VERTEX, re-INSERT of the same natural key, DELETE again:
+    the id comes back and goes again, outside a transaction and inside
+    one (the statements applied to the transaction's shadow copy)."""
+    from biodwh2_arcadedb_server_spark import workspace as ws
+    from biodwh2_arcadedb_server_spark.transactions import TransactionManager
+
+    def count(key):
+        return spark.sql(
+            f"SELECT count(*) AS n FROM n_Note WHERE natural_key = {key}"
+        ).collect()[0].n
+
+    cycle = [
+        "DELETE VERTEX Note WHERE natural_key = 2",
+        "INSERT INTO Note SET natural_key = 2, score = 7.0",
+        "DELETE VERTEX Note WHERE natural_key = 2",
+        "INSERT INTO Note SET natural_key = 2, score = 8.0",
+    ]
+    for sql, want in zip(cycle, (0, 1, 0, 1)):
+        execute(spark, sql, workspace_dir=note_types, allow_writes=True)
+        assert count(2) == want, sql
+    mgr = TransactionManager()
+    sid = mgr.begin(note_types)
+    for sql in cycle[:3]:
+        mgr.stage(sid, sql)
+    untouched = ws._VIEW_REG["nodes"]["Customer"]
+    assert mgr.commit(spark, sid, allow_writes=True) == 3
+    assert count(2) == 0
+    # the commit re-registered only the labels the transaction touched
+    assert ws._VIEW_REG["nodes"]["Customer"] is untouched
+    sid = mgr.begin(note_types)
+    for sql in cycle[1:]:
+        mgr.stage(sid, sql)
+    assert mgr.commit(spark, sid, allow_writes=True) == 3
+    assert [r.score for r in spark.sql(
+        "SELECT score FROM n_Note WHERE natural_key = 2"
+    ).collect()] == [8.0]
